@@ -1,0 +1,8 @@
+"""Tests of the benchmark itself: run with ``python3 -m pytest perfbench/tests``."""
+
+import os
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
