@@ -470,7 +470,7 @@ FROM d a, d b WHERE a.doc_id < b.doc_id
 
 
 def q_g6_cc_step(spark, sf_dir):
-    """One min-label-propagation step (the CC loop body, SURVEY.md §2.G G6)
+    """One min-label-propagation step (the CC label rule, SURVEY.md §2.G G6)
     over a derived edge list: nations chained within each region by key
     order. new_label(n) = min(own, min(neighbor labels))."""
     n = spark.read.parquet(f"{sf_dir}/nation.parquet")

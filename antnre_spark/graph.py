@@ -268,11 +268,10 @@ def connected_components(edges: DataFrame) -> DataFrame:
     set; component = min vertex id in the component (total,
     deterministic label).
 
-    Thin adapter over ``link.connected_components`` — the same hybrid
-    engine the entity-linking stage runs at corpus scale (driver-local
-    union-find below the measured cutover, distributed min-label
-    propagation with automatic large-star/small-star escalation above
-    it), reused rather than re-implemented.
+    Thin adapter over ``link.connected_components`` — the same engine
+    the entity-linking stage runs at corpus scale (driver-local
+    union-find at <=100k edges, else large-star/small-star), reused
+    rather than re-implemented.
     """
     from .link import connected_components as _cc
 

@@ -18,10 +18,10 @@ quadratically explode; AQE skew-join splitting covers residual imbalance.
 Pipeline: mentions -> G1 normalize -> distinct surfaces -> G2 MinHash sigs
 (pandas UDF over antnre_spark/hashing, shared with the oracle) -> G3 band
 explode -> G4 candidate self-join per band -> G5 exact-Jaccard verify ->
-G6 iterative min-label-propagation connected components (driver loop, a
-lineage cut per iteration — localCheckpoint on local mode, reliable
-df.checkpoint when a checkpoint dir is configured; see _cut_lineage) ->
-G7 canonical representative + entity_id.
+G6 connected components (driver-local union-find at <=100k edges, else
+large-star/small-star with a lineage cut per round — localCheckpoint on
+local mode, reliable df.checkpoint when a checkpoint dir is configured;
+see _cut_lineage) -> G7 canonical representative + entity_id.
 """
 
 from __future__ import annotations
@@ -43,14 +43,13 @@ from antnre_spark import hashing
 
 JACCARD_TAU = hashing.TAU_LO
 MAX_BUCKET = 64  # band-bucket size cap (dropped if exceeded; oracle matches)
-CC_MAX_ITERS = 25
 # edge sets at or below this size resolve with a driver-local union-find
-# instead of the distributed label-propagation loop: the alias graph lives
-# on DISTINCT (ent_type, norm) surfaces, which are orders of magnitude
+# instead of distributed large-star/small-star: the alias graph lives on
+# DISTINCT (ent_type, norm) surfaces, which are orders of magnitude
 # smaller than mentions even at 10^12 turns, so the common case is a tiny
-# graph where ~25 driver-scheduled Spark jobs (checkpoints + convergence
-# counts) cost far more than collecting the edges once. Above the
-# threshold the distributed loop takes over unchanged.
+# graph where dozens of driver-scheduled Spark jobs (a checkpoint and a
+# convergence fingerprint per round) cost far more than collecting the
+# edges once.
 LOCAL_CC_MAX_EDGES = 100_000
 # same reasoning one level up: at or below this many DISTINCT surfaces the
 # WHOLE linking stage (signatures -> LSH buckets -> verify -> CC ->
@@ -119,7 +118,7 @@ def _sign_udf(surfaces: pd.Series) -> pd.DataFrame:
 
 def surface_counts(mentions: DataFrame) -> DataFrame:
     """Stage 1 of distinct_surfaces: per-(ent_type, norm, raw surface)
-    mention counts. Split out (r5) because these per-raw counts are the
+    mention counts. Split out because these per-raw counts are the
     MERGEABLE representation of the surface table — sums compose across
     micro-batches, whereas the norm-level top_surface pick does not. The
     streaming incremental linker persists exactly this frame per
@@ -235,7 +234,7 @@ def band_bucket_stats(
     """Pre-flight sizing check for candidate_pairs' (ent_type, band)
     buckets — one row per ent_type with band count, max/mean band size,
     and the fraction of band memberships the max_bucket cap would drop
-    (r4 verdict task 4; same contract as dedup.minhash_bucket_stats /
+    (same contract as dedup.minhash_bucket_stats /
     dedup.cosine_bucket_stats: the cap stays, but its cost is measured
     up front instead of silently eaten mid-job)."""
     signed = surfaces.withColumn("s", _sign_udf(F.col("norm"))).select(
@@ -251,12 +250,12 @@ def band_bucket_stats(
     )
 
 
-def _local_union_find(
-    edge_rows: list, spark, nodes: DataFrame
-) -> DataFrame:
-    """Driver-local exact connected components (min-label roots, path
-    compression). Bit-identical labels to the distributed loop at any
-    diameter: component = min norm. Used below LOCAL_CC_MAX_EDGES."""
+def _local_union_find(edge_rows) -> dict[tuple[str, str], str]:
+    """Driver-local exact connected components over (ent_type, a, b)
+    edges (min-label roots, path compression): maps every edge endpoint
+    (ent_type, norm) to its component = min norm, the same label
+    _star_components computes, at any diameter. Used below
+    LOCAL_CC_MAX_EDGES and by the driver-local linking replay."""
     parent: dict[tuple[str, str], tuple[str, str]] = {}
 
     def find(x):
@@ -276,18 +275,7 @@ def _local_union_find(
             # attach the larger root under the smaller -> root IS min label
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-
-    rows = [(k[0], k[1], find(k)[1]) for k in parent]
-    if not rows:
-        return nodes.select("ent_type", "norm", F.col("norm").alias("component"))
-    labels = spark.createDataFrame(
-        rows, "ent_type string, norm string, component string"
-    )
-    return nodes.join(labels, ["ent_type", "norm"], "left").select(
-        "ent_type",
-        "norm",
-        F.coalesce("component", F.col("norm")).alias("component"),
-    )
+    return {k: find(k)[1] for k in parent}
 
 
 def _star_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
@@ -295,7 +283,7 @@ def _star_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
     MapReduce CC algorithm of Kiveris et al., "Connected Components in
     MapReduce and Beyond" — public algorithm): converges in O(log^2 n)
     rounds INDEPENDENT of component diameter, so a 10^4-node typo chain
-    that exhausts label propagation's hop budget resolves here.
+    resolves as fast as a two-node alias pair.
 
     sym: symmetric (ent_type, src, dst) edge list. Returns
     (ent_type, norm, component) for every node incident to an edge,
@@ -306,10 +294,12 @@ def _star_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
     onto their minimum. Both are one groupBy + one join over the edge
     list (shuffle-bounded, no driver-side graph state); the edge set
     stays within a constant factor of the input throughout (paper's
-    invariant), and each round localCheckpoints to cut lineage.
+    invariant), and each round cuts lineage (_cut_lineage).
     Convergence = (count, hash-sum) fingerprint of the canonical edge set
     unchanged — at the fixpoint the edges ARE stars centered at component
-    minima, which is the label assignment."""
+    minima, which is the label assignment. Raises RuntimeError if
+    ``max_rounds`` pass without a fixpoint: labels read off a
+    non-fixpoint edge set may split components."""
     edges = (
         sym.filter(F.col("src") != F.col("dst"))
         .select(
@@ -379,13 +369,11 @@ def _star_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
         fp = new_fp
     else:
         # O(log^2 n) convergence makes this unreachable for any graph that
-        # fits this planet; if it fires, labels below may split components
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "_star_components did not reach a fixpoint in %d rounds — "
-            "emitting labels from the last round's edges",
-            max_rounds,
+        # fits this planet; labels from a non-fixpoint would split
+        # components, so fail instead of shipping them
+        raise RuntimeError(
+            f"connected components did not reach a fixpoint within "
+            f"max_rounds={max_rounds} large-star/small-star rounds"
         )
     # fixpoint edges are (component_min, member): read labels off directly
     members = edges.select(
@@ -405,7 +393,7 @@ def _star_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
 # checkpoint_dir=...) this process; swept by sweep_checkpoints() once the
 # caller has materialized every output that may lazily read them. Bounds
 # the otherwise-unbounded checkpoint-store growth on long-running
-# drivers (r4 ADVICE).
+# drivers.
 _INSTALLED_CHECKPOINT_DIRS: list[str] = []
 
 
@@ -448,40 +436,27 @@ def sweep_checkpoints(spark=None) -> int:
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
-    max_iters: int = CC_MAX_ITERS,
     local_threshold: int = LOCAL_CC_MAX_EDGES,
-    algorithm: str = "auto",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """G6: min-label propagation until fixpoint.
+    """G6: connected components, driver-local union-find at <=100k edges,
+    else large-star/small-star.
 
     nodes: (ent_type, norm); edges: (ent_type, norm_a, norm_b).
     Returns (ent_type, norm, component) where component = min norm in the
     connected component (a total, deterministic label).
 
-    Hybrid strategy: the edge set is counted once; at or below
-    ``local_threshold`` edges the components resolve with an exact
-    driver-local union-find (one collect — the alias graph over DISTINCT
-    surfaces is tiny relative to the corpus, and the distributed loop's
-    ~25 driver-scheduled jobs are pure fixed cost). Above it, the
-    distributed loop (SURVEY.md §3.3): each iteration is one
-    shuffle-bounded join+agg; localCheckpoint truncates the lineage so
-    iteration i does not replay iterations 0..i-1; convergence is counted
-    with a single count() action on changed labels. Alias clusters have
-    tiny diameters, so this converges in a handful of iterations.
-
-    ``algorithm``: 'auto' (default) runs label propagation and, if a
-    component is wider than the hop budget (labels still changing at
-    max_iters), AUTOMATICALLY re-resolves with large-star/small-star
-    (_star_components) — diameter-independent, so wide typo chains are
-    never silently split; 'star' forces large-star/small-star from the
-    start (adversarial graphs, tests); 'label_prop' keeps the r2
-    warn-only behavior for benchmarking the raw loop.
+    The edge set is counted once; at or below ``local_threshold`` edges
+    the components resolve with an exact driver-local union-find (one
+    collect — the alias graph over DISTINCT surfaces is tiny relative to
+    the corpus, and the distributed rounds' driver-scheduled jobs are
+    pure fixed cost). Above it, _star_components runs: shuffle-bounded
+    rounds, diameter-independent, so wide typo chains are never split.
 
     ``checkpoint_dir``: when set, it is installed as the context's
     RELIABLE checkpoint dir (HDFS/S3/DBFS path on a real cluster) and
-    every lineage cut in the loop uses ``df.checkpoint()`` instead of
-    ``localCheckpoint`` — executor loss mid-loop then recovers from the
+    every lineage cut uses ``df.checkpoint()`` instead of
+    ``localCheckpoint`` — executor loss mid-run then recovers from the
     fault-tolerant store instead of killing the job (see _cut_lineage).
     Leaving it None keeps local-mode behavior (and respects a dir the
     caller already installed via ``sc.setCheckpointDir``).
@@ -506,97 +481,20 @@ def connected_components(
     )
     sym = _cut_lineage(sym)
 
-    if local_threshold > 0:
-        # sym is checkpointed, so this count does not recompute the LSH
-        # stage; /2 because sym holds both directions
-        n_edges = sym.count() // 2
-        if n_edges <= local_threshold:
-            edge_rows = [
-                (r["ent_type"], r["src"], r["dst"])
-                for r in sym.filter(F.col("src") < F.col("dst")).collect()
-            ]
-            return _local_union_find(edge_rows, edges.sparkSession, nodes)
-
-    # iterate ONLY over nodes that touch an edge — isolated nodes (the vast
-    # majority) keep their own label and rejoin after the loop. Shrinks the
-    # per-iteration working set from |surfaces| to |edge endpoints|.
-    edge_nodes = (
-        sym.select("ent_type", F.col("src").alias("norm")).distinct()
-    )
-    if algorithm == "star":
+    # sym is checkpointed, so this count does not recompute the LSH
+    # stage; /2 because sym holds both directions
+    if sym.count() // 2 <= local_threshold:
+        comp = _local_union_find(
+            (r["ent_type"], r["src"], r["dst"])
+            for r in sym.filter(F.col("src") < F.col("dst")).collect()
+        )
+        labels = edges.sparkSession.createDataFrame(
+            [(et, nm, c) for (et, nm), c in comp.items()],
+            "ent_type string, norm string, component string",
+        )
+    else:
         labels = _star_components(sym)
-        return nodes.join(labels, ["ent_type", "norm"], "left").select(
-            "ent_type",
-            "norm",
-            F.coalesce("component", F.col("norm")).alias("component"),
-        )
-    labels = edge_nodes.select("ent_type", "norm", F.col("norm").alias("component"))
-    labels = _cut_lineage(labels)
-    if labels.count() == 0:
-        return nodes.select("ent_type", "norm", F.col("norm").alias("component"))
-
-    def step(lbl: DataFrame) -> DataFrame:
-        neighbor_min = (
-            sym.join(
-                lbl.select(
-                    "ent_type",
-                    F.col("norm").alias("src"),
-                    F.col("component").alias("src_comp"),
-                ),
-                ["ent_type", "src"],
-            )
-            .groupBy("ent_type", F.col("dst").alias("norm"))
-            .agg(F.min("src_comp").alias("nbr_comp"))
-        )
-        return lbl.join(neighbor_min, ["ent_type", "norm"], "left").select(
-            "ent_type",
-            "norm",
-            F.least(
-                F.col("component"), F.coalesce("nbr_comp", F.col("component"))
-            ).alias("component"),
-        )
-
-    # two propagation steps per materialization+convergence check: alias
-    # clusters have tiny diameters, so checking every step doubles the
-    # count of driver actions for no information. Each round therefore
-    # advances the frontier by 2 hops, then checkpoints (lineage cut) and
-    # counts changes once.
-    changed = -1
-    for _ in range(max_iters // 2 + 1):
-        prev = labels
-        labels = _cut_lineage(step(step(labels)))
-        changed = (
-            labels.join(prev.withColumnRenamed("component", "prev_comp"),
-                        ["ent_type", "norm"])
-            .filter(F.col("component") != F.col("prev_comp"))
-            .count()
-        )
-        if changed == 0:
-            break
-    if changed != 0:
-        # a component wider than the hop budget: under 'auto' re-resolve
-        # with the diameter-independent large-star/small-star algorithm
-        # instead of shipping split components (the r2 warn-only gap)
-        import logging
-
-        if algorithm == "auto":
-            logging.getLogger(__name__).warning(
-                "connected_components: %d labels still changing after %d "
-                "propagation steps — re-resolving with large-star/"
-                "small-star (diameter-independent)",
-                changed,
-                2 * (max_iters // 2 + 1),
-            )
-            labels = _star_components(sym)
-        else:
-            logging.getLogger(__name__).warning(
-                "connected_components did not converge after %d propagation "
-                "steps (%d labels still changing) — components wider than "
-                "the hop budget are split; use algorithm='auto'/'star'",
-                2 * (max_iters // 2 + 1),
-                changed,
-            )
-    # isolated nodes (no edges) never entered the loop: own-label rejoin
+    # isolated nodes (no edges) carry no label: each is its own component
     return nodes.join(labels, ["ent_type", "norm"], "left").select(
         "ent_type",
         "norm",
@@ -666,7 +564,7 @@ def _link_surfaces_local(rows: list, tau: float, max_bucket: int) -> list[tuple]
     for (et, nm, _n, _t), sig in zip(ordered, sigs):
         for band in hashing.band_keys(sig):
             buckets.setdefault((et, band), []).append(nm)
-    edges: dict[str, set] = {}
+    edges: set[tuple[str, str, str]] = set()
     for (et, _band), members in buckets.items():
         if len(members) > max_bucket:
             continue  # size-capped bucket, dropped (candidate_pairs rule)
@@ -674,35 +572,17 @@ def _link_surfaces_local(rows: list, tau: float, max_bucket: int) -> list[tuple]
         for i in range(len(ms)):
             for k in range(i + 1, len(ms)):
                 a, b = ms[i], ms[k]
-                if (a, b) in edges.get(et, set()):
+                if (et, a, b) in edges:
                     continue
                 j = hashing.jaccard(grams[(et, a)], grams[(et, b)])
                 if j >= tau and (
                     j >= hashing.TAU_HI
                     or hashing.levenshtein(a, b) <= hashing.LEV_MAX
                 ):
-                    edges.setdefault(et, set()).add((a, b))
-    # min-label union-find per ent_type
-    comp: dict[tuple, str] = {}
-    by_type: dict[str, list] = {}
-    for et, nm, n, t in rows:
-        by_type.setdefault(et, []).append((nm, n, t))
-    for et, members in by_type.items():
-        parent = {nm: nm for nm, _n, _t in members}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in sorted(edges.get(et, set())):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        for nm, _n, _t in members:
-            comp[(et, nm)] = find(nm)
+                    edges.add((et, a, b))
+    # surfaces with no verified edge are their own component
+    comp = {(et, nm): nm for et, nm, _n, _t in rows}
+    comp.update(_local_union_find(edges))
     # canonical per component: (-n_mentions, top_surface, norm) min
     best: dict[tuple, tuple] = {}
     for et, nm, n, t in rows:
@@ -767,7 +647,7 @@ def link_surfaces(
     # aggregation again from scratch
     surfaces.cache()
     if local_threshold > 0:
-        # ONE probe job replaces the r2 count()+collect() pair: limit(T+1)
+        # ONE probe job instead of a count()+collect() pair: limit(T+1)
         # returns the COMPLETE surface set whenever it doesn't bind
         # (len <= T), and exactly T+1 rows — the over-threshold signal —
         # when it does. Collect order is arbitrary under limit, which is

@@ -76,6 +76,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import re
 import sys
 from pathlib import Path
 
@@ -96,6 +97,17 @@ from antnre_spark.kgquery import (  # noqa: E402
     predicate_stats_from_manifest,
 )
 from antnre_spark.session import get_spark  # noqa: E402
+
+
+def _order_col(entry: str) -> F.Column:
+    """One ``order_by`` entry: an expression with an optional trailing
+    ASC/DESC (case-insensitive). ``F.expr("n DESC")`` alone would parse
+    as ``n AS DESC`` and sort ascending."""
+    m = re.fullmatch(r"(.*\S)\s+(asc|desc)", entry.strip(), re.IGNORECASE)
+    if m is None:
+        return F.expr(entry)
+    col = F.expr(m.group(1))
+    return col.desc() if m.group(2).lower() == "desc" else col.asc()
 
 
 def _decode_pred(term):
@@ -327,9 +339,7 @@ def main() -> None:
         # TakeOrderedAndProject (top-k per partition + driver merge),
         # never a full sort. Ties are broken arbitrarily — include a
         # tie-breaker column for fully deterministic top-k.
-        result = result.orderBy(
-            *[F.expr(e) for e in spec["order_by"]]
-        )
+        result = result.orderBy(*[_order_col(e) for e in spec["order_by"]])
     if spec.get("offset") is not None:
         # DataFrame.offset (Spark 3.4+): skip N rows after the sort —
         # with order_by+limit this is the paged top-k idiom

@@ -1116,3 +1116,31 @@ class TestClosureCapBoundary:
         monkeypatch.setattr(kq, "MAX_CLOSURE_BFS_ROUNDS", 3)
         with pytest.raises(RuntimeError, match="no fixpoint"):
             kq.closure_pairs(t, "next", 1, sources=seed).count()
+
+
+class TestOrderByDirection:
+    def test_trailing_asc_desc_honoured(self, spark):
+        """jobs/kg_query.py order_by entries: a trailing ASC/DESC (any
+        case) sets the direction; a bare expression sorts ascending."""
+        import sys
+        from pathlib import Path
+
+        sys.path.insert(0, str(Path("jobs").resolve().parent))
+        from jobs.kg_query import _order_col
+
+        df = spark.createDataFrame(
+            [(1, "b"), (3, "a"), (2, "c"), (3, "b")], "n int, org string"
+        )
+
+        def order(*entries):
+            return [
+                (r["n"], r["org"])
+                for r in df.orderBy(*[_order_col(e) for e in entries]).collect()
+            ]
+
+        assert order("n DESC", "org") == [(3, "a"), (3, "b"), (2, "c"), (1, "b")]
+        assert order("n desc", "org  DeSc") == [
+            (3, "b"), (3, "a"), (2, "c"), (1, "b")
+        ]
+        assert order("n + 0 ASC", "org") == [(1, "b"), (2, "c"), (3, "a"), (3, "b")]
+        assert order("-n", "org") == [(3, "a"), (3, "b"), (2, "c"), (1, "b")]

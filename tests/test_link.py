@@ -17,13 +17,13 @@ def fixture_entities(spark, pipeline_out):
 
 class TestConnectedComponents:
     """Each case runs BOTH CC strategies: threshold large -> driver-local
-    union-find; threshold 0 -> the distributed propagation loop. Labels
+    union-find; threshold 0 -> distributed large-star/small-star. Labels
     must be identical."""
 
     @pytest.mark.parametrize("threshold", [link.LOCAL_CC_MAX_EDGES, 0])
     def test_chain_collapses_to_min_label(self, spark, threshold):
-        """A length-6 chain needs several propagation iterations — the loop
-        must run to fixpoint, not a fixed small count."""
+        """A length-6 chain needs several star rounds — the loop must run
+        to fixpoint, not a fixed small count."""
         names = ["a", "b", "c", "d", "e", "f"]
         edges = spark.createDataFrame(
             [("T", names[i], names[i + 1]) for i in range(5)],
@@ -74,14 +74,13 @@ class TestConnectedComponents:
 
 
 class TestStarComponents:
-    """Large-star/small-star (diameter-independent CC): forced via
-    algorithm='star', and as the automatic fallback when label propagation
-    exhausts its hop budget (the r2 warn-only gap)."""
+    """Large-star/small-star (diameter-independent CC), the distributed
+    path above the local threshold."""
 
     def test_wide_chain_converges_forced(self, spark):
-        """A planted 10^4-node chain: label propagation would need ~10^4
-        hops (far past CC_MAX_ITERS); star converges in O(log^2 n) rounds
-        and must label every node with the chain minimum."""
+        """A planted 10^4-node chain: min-label propagation would need
+        ~10^4 hops; star converges in O(log^2 n) rounds and must label
+        every node with the chain minimum."""
         n = 10_000
         names = [f"n{i:05d}" for i in range(n)]
         edges = spark.createDataFrame(
@@ -92,31 +91,22 @@ class TestStarComponents:
             [("T", x) for x in names], ["ent_type", "norm"]
         )
         got = link.connected_components(
-            edges, nodes, local_threshold=0, algorithm="star"
+            edges, nodes, local_threshold=0
         ).collect()
         assert len(got) == n
         assert {r["component"] for r in got} == {names[0]}
 
-    def test_auto_falls_back_when_hop_budget_exhausted(self, spark):
-        """algorithm='auto' with a tiny hop budget on a 64-node chain:
-        label propagation cannot finish, so the star fallback must run
-        and still produce the exact single component."""
-        n = 64
-        names = [f"c{i:03d}" for i in range(n)]
-        edges = spark.createDataFrame(
-            [("T", names[i], names[i + 1]) for i in range(n - 1)],
-            ["ent_type", "norm_a", "norm_b"],
+    def test_round_budget_exhausted_raises(self, spark):
+        """An 8-node chain cannot reach a fixpoint in one round: star
+        must fail loudly rather than return labels that split it."""
+        names = [f"n{i}" for i in range(8)]
+        sym = spark.createDataFrame(
+            [("T", names[i], names[i + 1]) for i in range(7)]
+            + [("T", names[i + 1], names[i]) for i in range(7)],
+            ["ent_type", "src", "dst"],
         )
-        nodes = spark.createDataFrame(
-            [("T", x) for x in names], ["ent_type", "norm"]
-        )
-        got = {
-            r["norm"]: r["component"]
-            for r in link.connected_components(
-                edges, nodes, max_iters=4, local_threshold=0, algorithm="auto"
-            ).collect()
-        }
-        assert all(got[x] == names[0] for x in names)
+        with pytest.raises(RuntimeError, match="max_rounds=1"):
+            link._star_components(sym, max_rounds=1)
 
     def test_star_matches_local_union_find_on_random_graph(self, spark):
         """Star labels == exact driver-local union-find labels on a seeded
@@ -141,7 +131,7 @@ class TestStarComponents:
         star = {
             (r["ent_type"], r["norm"]): r["component"]
             for r in link.connected_components(
-                edges, nodes, local_threshold=0, algorithm="star"
+                edges, nodes, local_threshold=0
             ).collect()
         }
         exact = {
@@ -247,6 +237,30 @@ class TestHybridLinking:
         b = {tuple(r) for r in dist_sm.collect()}
         assert a == b and a
 
+    def test_star_matches_union_find_on_fixture_alias_graph(
+        self, spark, pipeline_out
+    ):
+        """Distributed star CC over the fixture's REAL alias graph (LSH
+        candidate pairs over its distinct surfaces) labels every surface
+        exactly as the driver-local union-find does."""
+        cfg = pipeline_out["cfg"]
+        surfaces = link.distinct_surfaces(cfg.table("mentions").load(spark))
+        edges = link.candidate_pairs(surfaces)
+        assert edges.count() > 0
+        nodes = surfaces.select("ent_type", "norm")
+
+        def labels(threshold):
+            return {
+                (r["ent_type"], r["norm"]): r["component"]
+                for r in link.connected_components(
+                    edges, nodes, local_threshold=threshold
+                ).collect()
+            }
+
+        star, exact = labels(0), labels(10**9)
+        assert star == exact
+        assert any(norm != c for (_t, norm), c in exact.items())
+
     def test_link_entities_releases_caches(self, spark, pipeline_out):
         """Cache-ownership contract (link_entities docstring): surfaces is
         unpersisted inside; after the caller consumes the outputs and
@@ -268,16 +282,19 @@ class TestHybridLinking:
 
 
 class TestReliableCheckpoint:
-    """r3 verdict task 2: with a reliable checkpoint dir configured, the
-    CC loops must survive total block loss (the executor-failure model:
+    """With a reliable checkpoint dir configured, distributed CC must
+    survive total block loss (the executor-failure model:
     localCheckpoint blocks live only in executor memory, so unpersisting
     every persistent RDD and re-running the action simulates losing the
     executors that held them — reliable checkpoints recompute from disk,
     local ones cannot)."""
 
-    @pytest.mark.parametrize("algorithm", ["auto", "star"])
+    # auto: the default local_threshold routes this small graph to the
+    # driver-local union-find; star: threshold 0 forces the distributed
+    # large-star/small-star rounds. Both must honour the reliable dir.
+    @pytest.mark.parametrize("route", ["auto", "star"])
     def test_cc_survives_block_loss_with_reliable_dir(
-        self, spark, tmp_path, algorithm
+        self, spark, tmp_path, route
     ):
         sc = spark.sparkContext
         names = [f"n{i:02d}" for i in range(8)]
@@ -288,13 +305,13 @@ class TestReliableCheckpoint:
         nodes = spark.createDataFrame(
             [("T", n) for n in names], ["ent_type", "norm"]
         )
-        ckdir = str(tmp_path / f"ck_{algorithm}")
+        ckdir = str(tmp_path / f"ck_{route}")
+        threshold = link.LOCAL_CC_MAX_EDGES if route == "auto" else 0
         try:
             labels = link.connected_components(
                 edges,
                 nodes,
-                local_threshold=0,
-                algorithm=algorithm,
+                local_threshold=threshold,
                 checkpoint_dir=ckdir,
             )
             got = {r["norm"]: r["component"] for r in labels.collect()}
@@ -321,7 +338,7 @@ class TestReliableCheckpoint:
             assert sc.getCheckpointDir() is None
 
     def test_sweep_checkpoints_empties_installed_dirs(self, spark, tmp_path):
-        """r4 ADVICE: the checkpoint store must not grow unboundedly —
+        """The checkpoint store must not grow unboundedly —
         sweep_checkpoints() removes the files of every dir installed via
         connected_components(checkpoint_dir=...) and un-installs the
         session checkpoint dir, once outputs are materialized."""
