@@ -2359,35 +2359,36 @@ ORDER BY cosine DESC, vec_id ASC LIMIT 10
 # ---- multimodal ---------------------------------------------------------
 
 def q_ss_ivf_topk_batch(spark, sf_dir):
-    """Bulk ANN (r3 verdict task 3): kNN for EVERY row of a query table —
-    queries assigned to their nprobe IVF cells JVM-side, one equi-join on
-    cell against the cell-partitioned index, per-query window top-k
-    (simsearch.ivf_topk_batch). The exact brute-force per-query top-k —
+    """Bulk ANN: kNN for EVERY row of a query table — queries assigned to
+    their nprobe IVF cells, each probed cell's index rows scored in one
+    numpy kernel, per-query window top-k (simsearch.ivf_topk_batch). The
+    exact brute-force per-query top-k (simsearch.cosine_topk_batch) —
     formerly the separate ss_topk_cosine demo — is merged in as the
     verification leg: ``in_exact`` marks whether each ANN hit is in the
-    true top-k, so recall is visible per row. r7 additionally merges the
-    former ss_ivf_topk row (single-query IVF, k=10) as the 'single'
-    section — same precedent, freeing a 50-cap slot for gr_sssp. FULLY
-    oracle-checked: DuckDB replays the identical centroid literals,
-    cell assignment, per-query probe ranking, and all window top-ks."""
+    true top-k, so recall is visible per row. The former ss_ivf_topk row
+    (single-query IVF, k=10) rides along as the 'single' section — same
+    precedent, freeing a 50-cap slot for gr_sssp. FULLY oracle-checked:
+    DuckDB replays the identical centroid literals, cell assignment,
+    per-query probe ranking, and all window top-ks."""
     import sys
 
     sys.path.insert(0, REPO)
     from antnre_spark.dedup import _ensure_parallelism
     from antnre_spark.simsearch import (
+        cosine_topk_batch,
         ivf_index,
+        ivf_topk,
         ivf_topk_batch,
         kmeans_centroids,
     )
 
-    # r8 (guide §2.6): embeddings.parquet is ONE small file -> a 1-2
-    # partition scan, which serialized the whole query (index build, the
-    # cell join's stream side AND the 10M-pair exact-verify leg) onto 1-2
-    # of 32 cores at sf1.0. _ensure_parallelism fans out to
-    # defaultParallelism; a no-op at 100 TB where the scan already has
-    # thousands of splits. Round-robin repartition does not change any
-    # value: kmeans sampling is a global TakeOrdered by (md5, vec_id) and
-    # every downstream op is keyed/windowed.
+    # embeddings.parquet is ONE small file -> a 1-2 partition scan, which
+    # serialized the whole query (index build, the scoring kernels of
+    # both legs) onto 1-2 of 32 cores at sf1.0. _ensure_parallelism fans
+    # out to defaultParallelism; a no-op at 100 TB where the scan already
+    # has thousands of splits. Round-robin repartition does not change
+    # any value: kmeans sampling is a global TakeOrdered by (md5, vec_id)
+    # and every downstream op is keyed/windowed.
     # cast("array<double>") == the old transform(.., cast) element-wise
     # (identical float->double widening) but is a plain codegen Cast, not
     # an interpreted higher-order function re-evaluated per reference
@@ -2403,33 +2404,12 @@ def q_ss_ivf_topk_batch(spark, sf_dir):
     )
     approx = ivf_topk_batch(idx, queries, cents, k=5, nprobe=2)
 
-    # exact-verify leg: brute-force per-query top-k membership (the
-    # ss_topk_cosine scan, batched) — the exact baseline the ANN path is
-    # judged against, bounded by |queries| x |corpus|, and only ever run
-    # at verification scale.
-    # r8 (guide §4.2/§8): this leg WAS a |queries| x |corpus|
-    # crossJoin (10M pairs at sf1.0) paying an interpreted fold plus a
-    # joined-row copy of two 64-dim arrays per pair — 60+s of the 97s
-    # wall. cosine_scores_pruned computes the identical cosines in a
-    # numpy kernel (bit-exact fold order) and ships back only a provable
-    # superset of the rounded top-5 per query; F.round + the window stay
-    # in the JVM so rounding/ranking semantics are unchanged. Still the
-    # exact brute-force baseline: every (query, corpus-row) pair is
-    # scored, only the pair *materialization* is gone.
-    from antnre_spark.simsearch import cosine_scores_pruned
-
-    qrows = [
-        (int(r["query_id"]), list(r["embedding"])) for r in queries.collect()
-    ]
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    exact = (
-        cosine_scores_pruned(e, qrows, k=5)
-        .select("query_id", "vec_id", F.round(F.col("cosine"), 6).alias("cosine"))
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= 5)
-        .select("query_id", "vec_id", F.lit(True).alias("_hit"))
+    # exact-verify leg: brute-force per-query top-k membership — the
+    # exact baseline the ANN path is judged against. Every (query,
+    # corpus-row) pair is scored, but in the numpy kernel: no pair is
+    # materialized (a crossJoin here was 10M pairs and 60+ s at sf1.0).
+    exact = cosine_topk_batch(e, queries, k=5).select(
+        "query_id", "vec_id", F.lit(True).alias("_hit")
     )
     batch = approx.join(exact, ["query_id", "vec_id"], "left").select(
         F.lit("batch").alias("method"),
@@ -2439,14 +2419,10 @@ def q_ss_ivf_topk_batch(spark, sf_dir):
         "rank",
         F.coalesce("_hit", F.lit(False)).alias("in_exact"),
     )
-    # r7 merge: the former ss_ivf_topk row — SINGLE-query IVF top-k
-    # (driver-side probe-set computation, k=10) — rides along as the
-    # 'single' section, freeing its 50-cap slot for gr_sssp. Identical
-    # simsearch.ivf_topk call and oracle body as before.
-    from antnre_spark.simsearch import ivf_topk
-
-    # rank recomputed over the single section's own ordering; in_exact
-    # is NOT EVALUATED for this section (constant false both engines —
+    # the 'single' section: the former ss_ivf_topk row, SINGLE-query IVF
+    # top-k (driver-side probe-set computation, k=10). Its rank is
+    # recomputed over the section's own ordering; in_exact is NOT
+    # EVALUATED for this section (constant false both engines —
     # engine NULL canonicalization differs NULL-vs-NaN, so sentinels
     # must be real values)
     ws = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())

@@ -37,8 +37,9 @@ Modules map to SURVEY.md §2 operator families:
                keeper selection
   simsearch    brute-force + LSH-bucketed + IVF cosine top-k over
                embeddings (md5-hash quantizer sample + distributed
-               Lloyd refresh) + bulk batch kNN (ivf_topk_batch /
-               bucketed_topk_batch)
+               Lloyd refresh) + bulk batch kNN for a bounded query
+               table (cosine_topk_batch / ivf_topk_batch /
+               bucketed_topk_batch, one shared numpy scoring kernel)
   streaming    foreachBatch extraction (idempotent per-batch overwrite),
                watermarked session windows, applyInPandasWithState
                stateful document assembly; r5: incremental linking +

@@ -1,21 +1,37 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<double>; the batch
+paths and ivf_index widen other numeric element types with a cast).
 
-- brute-force cosine top-k: exact baseline, one pass, JVM-side arithmetic
-  (zip_with + aggregate), TakeOrderedAndProject for the top-k — no global
-  sort materialization. Scales as a full scan: right answer for one-off
-  queries and for verifying the approximate path.
+- brute-force cosine top-k: exact baseline. One query (cosine_topk) is
+  JVM-side arithmetic (zip_with + aggregate) with TakeOrderedAndProject
+  for the top-k; a query table (cosine_topk_batch) scores every row in
+  the shared numpy kernel. Scales as a full scan: right answer for
+  one-off queries and for verifying the approximate paths.
 - LSH-bucketed top-k: random-hyperplane buckets (shared with
   dedup.cosine_dup_pairs); probes only the query's bucket (optionally
   multi-probe neighbors at Hamming distance 1) — the 100 TB path where a
   full scan per query is not affordable.
+- IVF top-k: k-means cells; probes the nprobe cells nearest the query.
+
+The three batch functions (cosine_topk_batch, bucketed_topk_batch,
+ivf_topk_batch) share one implementation, _batch_topk: a bounded query
+collect, one mapInPandas scoring kernel, one JVM round + window rank.
 """
 
 from __future__ import annotations
+
+import json
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from antnre_spark.hashing import plane_weights
+
+# Largest query table the batch top-k functions accept. The queries are
+# collected to the driver and shipped to every scoring task, so the table
+# must stay bounded; 20x the ~500-query table of the sf1.0
+# ss_ivf_topk_batch demo.
+MAX_BATCH_QUERIES = 10_000
 
 
 def _dot_with_lit(vec: Column, query: list[float]) -> Column:
@@ -35,7 +51,7 @@ def _query_norm(vec: Column) -> Column:
     """Query-side norm with the zero guard the single-query paths apply
     driver-side (``math.sqrt(...) or 1.0``): an all-zero query vector
     yields cosine 0.0 rows, not NaNs that Spark sorts above every real
-    neighbor (r4 self-review)."""
+    neighbor."""
     n = _norm(vec)
     return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
 
@@ -60,111 +76,24 @@ def cosine_topk(
     )
 
 
-def cosine_scores_pruned(
+def cosine_topk_batch(
     df: DataFrame,
-    query_rows: list[tuple[int, list[float]]],
-    k: int,
+    queries: DataFrame,
+    k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    margin: float = 1.1e-6,
 ) -> DataFrame:
-    """Map-side pruned EXACT bulk cosine scoring (r8, guide §4.2/§8):
-    for every driver-side query vector, each input batch emits only the
-    rows whose UNROUNDED cosine is within ``margin`` of the batch's k-th
-    largest — a provable superset of any global ``round(cosine, 6)``
-    top-k. This replaces a |queries| x |corpus| cross join whose pairs
-    each paid an interpreted fold and a joined-row copy; the kernel is
-    one numpy pass per batch and ships only candidate rows back.
-
-    Correctness: cosines are computed in the exact fold order of the
-    Spark expression ``dot / (norm * query_norm)`` (_fold_dots — bit-
-    identical doubles), and the FINAL rounding + ranking stay in the
-    JVM (caller applies F.round + a window), so rounding semantics are
-    Spark's own. Superset proof: round6 moves a value by at most
-    ~5.1e-7, so c >= c' + 1.1e-6 forces round6(c) > round6(c'); a row
-    dropped by the batch threshold therefore has >= k rows with a
-    strictly larger rounded cosine in its own batch and can never enter
-    the global rounded top-k. Non-finite cosines (zero-norm corpus
-    rows -> NaN, which Spark sorts ABOVE every double in a descending
-    window) are kept unconditionally.
-
-    Preconditions (matching every call site and the data asserts): the
-    corpus holds >= k rows with finite cosines per query, and degenerate
-    rows/queries (length mismatch, null elements) do not occur — the
-    legacy cross join gave those NULL cosines, which only rank when
-    fewer than k finite candidates exist. Queries are driver-side
-    (query_id, vector) tuples and must be bounded (the same assumption
-    the broadcast join made); query norms use the same sqrt-of-fold.
-    Output: (query_id long, <id_col> as in df, cosine double UNROUNDED).
-    """
-    import math
-
-    import numpy as np
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+    """Exact brute-force cosine top-k for EVERY row of a query table:
+    each row of ``df`` is scored against each query (no probe keys) —
+    the exact baseline the ANN batch paths are judged against. The work
+    is |queries| x |df| dot products, but no pair is materialized: each
+    batch ships back only a margin superset of the rounded top-k
+    (_batch_topk). ``queries`` holds (query_id, <vec_col>) rows; returns
+    (query_id, id, cosine, rank), rank 1..k. Query rows with a NULL vector or a NULL element are dropped; queries
+    of different lengths raise ValueError."""
+    return _batch_topk(
+        df, None, queries, None, None, k, id_col, vec_col, "query_id"
     )
-
-    src = df.select(id_col, vec_col)
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType(), True),
-            src.schema[id_col],
-            StructField("cosine", DoubleType(), True),
-        ]
-    )
-    dims = {len(q) for _qid, q in query_rows}
-    if len(dims) > 1:
-        raise ValueError("mixed query dims unsupported — filter first")
-    dim = dims.pop() if dims else 0
-    Q = np.array([q for _qid, q in query_rows], dtype=np.float64).reshape(
-        len(query_rows), dim
-    )
-    qids = np.array([qid for qid, _q in query_rows], dtype=np.int64)
-    qn = np.array(
-        [math.sqrt(_py_fold_sumsq(q)) for _qid, q in query_rows],
-        dtype=np.float64,
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty or not len(qids):
-                continue
-            vecs = pdf[vec_col]
-            n = len(vecs)
-            lens = np.fromiter((len(x) for x in vecs), dtype=np.int64, count=n)
-            main = lens == dim
-            if not main.any():
-                continue
-            X = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in vecs[main]]
-            )
-            ids = pdf[id_col].values[main]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                nn = np.sqrt(_fold_sumsq(X))
-                c = _fold_dots(X, Q) / (nn[:, None] * qn[None, :])
-            nk = X.shape[0] - k
-            if nk > 0:
-                thr = np.partition(c, nk, axis=0)[nk, :]
-                with np.errstate(invalid="ignore"):
-                    mask = c >= (thr[None, :] - margin)
-            else:
-                mask = np.ones_like(c, dtype=bool)
-            mask |= ~np.isfinite(c)
-            ri, qi = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[qi],
-                    id_col: ids[ri],
-                    "cosine": c[ri, qi],
-                }
-            )
-
-    return src.mapInPandas(score, out_schema)
 
 
 def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
@@ -217,7 +146,7 @@ def bucketed_index(
     Null and zero-norm vectors are EXCLUDED: a zero vector has no
     direction, so no cosine neighbor rank — and under ANSI mode (Spark 4
     default) its norm-0 row would turn every query that probes its
-    bucket into a divide-by-zero job failure (r4 self-review)."""
+    bucket into a divide-by-zero job failure."""
     planes = plane_weights(dim or _infer_dim(df, vec_col), n_planes)
     v = F.col(vec_col)
     return (
@@ -245,7 +174,7 @@ def kmeans_centroids(
     HASH sample — the sample_size rows with the smallest md5(id) values.
     Hash order is reproducible across runs, partitionings AND engines
     (DuckDB md5 is identical, so the oracle twin reconstructs the exact
-    sample), and unlike the r2 orderBy(id).limit(n) it is UNBIASED: low
+    sample), and unlike an orderBy(id).limit(n) sample it is UNBIASED: low
     ids are whatever rows were ingested first, md5 order is uniform over
     the corpus, so the sample sees the true density. Execution shape is
     TakeOrdered: each scan task keeps a sample_size-row heap and only
@@ -351,31 +280,47 @@ def kmeans_from_points(
     return [[round(float(x), 6) for x in c] for c in C]
 
 
+def _double_array(values, ddl: str) -> Column:
+    """(Nested) double array literal of type ``ddl``, parsed from ONE
+    JSON string: an F.lit per element is a JVM round trip each, and an
+    ``array(...)`` SQL text is as slow to analyze. json.dumps writes each
+    double as its repr(), which parses back to the same double."""
+    return F.from_json(F.lit(json.dumps(values)), ddl)
+
+
 def _sq_dists(vec: Column, centroids: list[list[float]]) -> Column:
     """Array of squared L2 distances to each centroid via
     ||v-c||^2 = ||v||^2 - 2 v.c + ||c||^2 — the exact formula the DuckDB
     oracle uses (list_sum/list_dot_product), so the argmin cell assignment
     is bit-identical across engines.
 
-    Kept in the compact higher-order-function form ON PURPOSE (r8): an
+    Kept in the compact higher-order-function form ON PURPOSE: an
     unrolled 16-centroid x 64-dim chain is ~2000 expression nodes that
     the optimizer re-walks per action and janino must compile per plan —
     measured as tens of seconds of driver-side planning at sf1.0. The
-    HOF form is interpreted but tiny, and every hot path now assigns
-    cells via the numpy kernel (ivf_index arrow path) instead; this
-    expression only runs on bounded query sets (ivf_probe_cells) and in
-    refine_centroids."""
+    HOF form is interpreted but tiny, and the corpus-side cell
+    assignment runs in the ivf_index numpy kernel instead; this
+    expression only runs on bounded query sets (ivf_probe_cells in the
+    batch query collect) and in refine_centroids. The centroids enter as
+    one array literal (_double_array), not one F.lit per element, which
+    took ~0.5 s to build for 16 x 64."""
     vv = F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x)
-    dists = []
-    for c in centroids:
-        cc = float(sum(x * x for x in c))
+    cents = _double_array(
+        [[float(x) for x in c] for c in centroids], "array<array<double>>"
+    )
+    ccs = _double_array(
+        [float(sum(x * x for x in c)) for c in centroids], "array<double>"
+    )
+
+    def dist(c: Column, cc: Column) -> Column:
         dot = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(float(x)) for x in c]), lambda x, w: x * w),
+            F.zip_with(vec, c, lambda x, w: x * w),
             F.lit(0.0),
             lambda a, x: a + x,
         )
-        dists.append(vv - 2 * dot + F.lit(cc))
-    return F.array(*dists)
+        return vv - 2 * dot + cc
+
+    return F.zip_with(cents, ccs, dist)
 
 
 def ivf_cell(vec: Column, centroids: list[list[float]]) -> Column:
@@ -424,26 +369,27 @@ def ivf_index(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> DataFrame:
     """Materializable IVF index: (cell, id, vec, norm). Write partitioned
     by cell; a query prunes to nprobe cells. Complements the hyperplane-LSH
     index: IVF cells adapt to the data distribution (k-means), LSH buckets
     are data-independent — at 100 TB you pick per corpus shape.
 
-    r8 (guide §4.2): cell assignment + norm run as a numpy mapInPandas
-    kernel (``arrow=True``) instead of the 16-centroid interpreted
-    higher-order-function expression — same values (exact fold order,
-    _fold_dots), ~50x less per-row cost and no giant expression tree for
-    the optimizer to re-walk. The kernel requires array<double> vectors;
-    other element types keep the expression path. Rows whose vector
-    length differs from the centroid dim get cell NULL and their own-
-    length norm, exactly as the legacy expression produced (null dot
-    poisons every distance; the norm fold runs over the row's own
-    elements). Rows with null/NaN elements produce a NaN norm in the
-    kernel where the expression produced NULL — indistinguishable after
-    the ``norm > 0.0`` filter both paths apply, which is the only place
-    such rows can go."""
+    Cell assignment + norm run as a numpy mapInPandas kernel, not as the
+    16-centroid interpreted ivf_cell/_norm expressions: the same values
+    (exact fold order, _fold_dots), ~50x less per-row cost and no giant
+    expression tree for the optimizer to re-walk. Vectors are widened to
+    array<double> first. NULL vectors, vectors with a NULL element and
+    zero vectors are excluded by the ``norm > 0.0`` filter, same
+    reasoning as bucketed_index: a NULL element reaches the kernel as
+    NaN, and the NaN norm comes back as NULL (the pandas->Arrow
+    conversion treats NaN as missing), as the _norm expression gives
+    it. Rows whose vector length differs from the centroid dim get cell
+    NULL (never probed) and their own-length norm, as the expressions
+    give them: a NULL dot poisons every distance, and the norm fold runs
+    over the row's own elements."""
+    import math
+
     import numpy as np
     from pyspark.sql.types import (
         DoubleType,
@@ -452,86 +398,56 @@ def ivf_index(
         StructType,
     )
 
-    v = F.col(vec_col)
+    v = F.col(vec_col).cast("array<double>")
     dim = len(centroids[0])
-    elem_t = None
-    try:
-        elem_t = df.schema[vec_col].dataType.elementType
-    except Exception:
-        pass
-    if arrow and isinstance(elem_t, DoubleType):
-        clean = df.filter(v.isNotNull()).select(id_col, vec_col)
-        C = np.array(centroids, dtype=np.float64)
-        # the exact ||c||^2 literals the expression path embeds (python
-        # sum() is the same left fold)
-        cc = np.array(
-            [sum(x * x for x in c) for c in centroids], dtype=np.float64
-        )
-        out_schema = StructType(
-            [
-                StructField("cell", IntegerType(), True),
-                clean.schema[id_col],
-                clean.schema[vec_col],
-                StructField("norm", DoubleType(), True),
-            ]
-        )
-
-        def assign(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                vecs = pdf[vec_col]
-                n = len(vecs)
-                lens = np.fromiter(
-                    (len(x) for x in vecs), dtype=np.int64, count=n
-                )
-                cell = np.full(n, -1, dtype=np.int64)
-                norm = np.empty(n, dtype=np.float64)
-                main = lens == dim
-                if main.any():
-                    X = np.stack(
-                        [np.asarray(x, dtype=np.float64) for x in vecs[main]]
-                    )
-                    vv = _fold_sumsq(X)
-                    with np.errstate(invalid="ignore"):
-                        d = (vv[:, None] - 2.0 * _fold_dots(X, C)) + cc[None, :]
-                        cell[main] = np.argmin(d, axis=1) + 1
-                        norm[main] = np.sqrt(vv)
-                odd = ~main
-                if odd.any():
-                    import math
-
-                    for j in np.flatnonzero(odd):
-                        norm[j] = math.sqrt(_py_fold_sumsq(vecs.iloc[j]))
-                yield pd.DataFrame(
-                    {
-                        "cell": pd.array(
-                            [int(c) if c > 0 else None for c in cell],
-                            dtype="Int32",
-                        ),
-                        id_col: pdf[id_col].values,
-                        vec_col: vecs.values,
-                        "norm": norm,
-                    }
-                )
-
-        return clean.mapInPandas(assign, out_schema).filter(
-            F.col("norm") > 0.0
-        )
-    # expression path: null/zero-norm vectors excluded, same reasoning as
-    # bucketed_index
-    return (
-        df.filter(v.isNotNull())
-        .select(
-            ivf_cell(v, centroids).alias("cell"),
-            F.col(id_col),
-            v.alias(vec_col),
-            _norm(v).alias("norm"),
-        )
-        .filter(F.col("norm") > 0.0)
+    clean = df.filter(v.isNotNull()).select(id_col, v.alias(vec_col))
+    C = np.array(centroids, dtype=np.float64)
+    # the exact ||c||^2 literals _sq_dists embeds (python sum() is the
+    # same left fold)
+    cc = np.array([sum(x * x for x in c) for c in centroids], dtype=np.float64)
+    out_schema = StructType(
+        [
+            StructField("cell", IntegerType(), True),
+            clean.schema[id_col],
+            clean.schema[vec_col],
+            StructField("norm", DoubleType(), True),
+        ]
     )
+
+    def assign(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            vecs = pdf[vec_col]
+            n = len(vecs)
+            lens = np.fromiter((len(x) for x in vecs), dtype=np.int64, count=n)
+            cell = np.full(n, -1, dtype=np.int64)
+            norm = np.empty(n, dtype=np.float64)
+            main = lens == dim
+            if main.any():
+                X = np.stack([np.asarray(x, dtype=np.float64) for x in vecs[main]])
+                vv = _fold_sumsq(X)
+                with np.errstate(invalid="ignore"):
+                    d = (vv[:, None] - 2.0 * _fold_dots(X, C)) + cc[None, :]
+                    cell[main] = np.argmin(d, axis=1) + 1
+                    norm[main] = np.sqrt(vv)
+            for j in np.flatnonzero(~main):
+                norm[j] = math.sqrt(_py_fold_sumsq(vecs.iloc[j]))
+            yield pd.DataFrame(
+                {
+                    "cell": pd.array(
+                        [int(c) if c > 0 else None for c in cell],
+                        dtype="Int32",
+                    ),
+                    id_col: pdf[id_col].values,
+                    vec_col: vecs.values,
+                    "norm": norm,
+                }
+            )
+
+    return clean.mapInPandas(assign, out_schema).filter(F.col("norm") > 0.0)
 
 
 def ivf_topk(
@@ -588,6 +504,176 @@ def ivf_probe_cells(
     )
 
 
+def _batch_topk(
+    rows: DataFrame,
+    key_col: str | None,
+    queries: DataFrame,
+    probes: Callable[[Column], Column] | None,
+    dim: int | None,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Per-query exact cosine top-k of a query table against ``rows`` —
+    the one implementation behind cosine_topk_batch, ivf_topk_batch and
+    bucketed_topk_batch. Returns (query_id, id, cosine, rank), rank 1..k.
+
+    1. Query collect: the query rows with a complete vector (non-NULL, no
+       NULL element, ``dim`` elements unless ``dim`` is None) are
+       collected once as (query_id, vector, _query_norm, probe keys).
+       ``probes`` maps the query vector column to its array of keys in
+       ``key_col`` (IVF cells, LSH buckets); with ``probes`` None every
+       row is scored against every query. The queries are the bounded
+       side by design: more than MAX_BATCH_QUERIES usable rows raise
+       ValueError, and so do queries of mixed lengths.
+    2. Kernel: one mapInPandas pass over ``rows``. For each key present
+       in a batch, that key's rows are scored against the queries that
+       probe it, in the exact fold order of the Spark expression
+       ``dot / (norm * query_norm)`` (_fold_dots: bit-identical doubles),
+       a slice of queries at a time so that each working array holds at
+       most 2**21 (row, query) cells.
+       Per block and query only the rows whose UNROUNDED cosine is within
+       ``margin`` of the block's k-th largest are shipped back — a
+       superset of the global ``round(cosine, 6)`` top-k: round6 moves a
+       value by at most ~5.1e-7, so c >= c' + 1.1e-6 forces round6(c) >
+       round6(c'), and a dropped row has >= k rows with a strictly larger
+       rounded cosine in its own block. A row without a cosine — a NULL
+       vector, a NULL element, a length other than the queries' or a
+       zero vector — scores NaN, which comes back as a NULL cosine (the
+       pandas->Arrow conversion treats NaN as missing), as the Spark
+       fold gives the first three. NULL sorts last, so a block ships
+       NULL rows for a query only when it has fewer than k scored rows
+       for it, and then only the lowest ids that can still rank.
+    3. Ranking: F.round + row_number over (cosine desc, id asc) <= k in
+       the JVM, so rounding and tie-breaks are Spark's own and the
+       rank filter plans as WindowGroupLimit (each shuffle partition
+       keeps k rows per query)."""
+    import numpy as np
+    from pyspark.sql import Window
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    v = F.col(vec_col).cast("array<double>")
+    usable = v.isNotNull() & F.forall(v, lambda x: x.isNotNull())
+    if dim is not None:
+        usable = usable & (F.size(v) == dim)
+    cols = [F.col(query_id_col), v.alias("_qv"), _query_norm(v).alias("_qn")]
+    if probes is not None:
+        cols.append(probes(v).alias("_keys"))
+    qrows = (
+        queries.filter(usable)
+        .select(*cols)
+        .limit(MAX_BATCH_QUERIES + 1)
+        .collect()
+    )
+    if len(qrows) > MAX_BATCH_QUERIES:
+        raise ValueError(
+            f"query table has more than MAX_BATCH_QUERIES={MAX_BATCH_QUERIES}"
+            " usable rows; split it into smaller query tables"
+        )
+    if dim is None:
+        dims = {len(r["_qv"]) for r in qrows}
+        if len(dims) > 1:
+            raise ValueError("mixed query dims unsupported — filter first")
+        dim = dims.pop() if dims else 0
+    Q = np.array([r["_qv"] for r in qrows], dtype=np.float64).reshape(
+        len(qrows), dim
+    )
+    qn = np.array([r["_qn"] for r in qrows], dtype=np.float64)
+    qids = np.array([r[query_id_col] for r in qrows])
+    by_key: dict = {}
+    for j, r in enumerate(qrows):
+        for key in r["_keys"] if probes is not None else (None,):
+            by_key.setdefault(key, []).append(j)
+    by_key = {key: np.array(js) for key, js in by_key.items()}
+
+    src = rows.select(*([key_col] if key_col else []), id_col, v.alias(vec_col))
+    out_schema = StructType(
+        [
+            queries.schema[query_id_col],
+            src.schema[id_col],
+            StructField("cosine", DoubleType(), True),
+        ]
+    )
+    margin = 1.1e-6
+
+    def score(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            vecs = pdf[vec_col].values
+            ids = pdf[id_col].values
+            lens = np.fromiter(
+                (-1 if x is None else len(x) for x in vecs),
+                dtype=np.int64,
+                count=len(vecs),
+            )
+            groups = (
+                pdf.groupby(key_col).indices
+                if key_col
+                else {None: np.arange(len(pdf))}
+            )
+            out_q, out_i, out_c = [], [], []
+            for key, at in groups.items():
+                qjs = by_key.get(key)
+                if qjs is None:
+                    continue
+                ok = lens[at] == dim
+                if ok.any():
+                    X = np.stack(vecs[at[ok]])
+                    nn = np.sqrt(_fold_sumsq(X))[:, None]
+                order = np.argsort(ids[at], kind="stable")
+                nk = len(at) - k
+                # score the block in query slices of <= 2**21 cells, so each
+                # array below stays ~16 MB whatever the batch and query sizes
+                step = max(1, (1 << 21) // len(at))
+                for s in range(0, len(qjs), step):
+                    qs = qjs[s : s + step]
+                    c = np.full((len(at), len(qs)), np.nan)
+                    with np.errstate(invalid="ignore", divide="ignore"):
+                        if ok.any():
+                            c[ok] = _fold_dots(X, Q[qs]) / (nn * qn[qs][None, :])
+                        nan = np.isnan(c)
+                        if nk > 0:
+                            part = np.where(nan, -np.inf, c)
+                            part.partition(nk, axis=0)
+                            keep = c >= part[nk] - margin
+                        else:
+                            keep = ~nan
+                    if nan.any():
+                        # per query, each NULL row's rank among its NULL rows
+                        # in id order
+                        nth = np.empty(c.shape, dtype=np.int64)
+                        nth[order] = np.cumsum(nan[order], axis=0)
+                        keep |= nan & (nth <= k - (~nan).sum(axis=0))
+                    ri, qi = np.nonzero(keep)
+                    out_q.append(qids[qs[qi]])
+                    out_i.append(ids[at[ri]])
+                    out_c.append(c[ri, qi])
+            if out_q:
+                yield pd.DataFrame(
+                    {
+                        query_id_col: np.concatenate(out_q),
+                        id_col: np.concatenate(out_i),
+                        "cosine": np.concatenate(out_c),
+                    }
+                )
+
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("cosine").desc(), F.col(id_col).asc()
+    )
+    return (
+        src.mapInPandas(score, out_schema)
+        .select(
+            F.col(query_id_col),
+            F.col(id_col),
+            F.round(F.col("cosine"), 6).alias("cosine"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def ivf_topk_batch(
     index: DataFrame,
     queries: DataFrame,
@@ -597,179 +683,35 @@ def ivf_topk_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    arrow: bool = True,
 ) -> DataFrame:
-    """Bulk ANN (r3 verdict task 3): kNN for EVERY row of a query table —
-    the cross-corpus retrieval shape a training-data pipeline actually
-    runs ("find the nearest corpus docs for each eval prompt"), which the
-    single-vector ivf_topk cannot express without a driver loop.
+    """Bulk ANN: kNN for EVERY row of a query table — the cross-corpus
+    retrieval shape a training-data pipeline actually runs ("find the
+    nearest corpus docs for each eval prompt"), which the single-vector
+    ivf_topk cannot express without a driver loop.
 
-    Plan shape, built for 100 TB:
-      1. each query row is assigned its nprobe nearest cells JVM-side
-         (ivf_probe_cells over the same centroid literals as the index)
-         and EXPLODED to one row per probe — queries grow by nprobe, never
-         by corpus size;
-      2. one equi-join on ``cell`` against the cell-partitioned index —
-         when the index table is stored partitioned by cell (ivf_index
-         docstring), only the probed cells' partitions are scanned, and
-         the shuffle co-partitions both sides on the cell key; a skewed
-         cell (dense region of embedding space) splits under AQE skew
-         handling rather than serializing on one task;
-      3. exact cosine on the joined pairs, then per-query top-k via
-         row_number over (cosine desc, id asc) — Spark turns the
-         rank-filter into WindowGroupLimit, so each shuffle partition
-         keeps k rows per query instead of materializing every candidate.
+    Plan shape (_batch_topk): each query's nprobe nearest cells come from
+    ivf_probe_cells over the same centroid literals as the index,
+    evaluated JVM-side in the bounded query collect; one mapInPandas
+    kernel over the cell-keyed index scores each probed cell's rows
+    against the queries probing it and ships back a margin superset of
+    the rounded top-k; F.round + a row_number window (WindowGroupLimit)
+    rank in the JVM. Cost grows with the rows of the probed cells, never
+    with a queries x corpus product, and no (query, row) pair is
+    materialized.
 
     Returns (query_id, id, cosine, rank), rank 1..k. Query rows with a
-    null or wrong-dimension vector are dropped (same hygiene as
-    refine_centroids).
-
-    r8 (guide §4.2/§8): with a double-element index the probe+score side
-    runs as a numpy mapInPandas kernel over the index — queries are
-    collected driver-side (they are the bounded side by design, the same
-    assumption the join's broadcast made), probe cells are computed in
-    python with the exact fold/sort the JVM expression used, per-cell
-    blocks are scored in the exact fold order, and each batch ships back
-    only a margin superset of the rounded top-k per query
-    (cosine_scores_pruned reasoning). F.round + the ranking window stay
-    in the JVM, so values, tie-breaks and the WindowGroupLimit plan
-    shape are unchanged. This removes the 1.3M-pair joined-row
-    materialization measured at sf1.0. Other vector types keep the
-    legacy equi-join path (``arrow=False`` forces it)."""
-    import math
-
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    dim = len(centroids[0])
-    qv = F.col(vec_col)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    qfilt = queries.filter(qv.isNotNull() & (F.size(qv) == dim))
-    elem_t = None
-    try:
-        elem_t = index.schema[vec_col].dataType.elementType
-    except Exception:
-        pass
-    if arrow and isinstance(elem_t, DoubleType):
-        qrows = qfilt.select(query_id_col, vec_col).collect()
-        C = [[float(x) for x in c] for c in centroids]
-        cc = [sum(x * x for x in c) for c in C]
-        qids = [r[query_id_col] for r in qrows]
-        Q = np.array(
-            [[float(x) for x in r[vec_col]] for r in qrows], dtype=np.float64
-        ).reshape(len(qrows), dim)
-        qn = np.empty(len(qrows), dtype=np.float64)
-        # per-query probe cells + guarded norm, exact python twins of
-        # ivf_probe_cells / _query_norm (left folds, (d, cell) sort)
-        by_cell: dict[int, list[int]] = {}
-        for j, r in enumerate(qrows):
-            q = [float(x) for x in r[vec_col]]
-            vv = sum(x * x for x in q)
-            n = math.sqrt(vv)
-            qn[j] = n if n != 0.0 else 1.0
-            dists = []
-            for ci, c in enumerate(C):
-                dot = sum(x * w_ for x, w_ in zip(q, c))
-                dists.append((vv - 2 * dot + cc[ci], ci + 1))
-            for _d, cell in sorted(dists)[:nprobe]:
-                by_cell.setdefault(cell, []).append(j)
-
-        src = index.select("cell", id_col, vec_col, "norm")
-        out_schema = StructType(
-            [
-                qfilt.schema[query_id_col],
-                src.schema[id_col],
-                StructField("cosine", DoubleType(), True),
-            ]
-        )
-        margin = 1.1e-6
-
-        def score(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if pdf.empty or not qids:
-                    continue
-                vecs = pdf[vec_col]
-                n = len(vecs)
-                lens = np.fromiter(
-                    (len(x) for x in vecs), dtype=np.int64, count=n
-                )
-                ok = lens == dim
-                cells = pdf["cell"].values
-                ids = pdf[id_col].values
-                norms = pdf["norm"].values
-                # per-query scores across this batch's probed-cell rows
-                parts: dict[int, list] = {}
-                for cell, qjs in by_cell.items():
-                    rows = np.flatnonzero(ok & (cells == cell))
-                    if not len(rows):
-                        continue
-                    X = np.stack(
-                        [np.asarray(vecs.iloc[r], dtype=np.float64) for r in rows]
-                    )
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        block = _fold_dots(X, Q[qjs]) / (
-                            norms[rows][:, None] * qn[qjs][None, :]
-                        )
-                    for col, j in enumerate(qjs):
-                        parts.setdefault(j, []).append((rows, block[:, col]))
-                out_q, out_i, out_c = [], [], []
-                for j, chunks in parts.items():
-                    rows = np.concatenate([r for r, _c in chunks])
-                    cos = np.concatenate([c for _r, c in chunks])
-                    nk = len(cos) - k
-                    if nk > 0:
-                        thr = np.partition(cos, nk)[nk]
-                        with np.errstate(invalid="ignore"):
-                            keep = cos >= (thr - margin)
-                    else:
-                        keep = np.ones(len(cos), dtype=bool)
-                    keep |= ~np.isfinite(cos)
-                    out_q.extend([qids[j]] * int(keep.sum()))
-                    out_i.append(ids[rows[keep]])
-                    out_c.append(cos[keep])
-                if not out_q:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        query_id_col: out_q,
-                        id_col: np.concatenate(out_i),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
-
-        scored = src.mapInPandas(score, out_schema)
-        return (
-            scored.select(
-                F.col(query_id_col),
-                F.col(id_col),
-                F.round(F.col("cosine"), 6).alias("cosine"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-
-    q = qfilt.select(
-        F.col(query_id_col),
-        qv.alias("_qv"),
-        _query_norm(qv).alias("_qn"),
-        F.explode(ivf_probe_cells(qv, centroids, nprobe)).alias("cell"),
-    )
-    joined = q.join(index, "cell")
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col("_qv"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    cos = F.round(dot / (F.col("norm") * F.col("_qn")), 6)
-    return (
-        joined.select(F.col(query_id_col), F.col(id_col), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    NULL vector, a NULL element or a length other than the centroid dim
+    are dropped (same hygiene as refine_centroids)."""
+    return _batch_topk(
+        index,
+        "cell",
+        queries,
+        lambda qv: ivf_probe_cells(qv, centroids, nprobe),
+        len(centroids[0]),
+        k,
+        id_col,
+        vec_col,
+        query_id_col,
     )
 
 
@@ -787,50 +729,28 @@ def bucketed_topk_batch(
     """Bulk ANN over the hyperplane-LSH index (the data-INDEPENDENT twin
     of ivf_topk_batch): every query row is assigned its own bucket (and,
     with ``multiprobe``, all Hamming-1 neighbor buckets) via the same
-    plane-weight literals the index used, exploded to one row per probe,
-    equi-joined against the bucket-partitioned index, and ranked by
-    exact cosine with a per-query WindowGroupLimit top-k.
-
-    Same scale shape as ivf_topk_batch: queries grow by (1 + n_planes)
-    probes, never by corpus size; the join shuffle co-partitions on the
-    bucket key the stored index is partitioned by. Returns
-    (query_id, id, cosine, rank). Matches per-query ``bucketed_topk``
-    row-for-row (tests/test_dataops.py)."""
+    plane-weight literals the index used, and the bucket-keyed index rows
+    are scored and ranked by the shared _batch_topk kernel — same plan
+    shape as ivf_topk_batch. Returns (query_id, id, cosine, rank).
+    Matches per-query ``bucketed_topk`` row-for-row
+    (tests/test_dataops.py)."""
     planes = plane_weights(dim, n_planes)
-    qv = F.col(vec_col)
-    qb = hyperplane_bucket(qv, planes)
-    probes = [qb]
-    if multiprobe:
-        for i in range(n_planes):
+
+    def probes(qv: Column) -> Column:
+        qb = hyperplane_bucket(qv, planes)
+        flips = [
             # flip bit i: prefix [1..i] + flipped char + suffix [i+2..]
-            flipped = F.concat(
+            F.concat(
                 F.substring(qb, 1, i),
                 F.when(F.substring(qb, i + 1, 1) == "1", "0").otherwise("1"),
                 F.substring(qb, i + 2, n_planes - i - 1),
             )
-            probes.append(flipped)
-    q = queries.filter(qv.isNotNull() & (F.size(qv) == dim)).select(
-        F.col(query_id_col),
-        qv.alias("_qv"),
-        _query_norm(qv).alias("_qn"),
-        F.explode(F.array_distinct(F.array(*probes))).alias("bucket"),
-    )
-    joined = q.join(index, "bucket")
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col("_qv"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    cos = F.round(dot / (F.col("norm") * F.col("_qn")), 6)
-    from pyspark.sql import Window
+            for i in range(n_planes if multiprobe else 0)
+        ]
+        return F.array_distinct(F.array(qb, *flips))
 
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        joined.select(F.col(query_id_col), F.col(id_col), cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _batch_topk(
+        index, "bucket", queries, probes, dim, k, id_col, vec_col, query_id_col
     )
 
 

@@ -66,6 +66,30 @@ def oracle_result(fixture_paths):
     )
 
 
+@pytest.fixture(params=["ivf", "lsh", "exact"])
+def batch_topk(request):
+    """Each batch top-k function of simsearch in turn, as
+    ``f(corpus, queries, k)`` -> (query_id, vec_id, cosine, rank); the
+    ANN ones first build their index over the corpus."""
+    from antnre_spark import simsearch
+
+    def run(corpus, queries, k):
+        if request.param == "ivf":
+            cents = simsearch.kmeans_centroids(
+                corpus, n_centroids=4, sample_size=8
+            )
+            idx = simsearch.ivf_index(corpus, cents)
+            return simsearch.ivf_topk_batch(idx, queries, cents, k=k)
+        if request.param == "lsh":
+            dim = len(corpus.first()["embedding"])
+            idx = simsearch.bucketed_index(corpus, dim=dim)
+            return simsearch.bucketed_topk_batch(idx, queries, dim=dim, k=k)
+        return simsearch.cosine_topk_batch(corpus, queries, k=k)
+
+    run.method = request.param
+    return run
+
+
 @pytest.fixture(scope="session")
 def pipeline_out(spark, transcripts_df, fixture_paths, tmp_path_factory):
     """One full distributed run on the tiny fixture, shared by parity tests."""

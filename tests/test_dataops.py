@@ -347,34 +347,55 @@ class TestSimSearch:
         want = simsearch.ivf_topk(idx, query, cents, k=5, nprobe=2).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
-    def test_batch_zero_query_yields_no_nans(self, spark):
+    def test_batch_zero_query_yields_no_nans(self, spark, batch_topk):
         """An all-zero query vector must produce cosine 0.0 rows, never
         NaNs (Spark sorts NaN above every real value, so unguarded NaNs
-        would take rank 1..k — r4 self-review)."""
+        would take rank 1..k). The zero vector is also a corpus row: the
+        indexes drop it, brute force gives it a NULL cosine (ranks last)."""
         import math
 
         rows = [(i, [float(i + 1), 1.0, 0.5, 0.25]) for i in range(20)]
         rows.append((99, [0.0, 0.0, 0.0, 0.0]))
         df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-        cents = simsearch.kmeans_centroids(df, n_centroids=4, sample_size=8)
-        idx = simsearch.ivf_index(df, cents)
         queries = df.filter(F.col("vec_id") == 99).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        got = simsearch.ivf_topk_batch(idx, queries, cents, k=3).collect()
-        assert got, "zero query probes populated cells -> rows expected"
-        assert all(
-            not math.isnan(r["cosine"]) and r["cosine"] == 0.0 for r in got
-        )
+        got = batch_topk(df, queries, 3).collect()
         # the LSH leg may legitimately return nothing (the zero query's
         # all-ones bucket and its Hamming-1 neighbors can be empty) —
         # what it must NOT do is emit NaNs or throw ANSI divide-by-zero
-        lsh = simsearch.bucketed_topk_batch(
-            simsearch.bucketed_index(df, dim=4), queries, dim=4, k=3
-        ).collect()
+        if batch_topk.method != "lsh":
+            assert got, "zero query probes populated cells -> rows expected"
         assert all(
-            not math.isnan(r["cosine"]) and r["cosine"] == 0.0 for r in lsh
+            not math.isnan(r["cosine"]) and r["cosine"] == 0.0 for r in got
         )
+
+    def test_batch_query_table_is_bounded(self, spark, batch_topk, monkeypatch):
+        """The query table is collected to the driver: past
+        MAX_BATCH_QUERIES usable rows the batch functions must fail
+        loudly instead of exhausting driver memory."""
+        rows = [(i, [float(i + 1), 1.0, 0.5, 0.25]) for i in range(20)]
+        df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
+        monkeypatch.setattr(simsearch, "MAX_BATCH_QUERIES", 3)
+        queries = df.select(F.col("vec_id").alias("query_id"), "embedding")
+        assert batch_topk(df, queries.filter("query_id < 3"), 2).collect()
+        with pytest.raises(ValueError, match="MAX_BATCH_QUERIES=3"):
+            batch_topk(df, queries.filter("query_id < 4"), 2).collect()
+
+    def test_batch_drops_queries_with_null_elements(self, spark, batch_topk):
+        """A query vector with a NULL element has no cosine: it is
+        dropped like a NULL query, not a driver TypeError and not a set
+        of NULL-cosine rows."""
+        rows = [(i, [float(i + 1), 1.0, 0.5, 0.25]) for i in range(20)]
+        df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
+        queries = spark.createDataFrame(
+            [(0, [1.0, 1.0, 0.5, 0.25]), (1, [1.0, None, 0.5, 0.25]),
+             (2, None)],
+            "query_id: long, embedding: array<double>",
+        )
+        got = batch_topk(df, queries, 2).collect()
+        assert {r["query_id"] for r in got} == {0}
+        assert all(r["cosine"] is not None for r in got)
 
     def test_bucketed_batch_matches_per_query_loop(self, spark):
         """Same contract for the hyperplane-LSH batch path: per-query

@@ -125,20 +125,15 @@ class TestSaltedAggPlan:
 
 
 class TestBatchAnnPlan:
-    def test_ivf_batch_topk_uses_window_group_limit(self, spark):
-        """The bulk-ANN per-query top-k (rank <= k filter over a
-        row_number window) must plan as WindowGroupLimit: each shuffle
-        partition keeps k rows per query instead of materializing every
-        probed candidate (r4 verdict task 3's scale story)."""
-        from antnre_spark import simsearch
-
+    def test_batch_topk_uses_window_group_limit(self, spark, batch_topk):
+        """The bulk top-k (rank <= k filter over a row_number window)
+        must plan as WindowGroupLimit: each shuffle partition keeps k
+        rows per query instead of materializing every scored
+        candidate."""
         rows = [(i, [float(i % 7), float(i % 3), 1.0, 0.5]) for i in range(40)]
         df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-        cents = simsearch.kmeans_centroids(df, n_centroids=4, sample_size=16)
-        idx = simsearch.ivf_index(df, cents)
         queries = df.limit(3).select(F.col("vec_id").alias("query_id"), "embedding")
-        plan = plan_of(simsearch.ivf_topk_batch(idx, queries, cents, k=5))
-        assert "WindowGroupLimit" in plan
+        assert "WindowGroupLimit" in plan_of(batch_topk(df, queries, 5))
 
 
 class TestExtractJobActions:

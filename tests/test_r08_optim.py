@@ -3,10 +3,11 @@ this round is pinned against its legacy execution path (or an inline
 re-implementation of the r7 shape) for exact value equality — the
 optimizations must be execution-only, bit-for-bit.
 
-Covered: ivf_index arrow kernel, ivf_topk_batch arrow kernel,
-cosine_scores_pruned (the exact-verify kernel), the single-pass
-minhash_dup_candidates pair generation, word_ngrams with a
-pre-materialized token column, and the model's char-feature memoization.
+Covered: the ivf_index kernel and the shared batch top-k scoring kernel
+(ivf_topk_batch, cosine_topk_batch) against inline Spark-expression
+references, the single-pass minhash_dup_candidates pair generation,
+word_ngrams with a pre-materialized token column, and the model's
+char-feature memoization.
 """
 
 from __future__ import annotations
@@ -44,13 +45,15 @@ def _rand_corpus(spark, n=160, dim=6, seed=7):
 
 class TestIvfKernels:
     def test_ivf_index_arrow_matches_expression_path(self, spark):
-        """cell / norm / survivor set must be BIT-identical between the
-        numpy kernel and the legacy JVM expression path, including a
-        wrong-length row (NULL cell, own-length norm) and a zero vector
-        (dropped by the norm filter on both paths)."""
+        """cell / norm / survivor set of the numpy kernel must be BIT-
+        identical to the ivf_cell/_norm Spark expressions, including a
+        wrong-length row (NULL cell, own-length norm), a zero vector, a
+        NULL vector and a vector with a NULL element (no positive norm,
+        so dropped)."""
         df = _rand_corpus(spark)
         extra = spark.createDataFrame(
-            [(900, [1.0, 2.0]), (901, [0.0] * 6), (902, None)],
+            [(900, [1.0, 2.0]), (901, [0.0] * 6), (902, None),
+             (903, [1.0, None, 2.0, 3.0, 4.0, 5.0])],
             "vec_id: long, embedding: array<double>",
         )
         df = df.unionByName(extra)
@@ -59,15 +62,27 @@ class TestIvfKernels:
             r["vec_id"]: (r["cell"], r["norm"])
             for r in simsearch.ivf_index(df, cents).collect()
         }
+        v = F.col("embedding")
         want = {
             r["vec_id"]: (r["cell"], r["norm"])
-            for r in simsearch.ivf_index(df, cents, arrow=False).collect()
+            for r in df.select(
+                simsearch.ivf_cell(v, cents).alias("cell"),
+                "vec_id",
+                simsearch._norm(v).alias("norm"),
+            )
+            .filter(F.col("norm") > 0.0)
+            .collect()
         }
         assert got == want  # exact float equality on purpose
         assert 900 in got and got[900][0] is None  # wrong-dim row kept, cell NULL
-        assert 901 not in got and 902 not in got  # zero/null vectors dropped
+        assert not {901, 902, 903} & set(got)  # zero/null vectors dropped
 
     def test_ivf_topk_batch_arrow_matches_join_path(self, spark):
+        """The scoring kernel must reproduce, bit for bit, the equi-join
+        of the per-query probe cells (ivf_probe_cells, exploded) against
+        the cell-keyed index, scored by the Spark fold expression."""
+        from pyspark.sql import Window
+
         df = _rand_corpus(spark, n=200, seed=11)
         cents = simsearch.kmeans_centroids(df, n_centroids=4, sample_size=32)
         idx = simsearch.ivf_index(df, cents)
@@ -80,45 +95,57 @@ class TestIvfKernels:
                 idx, queries, cents, k=4, nprobe=2
             ).collect()
         )
+        qv = F.col("embedding")
+        q = queries.select(
+            "query_id",
+            qv.alias("_qv"),
+            simsearch._query_norm(qv).alias("_qn"),
+            F.explode(simsearch.ivf_probe_cells(qv, cents, 2)).alias("cell"),
+        )
+        dot = F.aggregate(
+            F.zip_with(F.col("embedding"), F.col("_qv"), lambda x, y: x * y),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("cosine").desc(), F.col("vec_id").asc()
+        )
         want = sorted(
             tuple(r)
-            for r in simsearch.ivf_topk_batch(
-                idx, queries, cents, k=4, nprobe=2, arrow=False
-            ).collect()
+            for r in q.join(idx, "cell")
+            .select(
+                "query_id",
+                "vec_id",
+                F.round(dot / (F.col("norm") * F.col("_qn")), 6).alias("cosine"),
+            )
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 4)
+            .collect()
         )
         assert got == want and got
 
     def test_cosine_scores_pruned_matches_crossjoin_topk(self, spark):
-        """The kernel + JVM round/window must reproduce the r7 crossJoin
-        exact-verify leg row-for-row (the superset-margin proof in
-        practice), including rounded-cosine ties broken by vec_id."""
+        """cosine_topk_batch (kernel + JVM round/window) must reproduce
+        the crossJoin exact top-k row-for-row (the superset-margin proof
+        in practice), including rounded-cosine ties broken by vec_id. A
+        wrong-length corpus row has a NULL cosine in the crossJoin: it
+        must rank last, not vanish, when k exceeds the valid rows."""
         from pyspark.sql import Window
 
         df = _rand_corpus(spark, n=150, seed=23)
         queries = df.filter(F.col("vec_id") % 29 == 0).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        k = 5
+        df = df.unionByName(
+            spark.createDataFrame(
+                [(900, [1.0, 2.0])], "vec_id: long, embedding: array<double>"
+            )
+        )
+        n_queries = queries.count()
         w = Window.partitionBy("query_id").orderBy(
             F.col("cosine").desc(), F.col("vec_id").asc()
         )
-        qrows = [
-            (int(r["query_id"]), list(r["embedding"]))
-            for r in queries.collect()
-        ]
-        got = sorted(
-            (r["query_id"], r["vec_id"], r["cosine"], r["r"])
-            for r in simsearch.cosine_scores_pruned(df, qrows, k=k)
-            .select(
-                "query_id",
-                "vec_id",
-                F.round(F.col("cosine"), 6).alias("cosine"),
-            )
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= k)
-            .collect()
-        )
-        # r7 shape: broadcast-nested-loop crossJoin + interpreted folds
+        # crossJoin + interpreted folds, the reference
         q2 = queries.select(
             F.col("query_id"),
             F.col("embedding").alias("_qv"),
@@ -129,25 +156,33 @@ class TestIvfKernels:
             F.lit(0.0),
             lambda a, x: a + x,
         )
-        want = sorted(
-            (r["query_id"], r["vec_id"], r["cosine"], r["r"])
-            for r in q2.crossJoin(
-                df.select(
-                    "vec_id",
-                    "embedding",
-                    simsearch._norm(F.col("embedding")).alias("_n"),
-                )
-            )
-            .select(
-                "query_id",
+        pairs = q2.crossJoin(
+            df.select(
                 "vec_id",
-                F.round(dot / (F.col("_n") * F.col("_qn")), 6).alias("cosine"),
+                "embedding",
+                simsearch._norm(F.col("embedding")).alias("_n"),
             )
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= k)
-            .collect()
+        ).select(
+            "query_id",
+            "vec_id",
+            F.round(dot / (F.col("_n") * F.col("_qn")), 6).alias("cosine"),
         )
-        assert got == want and len(got) == len(qrows) * k
+        for k in (5, 160):
+            got = sorted(
+                (r["query_id"], r["vec_id"], r["cosine"], r["rank"])
+                for r in simsearch.cosine_topk_batch(df, queries, k=k).collect()
+            )
+            want = sorted(
+                (r["query_id"], r["vec_id"], r["cosine"], r["r"])
+                for r in pairs.withColumn("r", F.row_number().over(w))
+                .filter(F.col("r") <= k)
+                .collect()
+            )
+            assert got == want and len(got) == n_queries * min(k, 151)
+        assert all(
+            (c is None) == (i == 900) and (i != 900 or r == 151)
+            for _q, i, c, r in got
+        )
 
     def test_fold_dots_matches_spark_fold_bitwise(self, spark):
         """_fold_dots/_fold_sumsq vs the JVM aggregate fold on awkward
