@@ -64,7 +64,7 @@ def partition_for_extraction(
 
     Rows are conv-hash balanced; a single conversation larger than one
     partition's fair share is the one case this cannot split — there, pass
-    repartition_to to extract_sentences (round-robin) instead.
+    repartition_to to extract_turns (round-robin) instead.
     """
     return transcripts.repartition(n_partitions, "conv_id")
 

@@ -65,9 +65,8 @@ def _model_for(weights_bc, vocab_bc, model_key: str) -> AntNREModel:
 
 def _budget_bounds(sizes, budget: int) -> list[tuple[int, int]]:
     """[lo, hi) chunk bounds so each chunk's total size <= budget (one
-    oversized row still forms its own chunk). THE single budget rule —
-    shared by the pandas, Arrow, and fused stage bodies so they can
-    never desynchronize."""
+    oversized row still forms its own chunk). The single budget rule of
+    the model stage (_extract_frames) and of train.py's batched passes."""
     bounds: list[tuple[int, int]] = []
     start, acc = 0, 0
     n = 0
@@ -82,11 +81,35 @@ def _budget_bounds(sizes, budget: int) -> list[tuple[int, int]]:
     return bounds
 
 
-def _token_chunks(pdf: pd.DataFrame, budget: int) -> Iterator[pd.DataFrame]:
-    """Re-chunk an Arrow batch so each model call sees <= budget tokens."""
-    sizes = pdf["tokens"].map(len).to_numpy()
-    for lo, hi in _budget_bounds(sizes, budget):
-        yield pdf.iloc[lo:hi]
+def _extract_frames(
+    model: AntNREModel,
+    conv_ids,
+    turn_idxs,
+    sent_idxs,
+    token_lists: list[list[str]],
+    token_budget: int,
+    refine_types: bool,
+    conf_mode: str = "local",
+) -> Iterator[pd.DataFrame]:
+    """The one model-stage body behind both extraction entry points:
+    per-sentence columns -> EXTRACTED frames, one ``model.extract`` call
+    per token-budget chunk (so one pathological Arrow batch cannot OOM
+    the worker)."""
+    for lo, hi in _budget_bounds([len(t) for t in token_lists], token_budget):
+        toks = token_lists[lo:hi]
+        results = model.extract(
+            toks, refine_types=refine_types, conf_mode=conf_mode
+        )
+        out_m, out_r = _result_lists(results, toks)
+        yield pd.DataFrame(
+            {
+                "conv_id": conv_ids[lo:hi],
+                "turn_idx": pd.array(turn_idxs[lo:hi], dtype="int32"),
+                "sent_idx": pd.array(sent_idxs[lo:hi], dtype="int32"),
+                "mentions": out_m,
+                "relations": out_r,
+            }
+        )
 
 
 # Spark's `trim` removes ONLY the space character (0x20), and Java's
@@ -94,7 +117,7 @@ def _token_chunks(pdf: pd.DataFrame, budget: int) -> Iterator[pd.DataFrame]:
 # python's unicode-aware str.strip()/\s. The fused path must replicate
 # the JVM tokenizer EXACTLY or token indices (and therefore mention
 # spans and ids) drift on inputs with tabs/newlines/NBSP at sentence
-# edges — caught by the r4 self-review and pinned by
+# edges — pinned by
 # tests/test_invariants.py::test_fused_tokenizer_matches_jvm_on_nasty_whitespace.
 _JVM_WS = None  # compiled lazily (module import stays light)
 
@@ -117,43 +140,36 @@ def extract_sentences(
     vocab_bc,
     token_budget: int = TOKEN_BUDGET,
     model_key: str = "default",
-    repartition_to: int | None = None,
     refine_types: bool = False,
-    conf_mode: str = "local",
 ) -> DataFrame:
     """sentences(conv_id, turn_idx, sent_idx, tokens, ...) -> EXTRACTED.
 
-    ``repartition_to``: explicit parallelism for the model stage. The
-    extraction is per-sentence compute, so its ideal partition count tracks
-    CORES, not data size — AQE sizes partitions for shuffle cost and will
-    under-parallelize a compute stage fed by a small shuffle. Round-robin
-    repartition also load-balances pathological conversations (a 10^4-turn
-    conversation's sentences spread over all workers — skew cap by
-    construction). At petabyte scale leave None and size the upstream
-    bucketing instead: reshuffling raw text is not free.
+    The staged form of the model stage (segmentation already ran as its
+    own pandas_udf stage); production runs the fused ``extract_turns``,
+    which emits the same rows.
 
     ``refine_types``: run the F4 GCN joint type-refinement pass inside the
     same forward call (nnmodel.refine_mention_types) — zero extra shuffles.
     """
-    # prune to the four consumed columns BEFORE the repartition: char
-    # offsets etc. would otherwise ride the shuffle and the Arrow hop
-    sentences = sentences.select("conv_id", "turn_idx", "sent_idx", "tokens")
-    if repartition_to:
-        sentences = sentences.repartition(repartition_to)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _model_for(weights_bc, vocab_bc, model_key)
         for pdf in batches:
-            if pdf.empty:
-                continue
-            for chunk in _token_chunks(pdf, token_budget):
-                toks = [list(t) for t in chunk["tokens"]]
-                results = model.extract(
-                    toks, refine_types=refine_types, conf_mode=conf_mode
-                )
-                yield _results_frame(chunk, toks, results)
+            yield from _extract_frames(
+                model,
+                pdf["conv_id"].to_numpy(),
+                pdf["turn_idx"].to_numpy(),
+                pdf["sent_idx"].to_numpy(),
+                [list(t) for t in pdf["tokens"]],
+                token_budget,
+                refine_types,
+            )
 
-    return sentences.mapInPandas(run, EXTRACTED)
+    # prune to the four consumed columns: char offsets etc. would
+    # otherwise ride the Arrow hop
+    return sentences.select(
+        "conv_id", "turn_idx", "sent_idx", "tokens"
+    ).mapInPandas(run, EXTRACTED)
 
 
 def extract_turns(
@@ -166,10 +182,9 @@ def extract_turns(
     refine_types: bool = False,
     conf_mode: str = "local",
 ) -> DataFrame:
-    """Fused D1+D2+E+F (r3 verdict task 1): sentence segmentation +
-    tokenization run INSIDE the model's mapInPandas instead of as a
-    separate scalar pandas_udf stage — turn rows go through ONE Arrow
-    hop, not two.
+    """Fused D1+D2+E+F: sentence segmentation + tokenization run INSIDE
+    the model's mapInPandas instead of as a separate scalar pandas_udf
+    stage — turn rows go through ONE Arrow hop, not two.
 
     Why this matters for N->4N scaling: the segment-then-extract chain
     serializes every turn's text across the JVM<->Python boundary twice
@@ -184,12 +199,23 @@ def extract_turns(
     ``extract_sentences(segment.segment_turns(turns))``: the same
     boundary regex (segment._SENT_BOUNDARY) and an EXACT python replica
     of the JVM tokenizer (_jvm_tokens — Spark trim strips 0x20 only and
-    Java \\s is ASCII-only, both narrower than python defaults; the r4
-    self-review caught the naive strip()/\\s version drifting on
-    tab/NBSP-edged text). Asserted row-for-row in
-    tests/test_invariants.py, including an adversarial-whitespace case.
-    Output rows are per-sentence (mapInPandas may emit more rows than
-    it consumes)."""
+    Java \\s is ASCII-only, both narrower than python defaults; a naive
+    strip()/\\s version drifts on tab/NBSP-edged text). Asserted
+    row-for-row in tests/test_invariants.py, including an
+    adversarial-whitespace case. Output rows are per-sentence
+    (mapInPandas may emit more rows than it consumes).
+
+    ``repartition_to``: explicit parallelism for the model stage. The
+    extraction is per-sentence compute, so its ideal partition count tracks
+    CORES, not data size — AQE sizes partitions for shuffle cost and will
+    under-parallelize a compute stage fed by a small shuffle. Round-robin
+    repartition also load-balances pathological conversations (a 10^4-turn
+    conversation's sentences spread over all workers — skew cap by
+    construction). At petabyte scale leave None and size the upstream
+    bucketing instead: reshuffling raw text is not free.
+
+    ``refine_types``: as in ``extract_sentences``. ``conf_mode``: mention
+    confidence mode, see nnmodel.AntNREModel.extract."""
     from antnre_spark.segment import _SENT_BOUNDARY
 
     turns = turns.select("conv_id", "turn_idx", "text")
@@ -199,8 +225,6 @@ def extract_turns(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _model_for(weights_bc, vocab_bc, model_key)
         for pdf in batches:
-            if pdf.empty:
-                continue
             convs: list = []
             tidxs: list = []
             sidxs: list = []
@@ -219,141 +243,16 @@ def extract_turns(
                     sidxs.append(sent_idx)
                     toks_all.append(_jvm_tokens(piece))
                     sent_idx += 1
-            # token-budget re-chunk — the SAME _budget_bounds rule as the
-            # staged/Arrow paths
-            bounds = _budget_bounds([len(t) for t in toks_all], token_budget)
-            for lo, hi in bounds:
-                toks = toks_all[lo:hi]
-                if not toks:
-                    continue
-                results = model.extract(
-                    toks, refine_types=refine_types, conf_mode=conf_mode
-                )
-                out_m, out_r = _result_lists(results, toks)
-                yield pd.DataFrame(
-                    {
-                        "conv_id": convs[lo:hi],
-                        "turn_idx": pd.array(tidxs[lo:hi], dtype="int32"),
-                        "sent_idx": pd.array(sidxs[lo:hi], dtype="int32"),
-                        "mentions": out_m,
-                        "relations": out_r,
-                    }
-                )
+            yield from _extract_frames(
+                model, convs, tidxs, sidxs, toks_all,
+                token_budget, refine_types, conf_mode,
+            )
 
     return turns.mapInPandas(run, EXTRACTED)
 
 
-def extract_sentences_arrow(
-    sentences: DataFrame,
-    weights_bc,
-    vocab_bc,
-    token_budget: int = TOKEN_BUDGET,
-    model_key: str = "default",
-    repartition_to: int | None = None,
-    refine_types: bool = False,
-    conf_mode: str = "local",
-) -> DataFrame:
-    """mapInArrow variant of extract_sentences (SURVEY.md §2.L): consumes
-    pyarrow RecordBatches directly, skipping the pandas materialization on
-    BOTH sides of the Arrow hop (the model needs plain python token lists
-    either way, so only the frame-building overhead differs). Output is
-    row-identical to extract_sentences — asserted in tests/test_invariants.
-    """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    sentences = sentences.select("conv_id", "turn_idx", "sent_idx", "tokens")
-    if repartition_to:
-        sentences = sentences.repartition(repartition_to)
-    arrow_schema = to_arrow_schema(EXTRACTED)
-    m_type = arrow_schema.field("mentions").type
-    r_type = arrow_schema.field("relations").type
-
-    def run(batches):
-        model = _model_for(weights_bc, vocab_bc, model_key)
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            toks_all = rb.column(3).to_pylist()
-            # token-budget re-chunk — the shared _budget_bounds rule
-            bounds = _budget_bounds([len(t) for t in toks_all], token_budget)
-            for lo, hi in bounds:
-                toks = toks_all[lo:hi]
-                results = model.extract(
-                    toks, refine_types=refine_types, conf_mode=conf_mode
-                )
-                out_m, out_r = _result_lists(results, toks)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        rb.column(0).slice(lo, hi - lo),
-                        rb.column(1).slice(lo, hi - lo),
-                        rb.column(2).slice(lo, hi - lo),
-                        pa.array(out_m, type=m_type),
-                        pa.array(out_r, type=r_type),
-                    ],
-                    schema=arrow_schema,
-                )
-
-    return sentences.mapInArrow(run, EXTRACTED)
-
-
-def extract_conversations(
-    sentences: DataFrame,
-    weights_bc,
-    vocab_bc,
-    token_budget: int = TOKEN_BUDGET,
-    model_key: str = "default",
-    refine_types: bool = False,
-    conf_mode: str = "local",
-) -> DataFrame:
-    """Grouped-map variant (SURVEY.md §2.L): one model batch per
-    conversation via groupBy(conv_id).applyInPandas.
-
-    Use when downstream wants extraction co-partitioned by conv_id (e.g.
-    writing conv-bucketed without a second shuffle) or when a future model
-    consumes cross-sentence conversation context. Costs a shuffle on
-    conv_id and inherits conversation-length skew (the mapInPandas path +
-    round-robin repartition is the default for pure throughput). Output is
-    identical row-for-row to extract_sentences — asserted in
-    tests/test_invariants.py."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        model = _model_for(weights_bc, vocab_bc, model_key)
-        out = []
-        for chunk in _token_chunks(pdf, token_budget):
-            toks = [list(t) for t in chunk["tokens"]]
-            results = model.extract(
-                    toks, refine_types=refine_types, conf_mode=conf_mode
-                )
-            out.append(_results_frame(chunk, toks, results))
-        return (
-            pd.concat(out, ignore_index=True)
-            if out
-            else pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in EXTRACTED.fields}
-            )
-        )
-
-    return sentences.groupBy("conv_id").applyInPandas(run, EXTRACTED)
-
-
-def _results_frame(chunk: pd.DataFrame, toks, results) -> pd.DataFrame:
-    out_m, out_r = _result_lists(results, toks)
-    return pd.DataFrame(
-        {
-            "conv_id": chunk["conv_id"].values,
-            "turn_idx": chunk["turn_idx"].values,
-            "sent_idx": chunk["sent_idx"].values,
-            "mentions": out_m,
-            "relations": out_r,
-        }
-    )
-
-
 def _result_lists(results, toks) -> tuple[list, list]:
-    """Model output -> plain mention/relation dict lists (shared by the
-    pandas and the Arrow stage bodies)."""
+    """Model output -> plain mention/relation dict lists."""
     out_m, out_r = [], []
     for (mentions, relations), tk in zip(results, toks):
         out_m.append(

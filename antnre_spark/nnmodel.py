@@ -27,6 +27,7 @@ Determinism properties relied on by the test suite (SURVEY.md §7.3.2):
 from __future__ import annotations
 
 import json
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
@@ -126,17 +127,17 @@ class AntNREModel:
     """Inference-only joint NER+RE model over whitespace tokens."""
 
     #: char-feature cache bound — ~200k tokens x c_out float32 stays tens
-    #: of MB; a bigger stream of distinct tokens just resets the cache
+    #: of MB; past it each insert evicts the oldest entry
     CHAR_CACHE_MAX = 200_000
 
     def __init__(self, weights: dict[str, np.ndarray], vocab: dict[str, int]):
         self.w = {k: np.asarray(v, dtype=np.float32) for k, v in weights.items()}
         self.vocab = vocab
         self.hidden = self.w["lstm_fw_U"].shape[1]
-        # r8: memoized char-CNN rows (pure per-token function; the model
+        # memoized char-CNN rows (pure per-token function; the model
         # instance lives for the worker's life, so repeated tokens across
         # Arrow batches skip the conv entirely — bit-identical rows)
-        self._char_cache: dict[str, np.ndarray] = {}
+        self._char_cache: OrderedDict[str, np.ndarray] = OrderedDict()
 
     @classmethod
     def from_files(cls, npz_path: str, vocab_path: str) -> "AntNREModel":
@@ -155,25 +156,29 @@ class AntNREModel:
     def _char_feats(self, unique_tokens: list[str]) -> np.ndarray:
         """Char-CNN per unique token: embed -> width-3 conv -> relu -> maxpool.
         (reference's char-CNN word encoder, `[pub: word_encoder.py]`).
-        Rows are memoized per token across calls (see _char_cache)."""
+        Rows are memoized per token across calls in _char_cache, which
+        holds at most CHAR_CACHE_MAX entries (oldest evicted first)."""
         ce, cw, cb = self.w["char_emb"], self.w["char_conv_W"], self.w["char_conv_b"]
         d = ce.shape[1]
         cache = self._char_cache
         out = np.zeros((len(unique_tokens), cw.shape[0]), dtype=np.float32)
-        if len(cache) > self.CHAR_CACHE_MAX:
-            cache.clear()
         for i, tok in enumerate(unique_tokens):
             hit = cache.get(tok)
             if hit is not None:
                 out[i] = hit
                 continue
+            if len(cache) >= self.CHAR_CACHE_MAX:
+                # OrderedDict: O(1) oldest-first eviction, where
+                # del d[next(iter(d))] on a plain dict rescans the
+                # deleted slots at the front on every call
+                cache.popitem(last=False)
             s = tok.lower()[:MAX_TOKEN_LEN]
             ids = np.frombuffer(s.encode("utf-8", "replace"), dtype=np.uint8)
             ids = ids.astype(np.int64) % N_CHAR_BUCKETS
             if len(ids) == 0:
                 # empty token (whitespace-only turn text tokenizes to
                 # [""]): zero char features instead of a zero-size
-                # maxpool crash (r4 adversarial-whitespace test)
+                # maxpool crash (adversarial-whitespace test)
                 cache[tok] = out[i].copy()
                 continue
             emb = ce[ids]  # [L, d]

@@ -40,8 +40,8 @@ class PipelineConfig:
     vocab_json: str
     n_buckets: int = 8
     # explicit model-stage parallelism. None (the default) = do NOT reshuffle
-    # raw sentence text — the petabyte-honest plan where parallelism comes
-    # from upstream bucketing (extract.extract_sentences docstring). Local
+    # raw turn text — the petabyte-honest plan where parallelism comes
+    # from upstream bucketing (extract.extract_turns docstring). Local
     # benchmarks set 10x cores via jobs/extract.py --local-bench.
     repartition_to: int | None = None
     token_budget: int = extract.TOKEN_BUDGET

@@ -3,9 +3,11 @@
 The reference has no streaming; the v1 obligation is incremental batch
 (snapshot diff + idempotent re-extract, antnre_spark/pipeline.py). This
 module is the documented streaming extension: the SAME stage functions
-(segment -> extract -> explode) run inside ``foreachBatch``, so batch and
-streaming share one code path — late-arriving turns are handled either by
-watermarked session windows here or by the next snapshot diff there.
+(fused segment+extract ``extract.extract_turns`` -> explode) run inside
+``foreachBatch``, so batch and streaming share one code path —
+late-arriving turns are handled either by watermarked session windows
+here or by the next snapshot diff there. Both streams run their model
+stage through one helper (``_extracted_batch``).
 
 Scale notes: file-source streaming scales by input-directory partitioning
 (days(ts)/bucket). foreachBatch is at-least-once: a crash between the two
@@ -18,6 +20,9 @@ too.)
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -91,9 +96,9 @@ def streaming_assemble_documents(
     closed_by in {'timeout', 'cap'}). State per key is two arrays + a
     long — O(turns in flight) per conversation, bounded by max_turns.
 
-    ``dedupe`` (r3 verdict task 7): the source is at-least-once, so a
-    replayed file re-delivers turns the assembler already holds — the
-    batch path repairs this with C2 (latest-ts dedup), a stream cannot.
+    ``dedupe``: the source is at-least-once, so a replayed file
+    re-delivers turns the assembler already holds — the batch path
+    repairs this with C2 (latest-ts dedup), a stream cannot.
     ``dropDuplicatesWithinWatermark`` on (conv_id, turn_idx) ahead of
     the stateful assembler drops re-deliveries whose key was seen within
     the watermark (first arrival wins — exactly the replay case, where
@@ -111,7 +116,7 @@ def streaming_assemble_documents(
     # renders ts as tz-NAIVE datetimes in the session timezone, and
     # re-localizing is zone-dependent and DST-unsafe (a fold/gap local
     # time raises AmbiguousTimeError/NonExistentTimeError inside the
-    # stateful UDF and kills the query — r3 ADVICE). An integer column
+    # stateful UDF and kills the query). An integer column
     # sidesteps pandas tz entirely; GroupState timeouts are epoch ms.
     # NOTE the watermarked 'ts' column itself must SURVIVE the projection:
     # EventTimeTimeout analysis rejects a stateful operator whose input
@@ -193,11 +198,12 @@ def start_extraction_stream(
 ) -> StreamingQuery:
     """readStream -> foreachBatch(extract stages) -> IcebergLite append.
 
-    Each micro-batch runs the identical segment/extract/explode pipeline as
-    the batch job; the mention/relation tables are partitioned by
-    ``batch_id`` and each batch OVERWRITES its own partition — a foreachBatch
-    replay after a mid-commit failure replaces rather than duplicates
-    (exactly-once effect from at-least-once delivery)."""
+    Each micro-batch runs the same fused extract/explode stages as the
+    batch job (``_extracted_batch``); the mention/relation tables are
+    partitioned by ``batch_id`` and each batch OVERWRITES its own
+    partition — a foreachBatch replay after a mid-commit failure replaces
+    rather than duplicates (exactly-once effect from at-least-once
+    delivery)."""
     weights_bc, vocab_bc, model_key = extract.broadcast_model(
         spark, weights_npz, vocab_json
     )
@@ -219,7 +225,7 @@ def start_extraction_stream(
 
 
 def kg_stream_tables(out_root: str) -> dict[str, IceLite]:
-    """The incremental-KG stream's sink tables (r4 verdict task 5)."""
+    """The incremental-KG stream's sink tables."""
     return {
         "mentions": IceLite(f"{out_root}/mentions_stream"),
         "relations": IceLite(f"{out_root}/relations_stream"),
@@ -241,7 +247,6 @@ def _link_marker_path(tables: dict[str, IceLite]) -> str:
 def materialize_kg_stream(
     spark: SparkSession,
     tables: dict[str, IceLite],
-    tau: float | None = None,
     skip_if_current: bool = True,
 ) -> None:
     """Phase 2 of the incremental-KG stream, standalone: merge the
@@ -252,9 +257,9 @@ def materialize_kg_stream(
     sound: skipped batches lose nothing durable, and one call after the
     stream drains brings the serving tables current.
 
-    ``skip_if_current`` (r7): a marker file beside the triples table
-    records the (surface_counts, triple_partials) snapshot ids + tau
-    the last relink consumed; when they match the current snapshots
+    ``skip_if_current``: a marker file beside the triples table
+    records the (surface_counts, triple_partials) snapshot ids the last
+    relink consumed; when they match the current snapshots
     the call is a NO-OP. This makes the drain-then-materialize idiom
     free when the final micro-batch already relinked (the
     ``n_batches % link_every == 0`` case paid a full redundant relink
@@ -266,7 +271,7 @@ def materialize_kg_stream(
 
     from antnre_spark import link, materialize
 
-    # snapshot ids BEFORE load() pins the file lists (r7 review): a
+    # snapshot ids BEFORE load() pins the file lists: a
     # commit landing between load and key-read would stamp the marker
     # with data the relink never consumed; reading the key first means
     # a racing commit leaves the marker STALE (older id than the data
@@ -274,7 +279,6 @@ def materialize_kg_stream(
     linked_key = {
         "surface_counts": tables["surface_counts"].current_snapshot(),
         "triple_partials": tables["triple_partials"].current_snapshot(),
-        "tau": tau,
     }
     per_raw_t = tables["surface_counts"].load(spark)
     if per_raw_t is None:
@@ -288,9 +292,7 @@ def materialize_kg_stream(
         except (OSError, ValueError):
             pass  # unreadable marker = just relink
     surfaces = link.merge_surface_counts(per_raw_t.drop("batch_id"))
-    surface_map, entities = link.link_surfaces(
-        surfaces, **({"tau": tau} if tau is not None else {})
-    )
+    surface_map, entities = link.link_surfaces(surfaces)
     try:
         partials_t = tables["triple_partials"].load(spark)
         if partials_t is not None:
@@ -313,6 +315,48 @@ def materialize_kg_stream(
         surface_map.unpersist()
 
 
+@contextmanager
+def _extracted_batch(
+    batch_df: DataFrame, weights_bc, vocab_bc, model_key: str
+) -> Iterator[DataFrame]:
+    """The model stage of one micro-batch, shared by both streams: yields
+    the persisted EXTRACTED frame and releases it when the block exits.
+
+    A file-source micro-batch arrives with one partition per ~input file
+    (2, measured, for the bench's 50k-turn batches), so the turns are
+    hash-partitioned by conv_id to 10x defaultParallelism first — the
+    same sizing the batch pipeline's partition_for_extraction uses.
+    Without it the compute-bound model UDF ran on 2 of 32 cores and the
+    stream read 2.1x the batch wall on identical input.
+
+    The EXTRACTED frame is then repartitioned back DOWN (max(2,
+    parallelism/8)) before the persist that the sink writes share.
+    Persisting at the extraction width made every write schedule one
+    task — and emit one parquet file — per extraction partition
+    (measured: 0.3s -> 2.5s per write at 320), so extraction and write
+    parallelism are decoupled: the UDF runs wide, the small extracted
+    rows cross one cheap round-robin exchange, and the writes scan a
+    handful of persisted partitions. Measured per 50k-turn batch (32
+    cores): extract 14s/2-way -> 3.5s/320-way; phase-1 total
+    11.5-15.5s -> 4.2-4.7s.
+
+    persist, not localCheckpoint: one forward pass shared by the sink
+    writes, then RELEASED — a localCheckpoint here would leak one
+    persisted RDD per micro-batch for the life of the stream
+    (DataFrame.unpersist cannot release localCheckpoint blocks)."""
+    parallelism = batch_df.sparkSession.sparkContext.defaultParallelism
+    turns = assemble.partition_for_extraction(
+        assemble.filter_extractable(batch_df), 10 * parallelism
+    )
+    extracted = extract.extract_turns(
+        turns, weights_bc, vocab_bc, model_key=model_key,
+    ).repartition(max(2, parallelism // 8)).persist()
+    try:
+        yield extracted
+    finally:
+        extracted.unpersist()
+
+
 def process_kg_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -320,35 +364,11 @@ def process_kg_batch(
     weights_bc,
     vocab_bc,
     model_key: str,
-    tau: float | None = None,
     link_every: int = 1,
-    repartition_to: int | None = None,
 ) -> None:
     """One micro-batch of the FULL KG stream: extraction + incremental
-    linking + triple materialization (r4 verdict task 5 — before this,
-    a stream user still had to run the batch link_job afterwards).
-
-    ``repartition_to``: partition count for the extraction stage
-    (default 10x defaultParallelism — the same sizing the batch
-    pipeline's partition_for_extraction uses; pass 0 to keep the
-    source partitioning). THE r7 stream/batch-gap finding: a file-
-    source micro-batch arrives with one partition per ~input file (2,
-    measured, for the bench's 50k-turn batches), so without this
-    reshuffle the compute-bound model UDF ran on 2 of 32 cores and the
-    stream read 2.1x the batch wall on identical input. The extra
-    exchange is the same one the batch path pays, and it hash-
-    partitions by conv_id so downstream grouping reuses it.
-
-    The companion half of the fix: the EXTRACTED frame is repartitioned
-    back DOWN (max(2, parallelism/8)) before the persist that the four
-    sink writes share. Persisting at the extraction width made every
-    write schedule one task — and emit one parquet file — per
-    extraction partition (measured: 0.3s -> 2.5s per write at 320), so
-    extraction parallelism and write parallelism are decoupled: the UDF
-    runs wide, the small extracted rows cross one cheap round-robin
-    exchange, and the writes scan a handful of persisted partitions.
-    Measured per 50k-turn batch (32 cores): extract 14s/2-way -> 3.5s/
-    320-way; phase-1 total 11.5-15.5s -> 4.2-4.7s.
+    linking + triple materialization, so a stream user need not run the
+    batch link_job afterwards.
 
     Two-phase design:
 
@@ -373,23 +393,13 @@ def process_kg_batch(
     amortizes it further: phase 2 runs on every K-th batch only
     (durability never depends on it — the phase-1 writes are complete),
     and one ``materialize_kg_stream`` call after the stream drains
-    brings the serving tables current (r5 scale probe: per-batch merge
-    was 4/46.8s of the 100k-turn run)."""
+    brings the serving tables current (scale probe: per-batch merge
+    was 4/46.8s of a 100k-turn run)."""
     from antnre_spark import link, materialize
 
     if batch_df.isEmpty():
         return
-    parallelism = batch_df.sparkSession.sparkContext.defaultParallelism
-    turns = assemble.filter_extractable(batch_df)
-    n_parts = repartition_to
-    if n_parts is None:
-        n_parts = 10 * parallelism
-    if n_parts:
-        turns = assemble.partition_for_extraction(turns, n_parts)
-    extracted = extract.extract_turns(
-        turns, weights_bc, vocab_bc, model_key=model_key,
-    ).repartition(max(2, parallelism // 8)).persist()
-    try:
+    with _extracted_batch(batch_df, weights_bc, vocab_bc, model_key) as extracted:
         bid = F.lit(batch_id).alias("batch_id")
         mentions = extract.explode_mentions(extracted)
         relations = extract.explode_relations(extracted)
@@ -406,15 +416,13 @@ def process_kg_batch(
             materialize.triple_partials(relations).select("*", bid),
             ["batch_id"],
         )
-    finally:
-        extracted.unpersist()
 
     if (batch_id + 1) % max(link_every, 1) != 0:
         return  # phase 2 amortized to every link_every-th batch
     # materialize_kg_stream handles the all-empty-table case (load()
-    # returns None when no batch has yielded mentions yet — r5
-    # self-review finding) and is idempotent from the tables alone
-    materialize_kg_stream(batch_df.sparkSession, tables, tau=tau)
+    # returns None when no batch has yielded mentions yet) and is
+    # idempotent from the tables alone
+    materialize_kg_stream(batch_df.sparkSession, tables)
 
 
 def start_kg_stream(
@@ -469,24 +477,7 @@ def process_extraction_batch(
     unchanged, because each batch OVERWRITES its own batch_id partition."""
     if batch_df.isEmpty():
         return
-    # persist, not localCheckpoint: one forward pass shared by both sink
-    # writes, then RELEASED — a localCheckpoint here leaks one persisted
-    # RDD per micro-batch for the life of the stream (DataFrame.unpersist
-    # cannot release localCheckpoint blocks). extract_turns = fused
-    # segmentation+extraction, row-identical to the staged path (r4).
-    # partition_for_extraction: file-source micro-batches arrive with one
-    # partition per ~file and would starve the model UDF; the extracted
-    # frame then drops back to a handful of partitions so the two sink
-    # writes don't schedule one task+file per extraction partition (the
-    # r7 stream-gap finding — see process_kg_batch).
-    parallelism = batch_df.sparkSession.sparkContext.defaultParallelism
-    extracted = extract.extract_turns(
-        assemble.partition_for_extraction(
-            assemble.filter_extractable(batch_df), 10 * parallelism
-        ),
-        weights_bc, vocab_bc, model_key=model_key,
-    ).repartition(max(2, parallelism // 8)).persist()
-    try:
+    with _extracted_batch(batch_df, weights_bc, vocab_bc, model_key) as extracted:
         bid = F.lit(batch_id).alias("batch_id")
         ment_t.overwrite_partitions(
             extract.explode_mentions(extracted).select("*", bid), ["batch_id"]
@@ -494,5 +485,3 @@ def process_extraction_batch(
         rel_t.overwrite_partitions(
             extract.explode_relations(extracted).select("*", bid), ["batch_id"]
         )
-    finally:
-        extracted.unpersist()

@@ -70,30 +70,6 @@ class TestPartitionInvariance:
 
 
 class TestGroupedMapVariant:
-    def test_applyinpandas_equals_mapinpandas(
-        self, spark, transcripts_df, model_bcs
-    ):
-        """extract_conversations (grouped map, conv-co-partitioned) must
-        emit exactly the rows of extract_sentences (narrow map)."""
-        w_bc, v_bc, key = model_bcs
-        sample = assemble.filter_extractable(
-            assemble.dedup_turns(transcripts_df.filter(F.col("conv_id") < "c000015"))
-        )
-        sentences = segment.segment_turns(sample)
-        a = {
-            tuple(r)
-            for r in extract.explode_mentions(
-                extract.extract_sentences(sentences, w_bc, v_bc, model_key=key)
-            ).collect()
-        }
-        b = {
-            tuple(r)
-            for r in extract.explode_mentions(
-                extract.extract_conversations(sentences, w_bc, v_bc, model_key=key)
-            ).collect()
-        }
-        assert a == b
-
     def test_fused_segmentation_equals_staged(
         self, spark, transcripts_df, model_bcs
     ):
@@ -204,28 +180,6 @@ class TestGroupedMapVariant:
         }
         for i, s in enumerate(cases):
             assert _jvm_tokens(s) == jvm[i], (i, repr(s))
-
-    def test_mapinarrow_equals_mapinpandas(
-        self, spark, transcripts_df, model_bcs
-    ):
-        """extract_sentences_arrow (mapInArrow, no pandas on either side of
-        the hop) must emit exactly the rows of extract_sentences —
-        including under a token budget small enough to force re-chunking."""
-        w_bc, v_bc, key = model_bcs
-        sample = assemble.filter_extractable(
-            assemble.dedup_turns(transcripts_df.filter(F.col("conv_id") < "c000015"))
-        )
-        sentences = segment.segment_turns(sample)
-        pandas_out = extract.extract_sentences(
-            sentences, w_bc, v_bc, token_budget=64, model_key=key
-        )
-        arrow_out = extract.extract_sentences_arrow(
-            sentences, w_bc, v_bc, token_budget=64, model_key=key
-        )
-        for explode in (extract.explode_mentions, extract.explode_relations):
-            a = {tuple(r) for r in explode(pandas_out).collect()}
-            b = {tuple(r) for r in explode(arrow_out).collect()}
-            assert a == b and a
 
 
 ROLES = st.sampled_from(["user", "assistant", "tool", "system"])

@@ -275,6 +275,38 @@ class TestModelMemo:
         # cached rows equal a fresh, cache-free model's rows
         assert np.array_equal(first, _model()._char_feats(toks))
 
+    def test_char_cache_bounded_on_insert(self, monkeypatch):
+        """The bound holds on every insert, not once per call: one call
+        with 10 distinct tokens under a cap of 3 never holds more than 3
+        rows (oldest evicted first), and every row — and every extracted
+        mention/relation — is bit-identical to a fresh model's."""
+        from collections import OrderedDict
+
+        from antnre_spark.nnmodel import AntNREModel
+
+        toks = [f"tok{i}" for i in range(10)]
+        sents = [toks[:6], toks[4:], toks[::-1], ["John", "works", "at", "Acme"]]
+        fresh = _model()
+        want_rows = fresh._char_feats(toks)
+        want_out = fresh.extract(sents)
+
+        peak = [0]
+
+        class Recording(OrderedDict):
+            def __setitem__(self, key, value):
+                super().__setitem__(key, value)
+                peak[0] = max(peak[0], len(self))
+
+        monkeypatch.setattr(AntNREModel, "CHAR_CACHE_MAX", 3)
+        m = _model()
+        m._char_cache = Recording()
+        got_rows = m._char_feats(toks)
+        assert list(m._char_cache) == toks[-3:]
+        assert np.array_equal(got_rows, want_rows)
+        assert np.array_equal(m._char_feats(toks[::-1]), want_rows[::-1])
+        assert m.extract(sents) == want_out
+        assert 0 < peak[0] <= 3
+
     def test_encode_full_ids_match_token_ids(self):
         m = _model()
         batch = [["John", "works", "at", "Acme"], ["short"], []]

@@ -84,6 +84,40 @@ class TestExtractionStream:
         assert dupes == 0
 
 
+    def test_extraction_and_kg_streams_write_same_rows(
+        self, spark, stream_dirs, fixture_paths
+    ):
+        """Both streams run their model stage through one helper, so over
+        the same drops they write identical mention and relation rows."""
+        from antnre_spark.icelite import IceLite
+
+        outs = {}
+        for name, start in (
+            ("extract", streaming.start_extraction_stream),
+            ("kg", streaming.start_kg_stream),
+        ):
+            out = f"{stream_dirs['out']}_{name}"
+            start(
+                spark,
+                stream_dirs["in"],
+                out,
+                fixture_paths["weights"],
+                fixture_paths["vocab"],
+                f"{stream_dirs['ckpt']}_{name}",
+            ).awaitTermination(300)
+            outs[name] = out
+        for table in ("mentions_stream", "relations_stream"):
+            a, b = (
+                {
+                    tuple(r)
+                    for r in IceLite(f"{outs[n]}/{table}")
+                    .load(spark).drop("batch_id").collect()
+                }
+                for n in ("extract", "kg")
+            )
+            assert a == b and a, table
+
+
 class TestKgStream:
     def test_stream_triples_match_batch_link_job(
         self, spark, stream_dirs, fixture_paths, transcripts_df
