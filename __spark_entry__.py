@@ -2713,8 +2713,7 @@ def _tr_pair_sql(sf_dir: str | None = None) -> str:
     sys.path.insert(0, REPO)
     import numpy as np
 
-    from antnre_spark.encoder_grad import _rel_pairs_for_sentence
-    from antnre_spark.nnmodel import REL_TYPES, AntNREModel
+    from antnre_spark.nnmodel import MAX_PAIR_DISTANCE, REL_TYPES, AntNREModel
 
     sf = sf_dir or _oracle_sf_dir()
     _ensure_fixtures()
@@ -2736,15 +2735,19 @@ def _tr_pair_sql(sf_dir: str | None = None) -> str:
             i: hidden[b:e].mean(axis=0) for i, (b, e, _t) in enumerate(span_list)
         }
         zeros = np.zeros(hidden.shape[1], dtype=hidden.dtype)
-        for i, j, lo, hi, label in _rel_pairs_for_sentence(span_list, gold_rels):
-            between = hidden[lo:hi].mean(axis=0) if hi > lo else zeros
-            feat = np.concatenate([span_vecs[i], span_vecs[j], between])
-            fs = round(float(np.asarray(feat, dtype=np.float64).sum()), 6)
-            fh = round(float(feat[0]), 6)
-            values.append(
-                f"({r['sent_id']}, {i}, {j}, {label}, "
-                f"'{fs!r}'::DOUBLE, '{fh!r}'::DOUBLE)"
-            )
+        for i, (bi, ei, _ti) in enumerate(span_list):
+            for j, (bj, ej, _tj) in enumerate(span_list):
+                if i == j or abs(bi - bj) > MAX_PAIR_DISTANCE:
+                    continue
+                lo, hi = min(ei, ej), max(bi, bj)
+                between = hidden[lo:hi].mean(axis=0) if hi > lo else zeros
+                feat = np.concatenate([span_vecs[i], span_vecs[j], between])
+                fs = round(float(np.asarray(feat, dtype=np.float64).sum()), 6)
+                fh = round(float(feat[0]), 6)
+                values.append(
+                    f"({r['sent_id']}, {i}, {j}, {gold_rels.get((i, j), 0)}, "
+                    f"'{fs!r}'::DOUBLE, '{fh!r}'::DOUBLE)"
+                )
     if not values:
         return "SELECT 0 AS sent_id, 0 AS subj, 0 AS obj, 0 AS label, 0.0 AS feat_sum, 0.0 AS feat_head WHERE FALSE"
     return (

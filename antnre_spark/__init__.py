@@ -17,7 +17,8 @@ Modules map to SURVEY.md §2 operator families:
   session      SparkSession builder with scale-oriented defaults
   assemble     C1 window-ordered document assembly, C2 turn dedup, C3 sessions
   segment      D1 sentence split, D2 tokenize, D3 vocabulary
-  nnmodel      pure-numpy BiLSTM-CRF + span-pair MLP (no pyspark imports)
+  nnmodel      pure-numpy BiLSTM-CRF + span-pair MLP: the one forward that
+               inference and training share (no pyspark imports)
   extract      E+F mention & relation extraction as one mapInPandas stage
   link         G1-G7 MinHash/LSH/connected-components entity linking
   materialize  H1-H5 triple dedup, vertex/edge assembly, degree stats
@@ -54,10 +55,11 @@ Modules map to SURVEY.md §2 operator families:
                minimum-risk fine-tuning (fit_mrt, EMNLP'18-style k-best
                expected span-F1 risk); all data-parallel gradient
                all-reduce, optional per-epoch Bernoulli minibatching
-  encoder_grad pure-numpy CRF forward/backward + full encoder backprop
-               (masked-BiLSTM BPTT, char-CNN maxpool routing, embedding
-               scatter-adds) + k-best MRT gradients — every array
-               finite-difference-pinned (no pyspark imports)
+  encoder_grad pure-numpy CRF NLL + full encoder backprop (masked-BiLSTM
+               BPTT, char-CNN maxpool routing, embedding scatter-adds)
+               + k-best MRT gradients over nnmodel's forward functions
+               — every array finite-difference-pinned (no pyspark
+               imports)
   iceberg_adapter flag-guarded real-Iceberg twin of the IceLite surface
   evaluate     CoNLL04-style P/R/F1 vs the golden oracle tables
   sources      CoNLL04-format corpus reader/writer

@@ -1,32 +1,31 @@
 """CRF sequence loss + full encoder backprop (pure numpy, NO pyspark).
 
-Round-5 capability closure: the reference *trains* its joint model — a
-BiLSTM-CRF mention detector plus a span-pair relation classifier
-(BASELINE.json:6; SURVEY.md §2.E/§2.F, `[pub: antNRE/src/seq_decoder.py,
-entrel/train]` unverified) — while this engine's encoder was
-inference-only through round 4 (only the relation-decoder head trained,
-antnre_spark/train.py). This module supplies the missing machinery:
+The reference *trains* its joint model — a BiLSTM-CRF mention detector
+plus a span-pair relation classifier (BASELINE.json:6; SURVEY.md
+§2.E/§2.F, `[pub: antNRE/src/seq_decoder.py, entrel/train]` unverified).
+The forward math is nnmodel's (char_row, encode_padded, crf_lattice,
+pair_features), run in the training dtype with backward caches; this
+module adds the losses and the backward passes:
 
-- ``crf_nll_grad``: the CRF forward algorithm (log-partition), the
-  backward pass (posterior unary + pairwise marginals), and from them the
-  exact gradients of the negative log-likelihood w.r.t. emissions and the
-  transition matrix. The same BIO structural constraints used at decode
-  time (nnmodel.CRF_CONSTRAINTS / START_CONSTRAINTS) are applied as
-  additive constants inside the partition function, so training optimizes
-  the *constrained* distribution Viterbi decodes from.
-- ``encoder_forward``: a cache-keeping replica of nnmodel.encode — same
-  architecture, same masking semantics (pad steps carry LSTM state
-  through), same char-CNN (embed → width-3 conv → relu → maxpool), same
-  additive gazetteer emissions — run in float64 so finite-difference
-  gradient checks are meaningful.
+- ``crf_nll_grad``: the CRF negative log-likelihood from the
+  crf_lattice log-partition, the posterior unary + pairwise marginals,
+  and from them the exact gradients w.r.t. emissions and the transition
+  matrix. The same BIO structural constraints used at decode time
+  (nnmodel.CRF_CONSTRAINTS / START_CONSTRAINTS) are applied as additive
+  constants inside the partition function, so training optimizes the
+  *constrained* distribution Viterbi decodes from.
+- ``encoder_forward``: nnmodel's padded forward, keeping the caches the
+  backward needs — float64 so finite-difference gradient checks are
+  meaningful, or float32 for the corpus-scale path.
 - ``encoder_backward``: backprop through emissions → BiLSTM (BPTT with
   the mask-carry rule) → input concat → word embeddings (scatter-add)
   and the char-CNN (maxpool argmax routing, relu mask, conv weights,
   char-embedding scatter-add).
 - ``batch_loss_grad``: the per-Arrow-batch unit the distributed trainer
   calls — one padded forward, per-sentence CRF NLL, optional *joint*
-  relation cross-entropy over gold-span pairs whose feature gradient
-  flows back into the encoder hidden states, one shared backward.
+  relation cross-entropy over gold-span pairs (nnmodel.pair_features)
+  whose feature gradient flows back into the encoder hidden states, one
+  shared backward.
 
 Everything here returns SUMS (loss sums, gradient sums, token counts):
 sums compose across partitions, so the Spark layer (train.py) is a pure
@@ -35,8 +34,8 @@ in shape to the proven relation-decoder trainer.
 
 Gradient correctness is pinned by central finite differences at random
 parameter coordinates for every trainable array (tests/test_train_encoder
-.py); forward parity with the inference model is pinned by an
-emissions-equality test against nnmodel.encode.
+.py); tests/test_encoder_grad.py pins the float32 forward equal to
+nnmodel.encode.
 """
 
 from __future__ import annotations
@@ -45,13 +44,13 @@ import numpy as np
 
 from antnre_spark.nnmodel import (
     CRF_CONSTRAINTS,
-    MAX_PAIR_DISTANCE,
-    MAX_TOKEN_LEN,
-    N_CHAR_BUCKETS,
     N_TAGS,
     START_CONSTRAINTS,
     TAGS,
-    UNK_ID,
+    char_row,
+    crf_lattice,
+    encode_padded,
+    pair_features,
 )
 
 # canonical flattening order for the encoder gradient vector. gaz_emis is
@@ -78,9 +77,9 @@ ENC_PARAMS = (
 
 REL_PARAMS = ("rel_W1", "rel_b1", "rel_W2", "rel_b2")
 
-# F4 GCN type-refinement head (r5 verdict task 2 — the last
-# fixture-only parameter set): trained jointly with the encoder when
-# fit_joint(refine=True), teacher-forced on the GOLD mention graph.
+# F4 GCN type-refinement head (the last fixture-only parameter set):
+# trained jointly with the encoder when fit_joint(refine=True),
+# teacher-forced on the GOLD mention graph.
 GCN_PARAMS = ("gcn_W", "gcn_type_W", "gcn_type_b")
 
 
@@ -135,25 +134,12 @@ def crf_nll_grad(
         return 0.0, np.zeros_like(emissions), np.zeros_like(transitions)
     em = emissions.astype(np.float64)
     trans = transitions.astype(np.float64) + CRF_CONSTRAINTS.astype(np.float64)
-    start = START_CONSTRAINTS.astype(np.float64)
-
-    # forward (alpha) in log space
-    alpha = np.zeros((T, N_TAGS), dtype=np.float64)
-    alpha[0] = em[0] + start
-    for t in range(1, T):
-        alpha[t] = _logsumexp(alpha[t - 1][:, None] + trans, axis=0) + em[t]
+    alpha, beta = crf_lattice(em, trans)
     logZ = float(_logsumexp(alpha[T - 1], axis=0))
-
-    # backward (beta) in log space
-    beta = np.zeros((T, N_TAGS), dtype=np.float64)
-    for t in range(T - 2, -1, -1):
-        beta[t] = _logsumexp(trans + em[t + 1] + beta[t + 1], axis=1)
-
-    # unary marginals
-    gamma = np.exp(alpha + beta - logZ)  # [T, n_tags]
+    gamma = np.exp(alpha + beta - logZ)  # unary marginals [T, n_tags]
 
     # gold path score
-    gold = float(em[np.arange(T), tags].sum() + start[tags[0]])
+    gold = float(em[np.arange(T), tags].sum() + START_CONSTRAINTS[tags[0]])
     if T > 1:
         gold += float(trans[tags[:-1], tags[1:]].sum())
     nll = logZ - gold
@@ -175,13 +161,13 @@ def crf_nll_grad(
 def crf_nll_grad_many(
     emissions: np.ndarray, tags: np.ndarray, transitions: np.ndarray
 ) -> tuple[float, np.ndarray, np.ndarray]:
-    """Batched crf_nll_grad over B same-length sentences (r5 verdict
-    task 3 — the length-bucketed lattice): ``emissions`` [B, T, n_tags],
+    """Batched crf_nll_grad over B same-length sentences (the
+    length-bucketed lattice): ``emissions`` [B, T, n_tags],
     ``tags`` [B, T] -> (nll SUM, d_emissions [B, T, n_tags],
     d_transitions SUM). One Python T-loop per length group instead of
     one per sentence; each step is a [B, N, N] numpy op, so the
-    per-timestep interpreter overhead (the r5 judge's hot-loop finding
-    at the old :160) amortizes over the batch. Math is identical to the
+    per-timestep interpreter overhead (a measured hot loop of the
+    scalar path) amortizes over the batch. Math is identical to the
     scalar path (pinned by the equivalence test); always float64 — the
     lattice is tiny, stability matters."""
     B, T = tags.shape
@@ -238,76 +224,6 @@ def crf_nll_grad_many(
 
 # ---------------------------------------------------------------------------
 # encoder forward with caches + backward
-
-
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-x))
-
-
-def _char_forward(
-    w: dict[str, np.ndarray], unique_tokens: list[str]
-) -> tuple[np.ndarray, list[dict | None]]:
-    """Char-CNN features per unique token (in the weights' dtype) +
-    backward caches. Mirrors nnmodel._char_feats: lowercase,
-    MAX_TOKEN_LEN truncation, utf-8 byte buckets, zero-pad conv windows,
-    relu, per-channel maxpool. Empty tokens get zero features and no
-    cache (no gradient)."""
-    ce = w["char_emb"]
-    cw, cb = w["char_conv_W"], w["char_conv_b"]
-    d = ce.shape[1]
-    feats = np.zeros((len(unique_tokens), cw.shape[0]), dtype=ce.dtype)
-    caches: list[dict | None] = []
-    for i, tok in enumerate(unique_tokens):
-        s = tok.lower()[:MAX_TOKEN_LEN]
-        ids = np.frombuffer(s.encode("utf-8", "replace"), dtype=np.uint8)
-        ids = ids.astype(np.int64) % N_CHAR_BUCKETS
-        if len(ids) == 0:
-            caches.append(None)
-            continue
-        emb = ce[ids]  # [L, d]
-        pad = np.zeros((1, d), dtype=ce.dtype)
-        padded = np.vstack([pad, emb, pad])
-        wins = np.concatenate([padded[:-2], padded[1:-1], padded[2:]], axis=1)
-        pre = wins @ cw.T + cb  # [L, c_out]
-        conv = np.maximum(pre, 0.0)
-        am = conv.argmax(axis=0)  # [c_out] row index per channel
-        feats[i] = conv[am, np.arange(cw.shape[0])]
-        caches.append({"ids": ids, "wins": wins, "pre": pre, "am": am})
-    return feats, caches
-
-
-def _lstm_forward(
-    w: dict[str, np.ndarray], x: np.ndarray, mask: np.ndarray, direction: str
-) -> tuple[np.ndarray, list[dict]]:
-    """Masked LSTM forward [B, T, in] -> out [B, T, h] + per-step caches.
-    Same recurrence and mask-carry semantics as nnmodel._lstm_dir."""
-    W = w[f"lstm_{direction}_W"]
-    U = w[f"lstm_{direction}_U"]
-    b = w[f"lstm_{direction}_b"]
-    B, T, _ = x.shape
-    H = U.shape[1]
-    h = np.zeros((B, H), dtype=x.dtype)
-    c = np.zeros((B, H), dtype=x.dtype)
-    out = np.zeros((B, T, H), dtype=x.dtype)
-    steps = range(T) if direction == "fw" else range(T - 1, -1, -1)
-    caches: list[dict] = []
-    for t in steps:
-        g = x[:, t, :] @ W.T + h @ U.T + b
-        i = _sigmoid(g[:, :H])
-        f = _sigmoid(g[:, H : 2 * H])
-        gg = np.tanh(g[:, 2 * H : 3 * H])
-        o = _sigmoid(g[:, 3 * H :])
-        c_new = f * c + i * gg
-        h_new = o * np.tanh(c_new)
-        m = mask[:, t : t + 1]
-        caches.append(
-            {"t": t, "i": i, "f": f, "gg": gg, "o": o,
-             "c_prev": c, "h_prev": h, "c_new": c_new, "m": m}
-        )
-        c = m * c_new + (1.0 - m) * c
-        h = m * h_new + (1.0 - m) * h
-        out[:, t, :] = h * m
-    return out, caches
 
 
 def _lstm_backward(
@@ -369,68 +285,41 @@ def encoder_forward(
     vocab: dict[str, int],
     dtype: type = np.float64,
 ) -> dict:
-    """One padded forward over a batch of sentences; returns a cache dict
-    with per-sentence (hidden [L, 2h], emissions [L, n_tags]) plus
-    everything the backward needs. Same math as nnmodel.encode (asserted
-    by the parity test), minus the length-bucketing — the caller chunks
-    batches by token budget instead.
+    """nnmodel's forward (char_row + encode_padded) over one padded batch
+    in ``dtype``, keeping the backward caches: returns a cache dict with
+    per-sentence (hidden [L, 2h], emissions [L, n_tags]) plus everything
+    encoder_backward needs. No length-bucketing — the caller chunks
+    batches — so on a length-sorted batch of at most nnmodel.SUB_BATCH
+    sentences the float32 result equals nnmodel.encode bit for bit.
 
     ``dtype``: float64 (default) for finite-difference-grade exactness;
-    float32 for the corpus-scale training path (r5 verdict task 3 — the
-    BPTT matmuls are memory-bandwidth-bound on wide arrays, and the
-    float32 isolate measured 0.887 N->4N vs float64's 0.81 kernel
-    ceiling on this box). The CRF lattice stays float64 either way
-    (tiny [N_TAGS] arrays; log-space stability is worth more than
-    bandwidth there)."""
+    float32 for the corpus-scale training path (the BPTT matmuls are
+    memory-bandwidth-bound on wide arrays; a float32 kernel isolate
+    measured 0.887 N->4N scaling efficiency vs float64's 0.81).
+    The CRF lattice stays float64 either way (tiny [N_TAGS] arrays;
+    log-space stability is worth more than bandwidth there)."""
     w64 = {k: np.asarray(v, dtype=dtype) for k, v in w.items() if k in ENC_PARAMS}
-    emb, gaz = w64["word_emb"], w64["gaz_emis"]
-    eW, eb = w64["emit_W"], w64["emit_b"]
-    cdim = w64["char_conv_W"].shape[0]
-    B = len(tokens_batch)
-    lens = [len(t) for t in tokens_batch]
-    T = max(lens) if lens else 0
-
     uniq = sorted({t for toks in tokens_batch for t in toks})
-    char_feats, char_caches = _char_forward(w64, uniq)
-    uniq_pos = {t: i for i, t in enumerate(uniq)}
-
-    x = np.zeros((B, T, emb.shape[1] + cdim), dtype=dtype)
-    mask = np.zeros((B, T), dtype=dtype)
-    ids_all: list[np.ndarray] = []
-    for bi, toks in enumerate(tokens_batch):
-        ids = np.array([vocab.get(t.lower(), UNK_ID) for t in toks], dtype=np.int64)
-        ids_all.append(ids)
-        L = len(toks)
-        mask[bi, :L] = 1.0
-        if L:
-            x[bi, :L, : emb.shape[1]] = emb[ids]
-            x[bi, :L, emb.shape[1] :] = char_feats[
-                [uniq_pos[t] for t in toks]
-            ]
-    fw_out, fw_caches = _lstm_forward(w64, x, mask, "fw")
-    bw_out, bw_caches = _lstm_forward(w64, x, mask, "bw")
-    hid = np.concatenate([fw_out, bw_out], axis=2)  # [B, T, 2h]
-    emis = hid @ eW + eb  # [B, T, n_tags]
-    hidden = [hid[bi, :L, :] for bi, L in enumerate(lens)]
-    emissions = [
-        emis[bi, :L, :] + gaz[ids_all[bi]] for bi, L in enumerate(lens)
-    ]
-    return {
+    cache: dict = {
         "w64": w64,
         "tokens_batch": tokens_batch,
-        "lens": lens,
-        "x": x,
-        "mask": mask,
-        "ids_all": ids_all,
         "uniq": uniq,
-        "uniq_pos": uniq_pos,
-        "char_caches": char_caches,
-        "fw_caches": fw_caches,
-        "bw_caches": bw_caches,
-        "hid": hid,
-        "hidden": hidden,
-        "emissions": emissions,
+        "uniq_pos": {t: i for i, t in enumerate(uniq)},
+        "char_caches": [],
     }
+    char_map = {t: char_row(w64, t, cache["char_caches"]) for t in uniq}
+    hid, emis, ids_all = encode_padded(w64, vocab, tokens_batch, char_map, sink=cache)
+    lens = [len(t) for t in tokens_batch]
+    cache.update(
+        lens=lens,
+        ids_all=ids_all,
+        hid=hid,
+        hidden=[hid[bi, :L, :] for bi, L in enumerate(lens)],
+        emissions=[
+            emis[bi, :L, :] + w64["gaz_emis"][ids_all[bi]] for bi, L in enumerate(lens)
+        ],
+    )
+    return cache
 
 
 def encoder_backward(
@@ -532,7 +421,7 @@ def kbest_viterbi(
     """Constrained k-best decode: returns up to k (score, tag_ids) pairs,
     best first. Same BIO constraints and additive-constant handling as
     crf_nll_grad/viterbi; ties break toward the lower source state, then
-    the earlier rank (deterministic). Backpointer k-best DP (r5 ADVICE):
+    the earlier rank (deterministic). Backpointer k-best DP:
     each (t, state, rank) cell stores (score, src_state, src_rank) — O(1)
     per entry — and the k paths are reconstructed once at the end, so
     per-step work is O(N_TAGS^2 * k) instead of the old path-tuple DP's
@@ -689,7 +578,7 @@ def batch_mrt_grad(
 
 
 # ---------------------------------------------------------------------------
-# F4 GCN type-refinement training (r5 verdict task 2)
+# F4 GCN type-refinement training
 
 
 def gcn_grad_loss(
@@ -765,23 +654,6 @@ def gcn_grad_loss(
 # joint per-batch loss/grad (the distributed-trainer unit)
 
 
-def _rel_pairs_for_sentence(
-    spans: list[tuple[int, int, str]],
-    gold_rels: dict[tuple[int, int], int],
-) -> list[tuple[int, int, int, int, int]]:
-    """Admissible ordered gold-span pairs (i, j, lo, hi, label) — the
-    identical admissibility rule as nnmodel.classify_relations /
-    train._pair_rows (MAX_PAIR_DISTANCE on begin offsets)."""
-    out = []
-    for i, (bi, ei, _ti) in enumerate(spans):
-        for j, (bj, ej, _tj) in enumerate(spans):
-            if i == j or abs(bi - bj) > MAX_PAIR_DISTANCE:
-                continue
-            lo, hi = min(ei, ej), max(bi, bj)
-            out.append((i, j, lo, hi, gold_rels.get((i, j), 0)))
-    return out
-
-
 def rel_grad_loss_dX(
     X: np.ndarray, y: np.ndarray, rel_w: dict[str, np.ndarray]
 ) -> tuple[dict[str, np.ndarray], np.ndarray, float]:
@@ -832,7 +704,7 @@ def batch_loss_grad(
     backprops BOTH losses through the shared encoder — joint training.
     ``gcn_weight``: > 0 additionally trains the F4 GCN type-refinement
     head (gcn_grad_loss) on the gold mention graph, its feature gradient
-    also flowing into the shared encoder (r5 verdict task 2).
+    also flowing into the shared encoder.
     ``dtype``: encoder forward/backward precision — float64 (exact,
     finite-difference-grade) or float32 (the corpus-scale path; the CRF
     lattice and all loss sums stay float64 regardless).
@@ -849,7 +721,7 @@ def batch_loss_grad(
     crf_loss, n_tokens = 0.0, 0
     trans = np.asarray(weights["crf_transitions"], dtype=np.float64)
     d_trans = np.zeros_like(trans)
-    # length-bucketed lattice (r5 verdict task 3): one batched
+    # length-bucketed lattice: one batched
     # crf_nll_grad_many per exact sentence length — the per-timestep
     # Python loop amortizes over every same-length sentence in the batch
     by_len: dict[int, list[int]] = {}
@@ -875,27 +747,15 @@ def batch_loss_grad(
     rel_grads = {k: np.zeros(rel_shapes[k], dtype=np.float64) for k in REL_PARAMS}
     rel_loss, n_pairs = 0.0, 0
     if rel_weight > 0.0:
-        feats, labels, meta = [], [], []
+        blocks, labels, meta = [], [], []
         for si, sent in enumerate(sentences):
-            spans = sent["spans"]
-            if len(spans) < 2:
-                continue
-            hid = cache["hidden"][si]
-            zeros = np.zeros(hid.shape[1], dtype=np.float64)
-            span_vecs = {
-                i: hid[b:e].mean(axis=0) for i, (b, e, _t) in enumerate(spans)
-            }
-            for i, j, lo, hi, label in _rel_pairs_for_sentence(
-                spans, sent["rels"]
-            ):
-                between = hid[lo:hi].mean(axis=0) if hi > lo else zeros
-                feats.append(
-                    np.concatenate([span_vecs[i], span_vecs[j], between])
-                )
-                labels.append(label)
+            pairs, X = pair_features(cache["hidden"][si], sent["spans"])
+            blocks.append(X)
+            for i, j, lo, hi in pairs:
+                labels.append(sent["rels"].get((i, j), 0))
                 meta.append((si, i, j, lo, hi))
-        if feats:
-            X = np.stack(feats)
+        if meta:
+            X = np.concatenate(blocks)
             y = np.asarray(labels, dtype=np.int64)
             rg, dX, rl = rel_grad_loss_dX(X, y, weights)
             rel_loss = rl

@@ -2,11 +2,17 @@
 
 Re-expresses what the reference computes — a BiLSTM-CRF-style span/mention
 detector and a span-pair relation classifier (BASELINE.json:6; SURVEY.md
-§2.E/§2.F, `[pub: antNRE/src/*]` unverified) — as a deterministic,
-inference-only numpy forward pass. Weights are immutable fixtures
-(fixtures/gen_weights.py, SURVEY.md §5.4): seeded random inits plus
-gazetteer/trigger-lexicon emission nudges so the tiny model discriminates the
-fixture vocabulary. Training is out of scope (SURVEY.md §3.1).
+§2.E/§2.F, `[pub: antNRE/src/*]` unverified) — as a deterministic numpy
+forward pass. The fixture weights (fixtures/gen_weights.py, SURVEY.md §5.4)
+are seeded random inits plus gazetteer/trigger-lexicon emission nudges so
+the tiny model discriminates the fixture vocabulary.
+
+The forward math has one home: the module-level functions ``char_row``,
+``lstm_dir``, ``encode_padded``, ``crf_lattice`` and ``pair_features``
+take a weight dict and compute in its dtype. ``AntNREModel`` runs them in
+float32 for inference; the trainer (encoder_grad.py, train.py) runs the
+same functions in float64 or float32, passing a ``sink`` where it needs
+the backward caches.
 
 This module is imported BOTH by the Spark extraction stage (inside
 mapInPandas workers) and by the single-process oracle
@@ -87,7 +93,7 @@ def _sigmoid(x: np.ndarray) -> np.ndarray:
 
 def _mean0(seg: np.ndarray) -> np.ndarray:
     """Bit-exact ``seg.mean(axis=0)`` for 2-D float segments without the
-    per-call dispatch overhead (r8): numpy's _mean is exactly
+    per-call dispatch overhead: numpy's _mean is exactly
     ``umr_sum(arr, axis)`` followed by ``true_divide(ret, count,
     out=ret, casting='unsafe')`` — reproduced verbatim, so values are
     identical to the last bit (same pairwise reduction, same in-place
@@ -123,8 +129,170 @@ START_CONSTRAINTS = np.array(
 )
 
 
+# ---- forward functions shared by inference and training -----------------
+
+
+def char_row(
+    w: dict[str, np.ndarray], tok: str, sink: list | None = None
+) -> np.ndarray:
+    """Char-CNN feature row of one token: embed -> width-3 conv -> relu ->
+    maxpool (the reference's char-CNN word encoder,
+    `[pub: word_encoder.py]`). An empty token (whitespace-only turn text
+    tokenizes to [""]) gets a zero row instead of a zero-size maxpool.
+    ``sink``: append the backward cache (None for an empty token)."""
+    ce, cw, cb = w["char_emb"], w["char_conv_W"], w["char_conv_b"]
+    s = tok.lower()[:MAX_TOKEN_LEN]
+    ids = np.frombuffer(s.encode("utf-8", "replace"), dtype=np.uint8)
+    ids = ids.astype(np.int64) % N_CHAR_BUCKETS
+    if len(ids) == 0:
+        if sink is not None:
+            sink.append(None)
+        return np.zeros(cw.shape[0], dtype=ce.dtype)
+    pad = np.zeros((1, ce.shape[1]), dtype=ce.dtype)
+    padded = np.vstack([pad, ce[ids], pad])
+    wins = np.concatenate([padded[:-2], padded[1:-1], padded[2:]], axis=1)  # [L, 3d]
+    pre = wins @ cw.T + cb  # [L, c_out]
+    conv = np.maximum(pre, 0.0)
+    if sink is not None:
+        sink.append({"ids": ids, "wins": wins, "pre": pre, "am": conv.argmax(axis=0)})
+    return conv.max(axis=0)
+
+
+def lstm_dir(
+    w: dict[str, np.ndarray],
+    x: np.ndarray,
+    mask: np.ndarray,
+    direction: str,
+    sink: list | None = None,
+) -> np.ndarray:
+    """Masked LSTM over padded batch [B, T, in] -> [B, T, h].
+
+    Pad steps carry state through unchanged, so each row's outputs are
+    independent of pad length and of the other rows in the batch.
+    ``sink``: append one backward cache per step, in step order.
+    """
+    W = w[f"lstm_{direction}_W"]  # [4h, in]
+    U = w[f"lstm_{direction}_U"]  # [4h, h]
+    b = w[f"lstm_{direction}_b"]  # [4h]
+    B, T, _ = x.shape
+    H = U.shape[1]
+    h = np.zeros((B, H), dtype=x.dtype)
+    c = np.zeros((B, H), dtype=x.dtype)
+    out = np.zeros((B, T, H), dtype=x.dtype)
+    steps = range(T) if direction == "fw" else range(T - 1, -1, -1)
+    for t in steps:
+        g = x[:, t, :] @ W.T + h @ U.T + b  # [B, 4h]
+        i = _sigmoid(g[:, :H])
+        f = _sigmoid(g[:, H : 2 * H])
+        gg = np.tanh(g[:, 2 * H : 3 * H])
+        o = _sigmoid(g[:, 3 * H :])
+        c_new = f * c + i * gg
+        h_new = o * np.tanh(c_new)
+        m = mask[:, t : t + 1]
+        if sink is not None:
+            sink.append(
+                {"t": t, "i": i, "f": f, "gg": gg, "o": o,
+                 "c_prev": c, "h_prev": h, "c_new": c_new, "m": m}
+            )
+        c = m * c_new + (1.0 - m) * c
+        h = m * h_new + (1.0 - m) * h
+        out[:, t, :] = h * m
+    return out
+
+
+def encode_padded(
+    w: dict[str, np.ndarray],
+    vocab: dict[str, int],
+    tokens_batch: list[list[str]],
+    char_map: dict[str, np.ndarray],
+    sink: dict | None = None,
+) -> tuple[np.ndarray, np.ndarray, list[np.ndarray]]:
+    """One padded BiLSTM forward over a batch of sentences: returns
+    (hid [B, T, 2h], emissions [B, T, n_tags] WITHOUT the per-token
+    gaz_emis term, per-sentence token-id arrays). ``char_map`` maps every
+    token of the batch to its char_row. ``sink``: a dict that receives the
+    padded input ``x``, ``mask`` and the per-direction step caches
+    ``fw_caches`` / ``bw_caches``."""
+    emb, eW, eb = w["word_emb"], w["emit_W"], w["emit_b"]
+    wdim = emb.shape[1]
+    B = len(tokens_batch)
+    T = max((len(t) for t in tokens_batch), default=0)
+    x = np.zeros((B, T, wdim + w["char_conv_W"].shape[0]), dtype=emb.dtype)
+    mask = np.zeros((B, T), dtype=emb.dtype)
+    ids_all = []
+    for bi, toks in enumerate(tokens_batch):
+        ids = np.array([vocab.get(t.lower(), UNK_ID) for t in toks], dtype=np.int64)
+        ids_all.append(ids)
+        mask[bi, : len(toks)] = 1.0
+        x[bi, : len(toks), :wdim] = emb[ids]
+        for p, t in enumerate(toks):
+            x[bi, p, wdim:] = char_map[t]
+    fw_sink = bw_sink = None
+    if sink is not None:
+        fw_sink, bw_sink = [], []
+        sink.update(x=x, mask=mask, fw_caches=fw_sink, bw_caches=bw_sink)
+    fw = lstm_dir(w, x, mask, "fw", fw_sink)
+    bw = lstm_dir(w, x, mask, "bw", bw_sink)
+    hid = np.concatenate([fw, bw], axis=2)  # [B, T, 2h]
+    return hid, hid @ eW + eb, ids_all
+
+
+def crf_lattice(em: np.ndarray, trans: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Log-space forward (alpha) and backward (beta) lattices [T, n_tags]
+    of the CONSTRAINED CRF, for float64 emissions [T, n_tags] (T >= 1)
+    and a transition matrix that already includes CRF_CONSTRAINTS;
+    START_CONSTRAINTS enter alpha[0]. logsumexp(alpha[-1]) is the
+    log-partition and alpha + beta the unnormalized log-marginals."""
+    T = em.shape[0]
+    alpha = np.zeros((T, N_TAGS), dtype=np.float64)
+    alpha[0] = em[0] + START_CONSTRAINTS
+    for t in range(1, T):
+        prev = alpha[t - 1][:, None] + trans
+        m = prev.max(axis=0)
+        alpha[t] = m + np.log(np.exp(prev - m).sum(axis=0)) + em[t]
+    beta = np.zeros((T, N_TAGS), dtype=np.float64)
+    for t in range(T - 2, -1, -1):
+        nxt = trans + em[t + 1][None, :] + beta[t + 1][None, :]
+        m = nxt.max(axis=1)
+        beta[t] = m + np.log(np.exp(nxt - m[:, None]).sum(axis=1))
+    return alpha, beta
+
+
+def pair_features(
+    hidden: np.ndarray, spans: list
+) -> tuple[list[tuple[int, int, int, int]], np.ndarray]:
+    """Admissible ordered span pairs of one sentence and their relation
+    features. ``spans``: (begin, end, ...) tuples, end exclusive. A pair
+    (i, j), i != j, is admissible when the begins lie within
+    MAX_PAIR_DISTANCE tokens; its feature row is subj_mean ⊕ obj_mean ⊕
+    between_mean over ``hidden`` (zeros when the between segment
+    [lo, hi) is empty), in hidden's dtype. Returns (pairs [(i, j, lo,
+    hi)], X [P, 6h]). The between mean is memoized by (lo, hi): the
+    (i, j)/(j, i) orderings share the identical segment, so this halves
+    the mean reductions with bit-identical output."""
+    span_vecs = [_mean0(hidden[s[0] : s[1]]) for s in spans]
+    zeros = np.zeros(hidden.shape[1], dtype=hidden.dtype)
+    pairs: list[tuple[int, int, int, int]] = []
+    feats: list[np.ndarray] = []
+    between_cache: dict[tuple[int, int], np.ndarray] = {}
+    for i, si in enumerate(spans):
+        for j, sj in enumerate(spans):
+            if i == j or abs(si[0] - sj[0]) > MAX_PAIR_DISTANCE:
+                continue
+            lo, hi = min(si[1], sj[1]), max(si[0], sj[0])
+            between_vec = between_cache.get((lo, hi))
+            if between_vec is None:
+                between_vec = _mean0(hidden[lo:hi]) if hi > lo else zeros
+                between_cache[(lo, hi)] = between_vec
+            pairs.append((i, j, lo, hi))
+            feats.append(np.concatenate([span_vecs[i], span_vecs[j], between_vec]))
+    X = np.stack(feats) if feats else np.zeros((0, 3 * hidden.shape[1]), hidden.dtype)
+    return pairs, X
+
+
 class AntNREModel:
-    """Inference-only joint NER+RE model over whitespace tokens."""
+    """Joint NER+RE model over whitespace tokens: the float32 inference
+    entry points over the shared forward functions above."""
 
     #: char-feature cache bound — ~200k tokens x c_out float32 stays tens
     #: of MB; past it each insert evicts the oldest entry
@@ -133,7 +301,6 @@ class AntNREModel:
     def __init__(self, weights: dict[str, np.ndarray], vocab: dict[str, int]):
         self.w = {k: np.asarray(v, dtype=np.float32) for k, v in weights.items()}
         self.vocab = vocab
-        self.hidden = self.w["lstm_fw_U"].shape[1]
         # memoized char-CNN rows (pure per-token function; the model
         # instance lives for the worker's life, so repeated tokens across
         # Arrow batches skip the conv entirely — bit-identical rows)
@@ -150,74 +317,29 @@ class AntNREModel:
     # ---- encoding -------------------------------------------------------
 
     def _token_ids(self, tokens: list[str]) -> np.ndarray:
+        """Reference for the token ids encode_padded computes."""
         v = self.vocab
         return np.array([v.get(t.lower(), UNK_ID) for t in tokens], dtype=np.int64)
 
     def _char_feats(self, unique_tokens: list[str]) -> np.ndarray:
-        """Char-CNN per unique token: embed -> width-3 conv -> relu -> maxpool.
-        (reference's char-CNN word encoder, `[pub: word_encoder.py]`).
-        Rows are memoized per token across calls in _char_cache, which
-        holds at most CHAR_CACHE_MAX entries (oldest evicted first)."""
-        ce, cw, cb = self.w["char_emb"], self.w["char_conv_W"], self.w["char_conv_b"]
-        d = ce.shape[1]
+        """char_row per unique token. Rows are memoized per token across
+        calls in _char_cache (the model instance lives for the worker's
+        life, so repeated tokens across Arrow batches skip the conv),
+        which holds at most CHAR_CACHE_MAX entries (oldest evicted
+        first)."""
         cache = self._char_cache
-        out = np.zeros((len(unique_tokens), cw.shape[0]), dtype=np.float32)
+        c_out = self.w["char_conv_W"].shape[0]
+        out = np.zeros((len(unique_tokens), c_out), dtype=np.float32)
         for i, tok in enumerate(unique_tokens):
             hit = cache.get(tok)
-            if hit is not None:
-                out[i] = hit
-                continue
-            if len(cache) >= self.CHAR_CACHE_MAX:
-                # OrderedDict: O(1) oldest-first eviction, where
-                # del d[next(iter(d))] on a plain dict rescans the
-                # deleted slots at the front on every call
-                cache.popitem(last=False)
-            s = tok.lower()[:MAX_TOKEN_LEN]
-            ids = np.frombuffer(s.encode("utf-8", "replace"), dtype=np.uint8)
-            ids = ids.astype(np.int64) % N_CHAR_BUCKETS
-            if len(ids) == 0:
-                # empty token (whitespace-only turn text tokenizes to
-                # [""]): zero char features instead of a zero-size
-                # maxpool crash (adversarial-whitespace test)
-                cache[tok] = out[i].copy()
-                continue
-            emb = ce[ids]  # [L, d]
-            padded = np.vstack([np.zeros((1, d), np.float32), emb, np.zeros((1, d), np.float32)])
-            wins = np.concatenate(
-                [padded[:-2], padded[1:-1], padded[2:]], axis=1
-            )  # [L, 3d]
-            conv = np.maximum(wins @ cw.T + cb, 0.0)  # [L, c_out]
-            out[i] = conv.max(axis=0)
-            cache[tok] = out[i].copy()
-        return out
-
-    def _lstm_dir(self, x: np.ndarray, mask: np.ndarray, direction: str) -> np.ndarray:
-        """Masked LSTM over padded batch [B, T, in] -> [B, T, h].
-
-        Pad steps carry state through unchanged, so each row's outputs are
-        independent of pad length and of the other rows in the batch.
-        """
-        W = self.w[f"lstm_{direction}_W"]  # [4h, in]
-        U = self.w[f"lstm_{direction}_U"]  # [4h, h]
-        b = self.w[f"lstm_{direction}_b"]  # [4h]
-        B, T, _ = x.shape
-        h = np.zeros((B, self.hidden), dtype=np.float32)
-        c = np.zeros((B, self.hidden), dtype=np.float32)
-        out = np.zeros((B, T, self.hidden), dtype=np.float32)
-        steps = range(T) if direction == "fw" else range(T - 1, -1, -1)
-        H = self.hidden
-        for t in steps:
-            g = x[:, t, :] @ W.T + h @ U.T + b  # [B, 4h]
-            i = _sigmoid(g[:, :H])
-            f = _sigmoid(g[:, H : 2 * H])
-            gg = np.tanh(g[:, 2 * H : 3 * H])
-            o = _sigmoid(g[:, 3 * H :])
-            c_new = f * c + i * gg
-            h_new = o * np.tanh(c_new)
-            m = mask[:, t : t + 1]
-            c = m * c_new + (1.0 - m) * c
-            h = m * h_new + (1.0 - m) * h
-            out[:, t, :] = h * m
+            if hit is None:
+                if len(cache) >= self.CHAR_CACHE_MAX:
+                    # OrderedDict: O(1) oldest-first eviction, where
+                    # del d[next(iter(d))] on a plain dict rescans the
+                    # deleted slots at the front on every call
+                    cache.popitem(last=False)
+                hit = cache[tok] = char_row(self.w, tok)
+            out[i] = hit
         return out
 
     def encode(self, tokens_batch: list[list[str]]) -> list[tuple[np.ndarray, np.ndarray]]:
@@ -235,7 +357,7 @@ class AntNREModel:
     ) -> tuple[list[tuple[np.ndarray, np.ndarray]], list[np.ndarray]]:
         """encode() plus the per-sentence token-id arrays it already
         computes — extract() reuses them for the relation trigger lookup
-        instead of re-tokenizing every sentence (r8)."""
+        instead of re-tokenizing every sentence."""
         n = len(tokens_batch)
         results: list = [None] * n
         ids_out: list = [None] * n
@@ -243,35 +365,15 @@ class AntNREModel:
         # char features once per unique token in the whole call
         uniq = sorted({t for toks in tokens_batch for t in toks})
         char_map = {t: f for t, f in zip(uniq, self._char_feats(uniq))}
-        emb = self.w["word_emb"]
         gaz = self.w["gaz_emis"]
-        eW, eb = self.w["emit_W"], self.w["emit_b"]
-        cdim = self.w["char_conv_W"].shape[0]
-
         for s in range(0, n, SUB_BATCH):
             idxs = order[s : s + SUB_BATCH]
-            lens = [len(tokens_batch[i]) for i in idxs]
-            T = max(lens) if lens else 0
-            B = len(idxs)
-            x = np.zeros((B, T, emb.shape[1] + cdim), dtype=np.float32)
-            mask = np.zeros((B, T), dtype=np.float32)
-            ids_all = []
-            for bi, i in enumerate(idxs):
-                toks = tokens_batch[i]
-                ids = self._token_ids(toks)
-                ids_all.append(ids)
-                ids_out[i] = ids
-                L = len(toks)
-                mask[bi, :L] = 1.0
-                x[bi, :L, : emb.shape[1]] = emb[ids]
-                for p, t in enumerate(toks):
-                    x[bi, p, emb.shape[1] :] = char_map[t]
-            fw = self._lstm_dir(x, mask, "fw")
-            bw = self._lstm_dir(x, mask, "bw")
-            hid = np.concatenate([fw, bw], axis=2)  # [B, T, 2h]
-            emis = hid @ eW + eb  # [B, T, n_tags]
+            hid, emis, ids_all = encode_padded(
+                self.w, self.vocab, [tokens_batch[i] for i in idxs], char_map
+            )
             for bi, i in enumerate(idxs):
                 L = len(tokens_batch[i])
+                ids_out[i] = ids_all[bi]
                 e = emis[bi, :L, :] + gaz[ids_all[bi]]
                 results[i] = (hid[bi, :L, :], e)
         return results, ids_out
@@ -326,25 +428,13 @@ class AntNREModel:
         decodes with), via the forward-backward algorithm in log space.
         Rows sum to 1. This is the exact quantity E5's decoded-path
         softmax heuristic approximates; with it, mention confidence
-        becomes a true probability under the sequence model (r5 —
-        enabled by the same machinery the CRF training NLL uses,
-        encoder_grad.crf_nll_grad)."""
-        T = emissions.shape[0]
-        if T == 0:
+        becomes a true probability under the sequence model. The
+        lattice is crf_lattice, shared with the CRF training NLL
+        (encoder_grad.crf_nll_grad)."""
+        if emissions.shape[0] == 0:
             return np.zeros((0, N_TAGS), dtype=np.float64)
-        em = emissions.astype(np.float64)
         trans = self.w["crf_transitions"].astype(np.float64) + CRF_CONSTRAINTS
-        alpha = np.zeros((T, N_TAGS), dtype=np.float64)
-        alpha[0] = em[0] + START_CONSTRAINTS
-        for t in range(1, T):
-            prev = alpha[t - 1][:, None] + trans
-            m = prev.max(axis=0)
-            alpha[t] = m + np.log(np.exp(prev - m).sum(axis=0)) + em[t]
-        beta = np.zeros((T, N_TAGS), dtype=np.float64)
-        for t in range(T - 2, -1, -1):
-            nxt = trans + em[t + 1][None, :] + beta[t + 1][None, :]
-            m = nxt.max(axis=1)
-            beta[t] = m + np.log(np.exp(nxt - m[:, None]).sum(axis=1))
+        alpha, beta = crf_lattice(emissions.astype(np.float64), trans)
         logp = alpha + beta
         logp -= logp.max(axis=1, keepdims=True)
         p = np.exp(logp)
@@ -380,7 +470,7 @@ class AntNREModel:
     ) -> list[Mention]:
         """``conf_mode``: 'local' (default — per-position emission
         softmax averaged over the decoded span; the golden-output/parity
-        definition, frozen) or 'marginal' (r5 — mean CRF posterior
+        definition, frozen) or 'marginal' (mean CRF posterior
         marginal of the decoded tags over the span, tag_marginals: a
         true sequence-model probability that accounts for transition
         structure, e.g. an I-tag stranded after a weak B gets marked
@@ -420,38 +510,13 @@ class AntNREModel:
         W2, b2 = self.w["rel_W2"], self.w["rel_b2"]
         pair_bias = self.w["rel_pair_bias"]  # [4, 4, n_rels]
         trig = self.w["rel_trig"]  # [V, n_rels]
-        span_vecs = {
-            i: _mean0(hidden[m.begin : m.end]) for i, m in enumerate(mentions)
-        }
-        zeros = np.zeros(hidden.shape[1], dtype=np.float32)
-        # gather admissible ordered pairs, then ONE batched MLP matmul —
-        # per-pair matvecs were the hottest python loop in the whole model.
-        # between_vec is memoized by (lo, hi): the (i,j)/(j,i) orderings
-        # share the identical segment, so this halves the mean reductions
-        # with bit-identical output
-        pairs: list[tuple[int, int, int, int]] = []
-        feats: list[np.ndarray] = []
-        between_cache: dict[tuple[int, int], np.ndarray] = {}
-        for i, mi in enumerate(mentions):
-            for j, mj in enumerate(mentions):
-                if i == j or abs(mi.begin - mj.begin) > MAX_PAIR_DISTANCE:
-                    continue
-                lo, hi = min(mi.end, mj.end), max(mi.begin, mj.begin)
-                between_vec = between_cache.get((lo, hi))
-                if between_vec is None:
-                    between_vec = (
-                        _mean0(hidden[lo:hi]) if hi > lo else zeros
-                    )
-                    between_cache[(lo, hi)] = between_vec
-                pairs.append((i, j, lo, hi))
-                feats.append(
-                    np.concatenate([span_vecs[i], span_vecs[j], between_vec])
-                )
+        # admissible ordered pairs, then ONE batched MLP matmul —
+        # per-pair matvecs were the hottest python loop in the whole model
+        pairs, X = pair_features(hidden, [(m.begin, m.end) for m in mentions])
         if not pairs:
             return []
-        X = np.stack(feats)  # [P, 6h]
         logits_all = np.maximum(X @ W1 + b1, 0.0) @ W2 + b2  # [P, n_rels]
-        # (r8 probe, rejected: vectorizing this post-logits loop across
+        # (probe, rejected: vectorizing this post-logits loop across
         # pairs measured as a wash — bench sentences carry only a few
         # admissible pairs each, so the numpy setup cost equals the loop
         # it replaced. Kept the simpler per-row form.)

@@ -69,7 +69,10 @@ class TestPartitionInvariance:
         assert big == small
 
 
-class TestGroupedMapVariant:
+class TestFusedPathEquivalence:
+    """extract_turns (segmentation + JVM-tokenizer replica fused into the
+    model UDF) emits what the staged path and the JVM tokenizer give."""
+
     def test_fused_segmentation_equals_staged(
         self, spark, transcripts_df, model_bcs
     ):
