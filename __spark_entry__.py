@@ -154,11 +154,11 @@ def run_kg_pipeline(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
         os.path.join(FIXDIR, "vocab.json"),
     )
     # ONE shuffle end-to-end through extraction: the assembly groupBy reuses
-    # this explicit conv_id hash partitioning, sized for the compute stage
+    # this explicit conv_id hash partitioning, one partition per core
     # (assemble.partition_for_extraction) — no second shuffle of raw text
     docs = assemble.assemble_documents_fused(
         assemble.partition_for_extraction(
-            transcripts, 10 * spark.sparkContext.defaultParallelism
+            transcripts, spark.sparkContext.defaultParallelism
         )
     )
     turns = assemble.filter_extractable(assemble.explode_documents(docs))
@@ -2626,12 +2626,14 @@ def _extract_mentions_df(spark, sf_dir, refine: bool = False):
         os.path.join(FIXDIR, "weights.npz"),
         os.path.join(FIXDIR, "vocab.json"),
     )
-    turns = assemble.filter_extractable(assemble.dedup_turns(transcripts))
+    turns = assemble.partition_for_extraction(
+        assemble.filter_extractable(assemble.dedup_turns(transcripts)),
+        spark.sparkContext.defaultParallelism,
+    )
     return extract.explode_mentions(
         extract.extract_turns(
             turns, weights_bc, vocab_bc, model_key=model_key,
             refine_types=refine,
-            repartition_to=10 * spark.sparkContext.defaultParallelism,
         )
     )
 

@@ -178,7 +178,6 @@ def extract_turns(
     vocab_bc,
     token_budget: int = TOKEN_BUDGET,
     model_key: str = "default",
-    repartition_to: int | None = None,
     refine_types: bool = False,
     conf_mode: str = "local",
 ) -> DataFrame:
@@ -205,22 +204,15 @@ def extract_turns(
     adversarial-whitespace case. Output rows are per-sentence
     (mapInPandas may emit more rows than it consumes).
 
-    ``repartition_to``: explicit parallelism for the model stage. The
-    extraction is per-sentence compute, so its ideal partition count tracks
-    CORES, not data size — AQE sizes partitions for shuffle cost and will
-    under-parallelize a compute stage fed by a small shuffle. Round-robin
-    repartition also load-balances pathological conversations (a 10^4-turn
-    conversation's sentences spread over all workers — skew cap by
-    construction). At petabyte scale leave None and size the upstream
-    bucketing instead: reshuffling raw text is not free.
+    The model stage runs one task per input partition, so callers size
+    it upstream (assemble.partition_for_extraction: one partition per
+    core).
 
     ``refine_types``: as in ``extract_sentences``. ``conf_mode``: mention
     confidence mode, see nnmodel.AntNREModel.extract."""
     from antnre_spark.segment import _SENT_BOUNDARY
 
     turns = turns.select("conv_id", "turn_idx", "text")
-    if repartition_to:
-        turns = turns.repartition(repartition_to)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _model_for(weights_bc, vocab_bc, model_key)

@@ -36,6 +36,10 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+#: parquet footer key under which Spark stores a file's data schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -128,8 +132,7 @@ class IceLite:
             except BaseException:
                 # a partial snap-N.json would wedge the table forever:
                 # every retry hits EEXIST and every reader fails in
-                # json.load. Remove it so the commit stays retryable
-                # (r7 review).
+                # json.load. Remove it so the commit stays retryable.
                 try:
                     os.unlink(final)
                 except OSError:
@@ -209,7 +212,7 @@ class IceLite:
         (Iceberg's full-table overwrite): the new manifest lists only
         this write's files; prior snapshots stay readable for time
         travel until expire_snapshots reclaims them. The right op for
-        derived tables that are fully recomputed per run (r6: the
+        derived tables that are fully recomputed per run (the
         graph-analytics outputs), where append would silently stack
         stale rows under the reader."""
         parent = self.current_snapshot()
@@ -239,7 +242,7 @@ class IceLite:
             kept + new_files, parent, "overwrite_partitions", new_files
         )
 
-    # ---- maintenance (r4 verdict task 8) --------------------------------
+    # ---- maintenance ----------------------------------------------------
 
     def compact(
         self,
@@ -337,7 +340,26 @@ class IceLite:
 
     # ---- reads ----------------------------------------------------------
 
+    @staticmethod
+    def _footer_schema(path: str) -> StructType:
+        """The data schema Spark wrote into this file's parquet footer —
+        the same key Spark's own (non-merging) schema inference reads,
+        taken here on the driver so no inference job runs."""
+        meta = pq.read_metadata(path).metadata or {}
+        raw = meta.get(SPARK_SCHEMA_KEY)
+        if raw is None:
+            raise ValueError(
+                f"{path} has no {SPARK_SCHEMA_KEY.decode()} footer key; "
+                f"IceLite reads only files its own writes produced"
+            )
+        return StructType.fromJson(json.loads(raw))
+
     def _read_files(self, spark: SparkSession, files: list[dict]) -> DataFrame | None:
+        """One read per snapshot directory, each with the schema from the
+        footer of its first file (one write produced every file of a
+        directory, so they share it). Partition columns are inferred from
+        the paths under basePath. Directories whose columns differ are
+        unioned by name; a column missing from a snapshot reads NULL."""
         if not files:
             return None
         # group by snapshot dir so partition-dir columns resolve via basePath
@@ -350,7 +372,11 @@ class IceLite:
         dfs = []
         for snap_dir, paths in sorted(by_snap.items()):
             base = os.path.join(self.data_dir, snap_dir)
-            dfs.append(spark.read.option("basePath", base).parquet(*paths))
+            dfs.append(
+                spark.read.schema(self._footer_schema(paths[0]))
+                .option("basePath", base)
+                .parquet(*paths)
+            )
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
@@ -363,7 +389,11 @@ class IceLite:
         partition_filter: dict[str, list[str]] | None = None,
     ) -> DataFrame | None:
         """Read a snapshot (default: latest). partition_filter prunes files
-        via manifest partition values — no listing, no footer reads."""
+        via manifest partition values before Spark sees a path. The schema
+        comes from one driver-side footer read per snapshot directory
+        (_read_files), so planning a load runs no Spark job while each
+        read stays at or below Spark's 32-path parallel-listing
+        threshold."""
         snap = snapshot if snapshot is not None else self.current_snapshot()
         if snap is None:
             return None

@@ -39,14 +39,9 @@ class PipelineConfig:
     weights_npz: str
     vocab_json: str
     n_buckets: int = 8
-    # explicit model-stage parallelism. None (the default) = do NOT reshuffle
-    # raw turn text — the petabyte-honest plan where parallelism comes
-    # from upstream bucketing (extract.extract_turns docstring). Local
-    # benchmarks set 10x cores via jobs/extract.py --local-bench.
-    repartition_to: int | None = None
     token_budget: int = extract.TOKEN_BUDGET
     # mention-confidence mode: 'local' (frozen golden-output default) or
-    # 'marginal' (r5 — true CRF posterior marginal; see nnmodel
+    # 'marginal' (true CRF posterior marginal; see nnmodel
     # .extract_mentions). Spans are identical either way.
     conf_mode: str = "local"
     jaccard_tau: float = link.JACCARD_TAU
@@ -88,9 +83,9 @@ def bucket_of(col: F.Column, n_buckets: int) -> F.Column:
 
 
 def register_model(out_root: str, weights_npz: str, note: str = "") -> str:
-    """Register a trained weights file under the pipeline output root
-    (r5 verdict task 8): copy it to <out_root>/models/<model_hash>.npz
-    and commit a stage='model' marker row carrying the hash — the same
+    """Register a trained weights file under the pipeline output root:
+    copy it to <out_root>/models/<model_hash>.npz and commit a
+    stage='model' marker row carrying the hash — the same
     sha256[:16] PipelineConfig computes — so extract/resume provenance
     and the trained artifact live in one place. Returns the hash.
 
@@ -130,9 +125,9 @@ def extract_job(
     planned = buckets if buckets is not None else list(range(cfg.n_buckets))
     todo = [b for b in planned if str(b) not in committed]
 
-    # mixed-model resume guard (r5 verdict task 8): a resume that would
-    # extract NEW buckets with a different model than the committed ones
-    # produces a table whose mentions came from two models — silently
+    # mixed-model resume guard: a resume that would extract NEW buckets
+    # with a different model than the committed ones produces a table
+    # whose mentions came from two models — silently
     # inconsistent confidences/spans. Refuse; the caller either resumes
     # with the original weights, or re-extracts everything (resume=False
     # overwrites every bucket idempotently).
@@ -168,21 +163,22 @@ def extract_job(
 
     # the assembly shuffle doubles as the compute stage's parallelism
     # source (assemble.partition_for_extraction): ONE conv_id exchange,
-    # sized for cores, that Catalyst reuses for the groupBy. Without this,
-    # AQE's size-based coalescing would shrink a small assembly shuffle to
-    # 1 partition and run the compute-bound model stage on one core.
-    n_parts = 10 * spark.sparkContext.defaultParallelism
+    # one partition per core, that Catalyst reuses for the groupBy.
+    # Without it, AQE's size-based coalescing would shrink a small
+    # assembly shuffle to 1 partition and run the compute-bound model
+    # stage on one core; with more partitions than cores, every extra
+    # Python task pays the worker's fixed per-task cost.
+    n_parts = spark.sparkContext.defaultParallelism
 
     for b in todo:
         part = src.filter(F.col("bucket") == b)
         # input_rows for the marker rides the assembly write as an
-        # Observation instead of a separate part.count() action (r5
-        # verdict task 4): the old count re-scanned every bucket's input
-        # once more per pass, driver-serialized — hundreds of extra
-        # actions at a few hundred (day, bucket) slices. observe() counts
-        # rows at this node during the write that runs anyway; zero extra
-        # scans, identical value (tests/test_plans.py pins the per-bucket
-        # job count).
+        # Observation instead of a separate part.count() action: such a
+        # count re-scans every bucket's input once more per pass,
+        # driver-serialized — hundreds of extra actions at a few hundred
+        # (day, bucket) slices. observe() counts rows at this node during
+        # the write that runs anyway; zero extra scans, identical value
+        # (tests/test_plans.py pins the per-bucket job count).
         obs = Observation(f"extract_input_b{b}")
         part = part.observe(obs, F.count(F.lit(1)).alias("input_rows"))
 
@@ -195,19 +191,18 @@ def extract_job(
         input_rows = int(obs.get["input_rows"])
 
         ext_turns = assemble.filter_extractable(assemble.explode_documents(docs))
-        # fused segmentation+extraction: one Arrow hop (r4 — measured
-        # 0.817 N->4N efficiency vs 0.758 staged; row-identical to
+        # fused segmentation+extraction: one Arrow hop (measured 0.817
+        # N->4N efficiency vs 0.758 staged; row-identical to
         # extract_sentences(segment_turns(...)), tests/test_invariants.py)
         extracted = extract.extract_turns(
             ext_turns, weights_bc, vocab_bc, cfg.token_budget, model_key,
-            repartition_to=cfg.repartition_to,
             conf_mode=cfg.conf_mode,
         )
         # persist, not localCheckpoint: one forward pass shared by the
         # mention and relation sinks, releasable after the marker commits.
         # try/finally: a failed sink write must not leak the cache into a
-        # long-lived session that retries the job (r4 self-review — the
-        # sweep contract of tests/test_resume.py::TestCacheSweep)
+        # long-lived session that retries the job (the sweep contract of
+        # tests/test_resume.py::TestCacheSweep)
         extracted = extracted.persist()
         try:
             mentions = extract.explode_mentions(extracted).withColumn("bucket", F.lit(b))
@@ -267,8 +262,8 @@ def link_job(spark: SparkSession, cfg: PipelineConfig) -> dict:
     # (DataFrame.unpersist is a no-op on localCheckpointed DFs).
     # try/finally: cache ownership must hold even when a sink write
     # throws mid-job — a long-lived driver retrying link jobs must not
-    # accumulate one leaked cache per attempt (r4 self-review; the
-    # sweep contract of tests/test_resume.py::TestCacheSweep).
+    # accumulate one leaked cache per attempt (the sweep contract of
+    # tests/test_resume.py::TestCacheSweep).
     triples = triples.persist()
     try:
         vertices = materialize.build_vertices(triples, entities)

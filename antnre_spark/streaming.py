@@ -322,23 +322,20 @@ def _extracted_batch(
     """The model stage of one micro-batch, shared by both streams: yields
     the persisted EXTRACTED frame and releases it when the block exits.
 
-    A file-source micro-batch arrives with one partition per ~input file
-    (2, measured, for the bench's 50k-turn batches), so the turns are
-    hash-partitioned by conv_id to 10x defaultParallelism first — the
-    same sizing the batch pipeline's partition_for_extraction uses.
-    Without it the compute-bound model UDF ran on 2 of 32 cores and the
-    stream read 2.1x the batch wall on identical input.
+    A file-source micro-batch arrives with one partition per ~input file,
+    so the turns are hash-partitioned by conv_id to defaultParallelism
+    first — the same sizing the batch pipeline's partition_for_extraction
+    uses: one model task per core. Fewer tasks leave cores idle (the
+    compute-bound UDF once ran on 2 of 32 cores and the stream read 2.1x
+    the batch wall); more tasks each pay the Python worker's fixed
+    per-task cost (~0.25 s measured on a 4-core host: 40 tasks per
+    micro-batch spent 3.4 s of wall on ~0.1 s of model work).
 
-    The EXTRACTED frame is then repartitioned back DOWN (max(2,
-    parallelism/8)) before the persist that the sink writes share.
-    Persisting at the extraction width made every write schedule one
-    task — and emit one parquet file — per extraction partition
-    (measured: 0.3s -> 2.5s per write at 320), so extraction and write
-    parallelism are decoupled: the UDF runs wide, the small extracted
-    rows cross one cheap round-robin exchange, and the writes scan a
-    handful of persisted partitions. Measured per 50k-turn batch (32
-    cores): extract 14s/2-way -> 3.5s/320-way; phase-1 total
-    11.5-15.5s -> 4.2-4.7s.
+    The EXTRACTED frame is then repartitioned DOWN (max(2,
+    parallelism/8)) before the persist that the sink writes share, so
+    each write schedules a handful of tasks and emits a handful of
+    parquet files instead of one per extraction partition: the small
+    extracted rows cross one cheap round-robin exchange.
 
     persist, not localCheckpoint: one forward pass shared by the sink
     writes, then RELEASED — a localCheckpoint here would leak one
@@ -346,7 +343,7 @@ def _extracted_batch(
     (DataFrame.unpersist cannot release localCheckpoint blocks)."""
     parallelism = batch_df.sparkSession.sparkContext.defaultParallelism
     turns = assemble.partition_for_extraction(
-        assemble.filter_extractable(batch_df), 10 * parallelism
+        assemble.filter_extractable(batch_df), parallelism
     )
     extracted = extract.extract_turns(
         turns, weights_bc, vocab_bc, model_key=model_key,

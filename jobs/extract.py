@@ -34,19 +34,12 @@ def main() -> None:
     ap.add_argument("--buckets", default=None, help="comma-separated bucket ids")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument(
-        "--local-bench",
-        action="store_true",
-        help="repartition the model stage to 10x cores (local-mode "
-        "throughput knob; the default — no reshuffle of raw sentence text "
-        "— is the plan you want on a real cluster with upstream bucketing)",
-    )
-    ap.add_argument(
         "--conf-mode",
         choices=["local", "marginal"],
         default="local",
         help="mention confidence: 'local' (frozen default, per-position "
-        "emission softmax) or 'marginal' (r5 — true CRF posterior "
-        "marginal via forward-backward; identical spans, calibrated conf)",
+        "emission softmax) or 'marginal' (true CRF posterior marginal via "
+        "forward-backward; identical spans, calibrated conf)",
     )
     ap.add_argument(
         "--incremental-since",
@@ -69,9 +62,6 @@ def main() -> None:
         vocab_json=args.vocab,
         n_buckets=args.n_buckets,
         conf_mode=args.conf_mode,
-        repartition_to=(
-            10 * spark.sparkContext.defaultParallelism if args.local_bench else None
-        ),
     )
 
     buckets = None

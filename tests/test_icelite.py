@@ -213,3 +213,56 @@ class TestMaintenance:
         table.compact(spark)
         table.expire_snapshots(keep_last=2)
         assert sorted(tuple(r) for r in table.load(spark).collect()) == rows
+
+
+class TestLoadSchema:
+    """load() reads each snapshot directory with the schema Spark wrote
+    into its parquet footers, so planning a load runs no Spark job."""
+
+    def test_column_added_between_snapshots_loads_as_null(self, spark, table):
+        table.append(df_of(spark, [(1, "a", 10)]), ["part"])
+        table.append(df_of(spark, [(2, "b", 20)]), ["part"])
+        table.append(
+            spark.createDataFrame([(3, "a", 30, "x")], ["k", "part", "v", "w"]),
+            ["part"],
+        )
+        df = table.load(spark)
+        assert sorted(df.columns) == ["k", "part", "v", "w"]
+        got = sorted(tuple(r) for r in df.select("k", "part", "v", "w").collect())
+        assert got == [(1, "a", 10, None), (2, "b", 20, None), (3, "a", 30, "x")]
+
+    def test_load_runs_no_spark_job(self, spark, table):
+        for i in range(4):
+            table.append(
+                df_of(spark, [(i, "a", i * 10), (i, "b", i * 10 + 1)]), ["part"]
+            )
+        assert len({f["path"].split(os.sep)[0]
+                    for f in table.manifest(table.current_snapshot())["files"]}) >= 3
+        sc = spark.sparkContext
+        sc.setJobGroup("icelite-load", "IceLite.load planning")
+        try:
+            df = table.load(spark)
+            pruned = table.load(spark, partition_filter={"part": ["b"]})
+        finally:
+            sc.setJobGroup(None, None)
+        assert sc.statusTracker().getJobIdsForGroup("icelite-load") == []
+        assert dict(df.dtypes) == {"k": "bigint", "v": "bigint", "part": "string"}
+        assert df.count() == 8
+        assert sorted(r["v"] for r in pruned.collect()) == [1, 11, 21, 31]
+
+    def test_file_without_spark_schema_is_refused(self, spark, table):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        table.append(df_of(spark, [(1, "a", 10)]), ["part"])
+        foreign = os.path.join(table.data_dir, "snap-9-foreign", "part-0.parquet")
+        os.makedirs(os.path.dirname(foreign))
+        pq.write_table(pa.table({"k": [2], "part": ["b"], "v": [20]}), foreign)
+        live = table.manifest(table.current_snapshot())["files"]
+        table._commit(
+            live + [{"path": os.path.relpath(foreign, table.data_dir),
+                     "rows": 1, "partitions": {}}],
+            table.current_snapshot(), "append",
+        )
+        with pytest.raises(ValueError, match="snap-9-foreign"):
+            table.load(spark)
