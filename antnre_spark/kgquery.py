@@ -62,6 +62,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from antnre_spark.schema import local_frame
+
 Pattern = tuple[str, object, str]
 
 _POSITIONS = ("subj", "pred", "obj")
@@ -252,7 +254,7 @@ def closure_pairs(
     list). Path EXISTENCE semantics (set, not bag).
 
     Two fixpoint strategies, both with per-round lineage cuts
-    (``link._cut_lineage`` — the r6 lesson: persist alone lets the
+    (``link._cut_lineage`` — persist alone lets the
     loop-carried plan grow geometrically):
 
     * ``sources`` given (a DataFrame whose first column holds seed
@@ -300,9 +302,9 @@ def closure_pairs(
                 .distinct()
                 .join(seen, ["a", "b"], "left_anti")
             )
-            # emptiness checked on the delta JUST computed (r7 review:
-            # a top-of-loop check made a fixpoint reached exactly at
-            # the cap raise spuriously — effective cap was N-1)
+            # emptiness checked on the delta JUST computed: a
+            # top-of-loop check made a fixpoint reached exactly at the
+            # cap raise spuriously (the effective cap was N-1)
             if delta.isEmpty():
                 break
             seen = seen.unionByName(delta)  # union of checkpointed frames
@@ -392,7 +394,7 @@ def _endpoint_scan(
         # forward (a=subject-side, b=object-side) orientation.
         spark = triples.sparkSession
         if not _is_var(s_term):
-            seed = spark.createDataFrame([(s_term,)], "a string")
+            seed = local_frame(spark, [(s_term,)], "a string")
             pairs = closure_pairs(
                 triples, p_term.pred, p_term.min_hops, sources=seed
             )
@@ -402,7 +404,7 @@ def _endpoint_scan(
             except ValueError:  # Neg: forward-only — full closure, the
                 inv = None      # bound-term filter below restricts it
             if inv is not None:
-                seed = spark.createDataFrame([(o_term,)], "a string")
+                seed = local_frame(spark, [(o_term,)], "a string")
                 pairs = closure_pairs(
                     triples, inv, p_term.min_hops, sources=seed,
                 ).select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -771,7 +773,8 @@ def bgp_query(
         vvars = sorted({k for row in values for k in row})
         if not vvars:
             raise ValueError("empty VALUES rows")
-        vdf = triples.sparkSession.createDataFrame(
+        vdf = local_frame(
+            triples.sparkSession,
             [tuple(row.get(v) for v in vvars) for row in values],
             ", ".join(f"{v} string" for v in vvars),
         )

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from antnre_spark import hashing
+from antnre_spark.schema import local_frame
 
 JACCARD_TAU = hashing.TAU_LO
 MAX_BUCKET = 64  # band-bucket size cap (dropped if exceeded; oracle matches)
@@ -488,7 +489,8 @@ def connected_components(
             (r["ent_type"], r["src"], r["dst"])
             for r in sym.filter(F.col("src") < F.col("dst")).collect()
         )
-        labels = edges.sparkSession.createDataFrame(
+        labels = local_frame(
+            edges.sparkSession,
             [(et, nm, c) for (et, nm), c in comp.items()],
             "ent_type string, norm string, component string",
         )
@@ -639,7 +641,9 @@ def link_surfaces(
     persisted counts rather than a mentions scan. Same hybrid
     local/distributed strategy and the same cache-ownership contract
     (``surfaces`` is cached+released here; ``surface_map`` returns
-    cached, caller unpersists)."""
+    cached, caller unpersists). On the local path the surface map is
+    built on the driver as an Arrow table (schema.local_frame), so its
+    plan is a LocalTableScan: no Spark job and no Python worker."""
     spark = surfaces.sparkSession
     # cache BEFORE the probe: on the over-threshold path the probe's
     # limit still executes the full distinct aggregation map-side, and
@@ -659,13 +663,11 @@ def link_surfaces(
                 (r["ent_type"], r["norm"], r["n_mentions"], r["top_surface"])
                 for r in probe
             ]
-            sm_rows = _link_surfaces_local(rows, tau, max_bucket)
-            surface_map = spark.createDataFrame(
-                sm_rows,
+            surface_map = local_frame(
+                spark,
+                _link_surfaces_local(rows, tau, max_bucket),
                 "ent_type string, norm string, entity_id string, "
                 "canonical string, n_mentions long",
-            ).select(
-                "ent_type", "norm", "entity_id", "canonical", "n_mentions"
             )
             surface_map.cache()
             return surface_map, build_entities(surface_map)

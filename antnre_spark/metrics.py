@@ -22,7 +22,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
-from antnre_spark.schema import MARKERS
+from antnre_spark.schema import MARKERS, local_frame
 
 
 class MarkerStore:
@@ -78,4 +78,4 @@ class MarkerStore:
         rows = self._rows()
         for r in rows:
             r["committed_at"] = datetime.fromisoformat(r["committed_at"])
-        return spark.createDataFrame(rows, MARKERS) if rows else spark.createDataFrame([], MARKERS)
+        return local_frame(spark, rows, MARKERS)

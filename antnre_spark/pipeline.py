@@ -205,18 +205,24 @@ def extract_job(
         # tests/test_resume.py::TestCacheSweep)
         extracted = extracted.persist()
         try:
+            # the marker's row counts ride the two sink writes as
+            # Observations (the extract_input pattern above), not a
+            # load().count() job per table afterwards. A bucket can be
+            # legitimately empty (no extractable turns): its writes still
+            # run, the observed counts read 0, and the marker commits so
+            # resume doesn't redo the bucket forever.
+            obs_m = Observation(f"extract_mentions_b{b}")
+            obs_r = Observation(f"extract_relations_b{b}")
             mentions = extract.explode_mentions(extracted).withColumn("bucket", F.lit(b))
             relations = extract.explode_relations(extracted).withColumn("bucket", F.lit(b))
-            ment_snap = ment_t.overwrite_partitions(mentions, ["bucket"])
-            rel_t.overwrite_partitions(relations, ["bucket"])
-
-            # a bucket can be legitimately empty (no extractable turns) —
-            # IceLite.load returns None then; the marker must still commit
-            # so resume doesn't redo the bucket forever
-            m_df = ment_t.load(spark, partition_filter={"bucket": [str(b)]})
-            r_df = rel_t.load(spark, partition_filter={"bucket": [str(b)]})
-            n_m = m_df.count() if m_df is not None else 0
-            n_r = r_df.count() if r_df is not None else 0
+            ment_snap = ment_t.overwrite_partitions(
+                mentions.observe(obs_m, F.count(F.lit(1)).alias("n")), ["bucket"]
+            )
+            rel_t.overwrite_partitions(
+                relations.observe(obs_r, F.count(F.lit(1)).alias("n")), ["bucket"]
+            )
+            n_m = int(obs_m.get["n"])
+            n_r = int(obs_r.get["n"])
             markers.commit(
                 stage="extract",
                 partition_key=str(b),
@@ -236,7 +242,8 @@ def extract_job(
 def link_job(spark: SparkSession, cfg: PipelineConfig) -> dict:
     """Entity linking + triple materialization over all extracted buckets."""
     markers = cfg.markers()
-    mentions = cfg.table("mentions").load(spark)
+    ment_t = cfg.table("mentions")
+    mentions = ment_t.load(spark)
     relations = cfg.table("relations").load(spark)
     if mentions is None or relations is None:
         raise RuntimeError("run extract_job first")
@@ -275,9 +282,15 @@ def link_job(spark: SparkSession, cfg: PipelineConfig) -> dict:
         ent_t.overwrite_partitions(entities.withColumn("part", F.lit(0)), ["part"])
         # edge table layout per SURVEY.md §4.3.6: partition by pred,
         # bucket by subj — point lookups prune to one (pred, bucket)
-        # slice via manifests
+        # slice via manifests. Clustered by the partition columns first,
+        # so each pred=/bucket= directory gets ONE file instead of one per
+        # upstream task; the explicit count (one task per core, the model
+        # stage's rule) keeps AQE from coalescing this tiny shuffle into
+        # a single writer task.
         tri_snap = tri_t.overwrite_partitions(
-            triples.withColumn("bucket", bucket_of(F.col("subj"), 16)),
+            triples.withColumn("bucket", bucket_of(F.col("subj"), 16)).repartition(
+                spark.sparkContext.defaultParallelism, "pred", "bucket"
+            ),
             ["pred", "bucket"],
         )
         vert_t.overwrite_partitions(vertices.withColumn("part", F.lit(0)), ["part"])
@@ -297,7 +310,7 @@ def link_job(spark: SparkSession, cfg: PipelineConfig) -> dict:
             stage="link_materialize",
             partition_key="all",
             snapshot_id=str(tri_snap),
-            input_rows=mentions.count(),
+            input_rows=ment_t.total_rows(),
             output_rows=vert_t.total_rows(),
             triple_count=n_triples,
             model_hash=cfg.model_hash,

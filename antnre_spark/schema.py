@@ -1,12 +1,20 @@
 """Fixed, explicit StructTypes for every pipeline table (SURVEY.md §1.2).
 
-No schema inference anywhere in the pipeline: every read/createDataFrame in
-prod paths passes one of these. The transcripts schema is authoritative from
-BASELINE.json:15 (input_hint).
+No schema inference anywhere in the pipeline: every read in prod paths
+passes one of these, and every frame built from driver-side rows goes
+through ``local_frame`` with an explicit schema (an Arrow table planned as
+a LocalTableScan — never a list-based createDataFrame, whose pickled RDD
+starts a Python worker pool of its own). The transcripts schema is
+authoritative from BASELINE.json:15 (input_hint).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -17,6 +25,44 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in field order, or
+    dicts keyed by field name) with exactly ``schema`` (a StructType or a
+    DDL string).
+
+    The rows are built into a pyarrow table on the driver and handed to
+    createDataFrame, which plans it as a LocalTableScan: no Spark job and
+    no Python worker. A list of tuples instead is pickled into an RDD
+    whose re-serializing map is a PythonRDD stage, and that stage starts
+    a second ``pyspark.daemon`` plus one worker per core beside the
+    mapInPandas pool. A pyarrow table never takes createDataFrame's
+    pickled fallback (only pandas input does), so a failed conversion
+    raises here instead of silently starting that pool.
+
+    Zero rows give an empty frame with the schema. NULL is kept in a
+    nullable column and refused in a non-nullable one (the check the
+    pickled path's verifySchema makes). Naive datetimes read as UTC, the
+    session timezone (session.py)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    names = schema.fieldNames()
+    if rows and isinstance(rows[0], dict):
+        cols = [[r.get(n) for r in rows] for n in names]
+    else:
+        cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in names]
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
+    for field, arr in zip(schema.fields, arrays):
+        if not field.nullable and arr.null_count:
+            raise ValueError(f"local_frame: NULL in non-nullable field {field.name!r}")
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )
 
 # INPUT — BASELINE.json:15: (conv_id:string, turn_idx:int32, role:string,
 # text:string, tool:string, ts:timestamp)

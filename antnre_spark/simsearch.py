@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from antnre_spark.hashing import plane_weights
+from antnre_spark.schema import local_frame
 
 # Largest query table the batch top-k functions accept. The queries are
 # collected to the driver and shipped to every scoring task, so the table
@@ -771,7 +772,7 @@ def bucketed_topk(
     # the query's bucket comes from evaluating the SAME column expression
     # on a 1-row DataFrame — guarantees formula identity with the index
     spark = index.sparkSession
-    qdf = spark.createDataFrame([(query,)], f"{vec_col}: array<double>")
+    qdf = local_frame(spark, [(query,)], f"{vec_col} array<double>")
     qbucket = qdf.select(
         hyperplane_bucket(F.col(vec_col), planes).alias("b")
     ).first()["b"]

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from antnre_spark.schema import local_frame
+
 GOLD_SCHEMA = StructType(
     [
         StructField("conv_id", StringType(), False),
@@ -126,7 +128,7 @@ def parse_conll04(text: str) -> list[dict]:
 def read_conll04(spark: SparkSession, path: str) -> DataFrame:
     with open(path) as f:
         rows = parse_conll04(f.read())
-    return spark.createDataFrame(rows, GOLD_SCHEMA)
+    return local_frame(spark, rows, GOLD_SCHEMA)
 
 
 def write_conll04(gold: DataFrame, path: str) -> int:
@@ -148,7 +150,7 @@ def write_conll04(gold: DataFrame, path: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# A3 (r5 verdict task 6): GloVe-format text embedding ingestion. The
+# A3: GloVe-format text embedding ingestion. The
 # reference initializes its word encoder from GloVe text files (`[pub:
 # word_encoder.py]` unverified — SURVEY.md §0); this engine's A3 loader
 # took npz fixtures only, the last I/O asymmetry for real-corpus use.

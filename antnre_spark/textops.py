@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from antnre_spark.schema import local_frame
+
 # built-in stopword lists for the stopword-voting language heuristic;
 # priority order breaks score ties deterministically. 8 languages x ~20
 # high-frequency function words each (hand-assembled from common knowledge
@@ -115,7 +117,7 @@ def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return scored.withColumn("pred_lang", pred)
 
 
-# ---- trained char-trigram naive-Bayes language ID (r3 verdict task 6) ----
+# ---- trained char-trigram naive-Bayes language ID ----
 #
 # Replaces the stopword-voting heuristic as the production path: a NB
 # classifier over character trigrams trained on the deterministic fixture
@@ -124,7 +126,7 @@ def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 # INTEGER micro-log10-probabilities (round(log10(p) * 1e6)), so scores are
 # exact long sums — identical in any engine and under any execution order.
 #
-# Scale shape (the ADVICE-measured finding drove this design): a map
+# Scale shape (a measured finding drove this design): a map
 # literal IS constant-folded by Catalyst, but element_at over the folded
 # ArrayBasedMapData literal is a LINEAR SCAN per lookup — measured 0.27s /
 # 0.33s / 1.14s / 10.8s per 20k docs at 10 / 150 / 1500 / 15000 entries.
@@ -207,14 +209,12 @@ def language_id_ngram(
     langs, table, oov = ngram_langid_model()
     spark = df.sparkSession
     tbl = F.broadcast(
-        spark.createDataFrame(
-            sorted(table.items()), "gram string, s array<bigint>"
-        )
+        local_frame(spark, sorted(table.items()), "gram string, s array<bigint>")
     )
     # hoist the collapsed text into a projection: Spark does not CSE
     # subexpressions across higher-order-function lambdas, so inlining
-    # this re-runs the regex per gram index — O(chars^2)/doc (r5 fix,
-    # same hoist as with_trigram_logprob)
+    # this re-runs the regex per gram index — O(chars^2)/doc (the same
+    # hoist as with_trigram_logprob)
     t = F.col("__langid_t")
     n = F.length(t)
     grams = df.withColumn(
@@ -337,10 +337,10 @@ def with_trigram_logprob(df: DataFrame, text_col: str = "text") -> DataFrame:
     (element_at -> null -> OOV coalesce), left-fold sum. Adds
     ``trigram_logp`` (mean, rounded 4).
 
-    Cost model (measured r4, resolving the r3 ADVICE question): Catalyst
-    DOES constant-fold the CreateMap into a map literal — it is NOT
-    rebuilt per row — but element_at over the folded ArrayBasedMapData is
-    a LINEAR SCAN per lookup, so per-gram cost grows with table size
+    Cost model (measured): Catalyst DOES constant-fold the CreateMap
+    into a map literal — it is NOT rebuilt per row — but element_at over
+    the folded ArrayBasedMapData is a LINEAR SCAN per lookup, so per-gram
+    cost grows with table size
     (20k docs: 0.27s baseline / 0.33s @150 entries / 1.14s @1500 /
     10.8s @15000). At THIS table's size (~150 grams) the scan overhead
     is ~20% of an already-tiny stage and the zero-shuffle shape wins;
@@ -357,7 +357,7 @@ def with_trigram_logprob(df: DataFrame, text_col: str = "text") -> DataFrame:
     # materialize the collapsed text in its own projection FIRST: inlining
     # this expression into the per-gram lambda makes codegen re-run the
     # regexp_replace for EVERY gram index — O(chars^2) per document
-    # (measured r5: 28s -> 8.2s per 40k docs just from this hoist; Spark
+    # (measured: 28s -> 8.2s per 40k docs just from this hoist; Spark
     # does not CSE subexpressions across higher-order-function lambdas)
     t = F.col("__trigram_t")
     n = F.length(t)
@@ -389,7 +389,7 @@ def with_trigram_logprob_join(
     """Corpus-scale twin of ``with_trigram_logprob`` — same column out
     (``trigram_logp``, mean char-trigram log10-prob rounded 4), computed
     with the broadcast-join shape language_id_ngram uses instead of a
-    map-literal scan (r4 verdict task 3: element_at over a folded map
+    map-literal scan (element_at over a folded map
     literal is a LINEAR scan per lookup — 10.8s/20k docs at 15k entries —
     so gating a 100 TB curation run on the map path does not scale past
     a few hundred grams; a hash-join probe is O(1) per gram at any table
@@ -416,7 +416,8 @@ def with_trigram_logprob_join(
     oov_micro = int(round(trigram_oov_logp() * 1e6))
     spark = df.sparkSession
     tbl = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             sorted((g, int(round(v * 1e6))) for g, v in table.items()),
             "gram string, micro bigint",
         )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from antnre_spark import graph  # noqa: E402
 from antnre_spark.icelite import IceLite  # noqa: E402
+from antnre_spark.schema import local_frame  # noqa: E402
 from antnre_spark.session import get_spark  # noqa: E402
 
 
@@ -150,7 +151,7 @@ def main() -> None:
     if args.hops > 0:
         # UNION neighborhood: every entity within --hops out-hops of ANY
         # top-ranked seed, at its minimum hop distance
-        seeds = spark.createDataFrame([(v,) for v, _ in top], "v string")
+        seeds = local_frame(spark, [(v,) for v, _ in top], "v string")
         hoods = (
             graph.n_hop(edges, seeds, args.hops)
             .filter(F.col("hop") > 0)
@@ -180,9 +181,7 @@ def main() -> None:
             IceLite(f"{args.out}/graph_scc"), scc
         )
     if args.seed:
-        ppr_seeds = spark.createDataFrame(
-            [(s,) for s in args.seed], "v string"
-        )
+        ppr_seeds = local_frame(spark, [(s,) for s in args.seed], "v string")
         ppr = graph.pagerank(
             edges,
             iterations=args.iterations,
@@ -195,9 +194,7 @@ def main() -> None:
         )
         report["ppr_seeds"] = sorted(args.seed)
     if args.sssp:
-        sssp_seeds = spark.createDataFrame(
-            [(s,) for s in args.sssp], "v string"
-        )
+        sssp_seeds = local_frame(spark, [(s,) for s in args.sssp], "v string")
         if weight_col is not None:
             # evidence counts are AFFINITY (more evidence = closer):
             # invert into a positive distance so strong edges are short

@@ -148,7 +148,11 @@ class TestExtractJobActions:
         cores / 8 shuffle partitions, AQE on; IceLite loads run no
         schema-inference job); re-adding the count, or an inference job
         per load, pushes it past the budget. Marker value semantics
-        unchanged: input_rows still equals the bucket's turn count."""
+        unchanged: input_rows still equals the bucket's turn count.
+
+        The marker's output_rows likewise come from Observations on the
+        mentions/relations writes, not a load().count() per table: the
+        budget is 6 jobs (10 while those counts ran as their own jobs)."""
         from antnre_spark.metrics import MarkerStore
         from antnre_spark.pipeline import PipelineConfig, bucket_of, extract_job
 
@@ -165,7 +169,7 @@ class TestExtractJobActions:
         finally:
             sc.setJobGroup(None, None)
         n_jobs = len(sc.statusTracker().getJobIdsForGroup("extract-jobcount"))
-        assert 0 < n_jobs <= 10, f"extract_job ran {n_jobs} jobs for one bucket"
+        assert 0 < n_jobs <= 6, f"extract_job ran {n_jobs} jobs for one bucket"
 
         expected = transcripts_df.filter(
             bucket_of(F.col("conv_id"), 2) == 0
@@ -173,6 +177,105 @@ class TestExtractJobActions:
         markers = MarkerStore(str(tmp_path / "jobcount" / "_markers"))
         rows = [m for m in markers._rows() if m["stage"] == "extract"]
         assert rows and rows[0]["input_rows"] == expected
+        written = sum(
+            cfg.table(t).load(spark).count() for t in ("mentions", "relations")
+        )
+        assert rows[0]["output_rows"] == written > 0
+
+
+class TestLinkJobActions:
+    def test_link_job_budget_and_marker(
+        self, spark, transcripts_df, fixture_paths, tmp_path
+    ):
+        """link_job's marker input_rows is the mentions table's manifest
+        row count, not a mentions.count() job, and the driver-local
+        surface map runs no job of its own. Pinned as a job budget in the
+        same style as extract_job's: a first link_job over the 2-bucket
+        fixture build completes in <= 21 Spark jobs (22 with the count)."""
+        from antnre_spark.pipeline import PipelineConfig, extract_job, link_job
+
+        cfg = PipelineConfig(
+            out_root=str(tmp_path / "linkcount"),
+            weights_npz=fixture_paths["weights"],
+            vocab_json=fixture_paths["vocab"],
+            n_buckets=2,
+        )
+        extract_job(spark, transcripts_df, cfg)
+        sc = spark.sparkContext
+        sc.setJobGroup("link-jobcount", "link_job")
+        try:
+            link_job(spark, cfg)
+        finally:
+            sc.setJobGroup(None, None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("link-jobcount"))
+        assert 0 < n_jobs <= 21, f"link_job ran {n_jobs} jobs"
+
+        (row,) = cfg.markers().rows("link_materialize")
+        assert row["input_rows"] == cfg.table("mentions").load(spark).count()
+
+    def test_one_file_per_triples_partition_directory(self, pipeline_out):
+        """The triples write is clustered by (pred, bucket) before the
+        partitioned write: each live pred=*/bucket=* directory holds
+        exactly one parquet file, not one per upstream task."""
+        import collections
+        import os
+
+        tri = pipeline_out["cfg"].table("triples")
+        files = tri.manifest(tri.current_snapshot())["files"]
+        per_dir = collections.Counter(os.path.dirname(f["path"]) for f in files)
+        assert per_dir and set(per_dir.values()) == {1}
+        assert all("/pred=" in d and "/bucket=" in d for d in per_dir)
+
+
+class TestLocalFrames:
+    """Frames built from driver-side rows plan as a LocalTableScan (an
+    Arrow table), never a Scan ExistingRDD over pickled rows: the latter's
+    re-serializing map is a PythonRDD stage that starts a second Python
+    worker pool beside the mapInPandas one."""
+
+    def test_driver_local_surface_map_is_local_table_scan(self, spark):
+        from antnre_spark import link
+
+        surfaces = spark.createDataFrame(
+            [("Peop", "alice", 3, "Alice"), ("Peop", "alicee", 1, "Alicee"),
+             ("Org", "acme", 2, "Acme")],
+            "ent_type string, norm string, n_mentions long, top_surface string",
+        )
+        surface_map, entities = link.link_surfaces(surfaces)
+        try:
+            plan = plan_of(surface_map)
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+            assert "ExistingRDD" not in plan_of(entities)
+            assert surface_map.count() == 3
+        finally:
+            surface_map.unpersist()
+
+    def test_local_frame_rows_nulls_and_empty(self, spark):
+        import datetime
+
+        from antnre_spark.schema import MARKERS, local_frame
+
+        ddl = "a string, n long, xs array<bigint>, ts timestamp"
+        ts = datetime.datetime(2026, 1, 1, 12, tzinfo=datetime.timezone.utc)
+        rows = [("x", 1, [1, 2], ts), (None, None, None, None)]
+        df = local_frame(spark, rows, ddl)
+        assert "LocalTableScan" in plan_of(df)
+        assert df.collect() == spark.createDataFrame(rows, ddl).collect()
+        dicts = [{"a": "x", "n": 1, "xs": [1, 2], "ts": ts}, {}]
+        assert local_frame(spark, dicts, ddl).collect() == df.collect()
+
+        empty = local_frame(spark, [], MARKERS)
+        assert empty.schema == MARKERS and empty.collect() == []
+        assert "LocalTableScan" in plan_of(empty)
+
+    def test_local_frame_refuses_null_in_non_nullable_field(self, spark):
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        from antnre_spark.schema import local_frame
+
+        schema = StructType([StructField("a", StringType(), False)])
+        with pytest.raises(ValueError, match="non-nullable field 'a'"):
+            local_frame(spark, [("x",), (None,)], schema)
 
 
 class _ModelStageCaptured(Exception):

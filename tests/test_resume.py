@@ -129,6 +129,9 @@ class TestEmptyBucket:
         s1 = extract_job(spark, df, cfg)
         assert s1["buckets_run"] == 4 and s1["mentions"] == 0
         assert cfg.markers().committed("extract") == {"0", "1", "2", "3"}
+        # the observed write counts read 0 (the writes still run a job,
+        # so the Observations are filled and obs.get cannot block)
+        assert {m["output_rows"] for m in cfg.markers().rows("extract")} == {0}
         s2 = extract_job(spark, df, cfg)  # resume: nothing left to do
         assert s2["buckets_run"] == 0
 
