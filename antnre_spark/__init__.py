@@ -43,7 +43,7 @@ Modules map to SURVEY.md §2 operator families:
                bucketed_topk_batch, one shared numpy scoring kernel)
   streaming    foreachBatch extraction (idempotent per-batch overwrite),
                watermarked session windows, applyInPandasWithState
-               stateful document assembly; r5: incremental linking +
+               stateful document assembly, incremental linking +
                triple materialization (start_kg_stream — stream triples
                equal the batch link job exactly)
   multimodal   binary media columns: byte-capped decode batches, frame
@@ -53,8 +53,9 @@ Modules map to SURVEY.md §2 operator families:
                features), mention detector + JOINT model (fit_joint —
                CRF NLL + relation CE through the shared encoder), and
                minimum-risk fine-tuning (fit_mrt, EMNLP'18-style k-best
-               expected span-F1 risk); all data-parallel gradient
-               all-reduce, optional per-epoch Bernoulli minibatching
+               expected span-F1 risk), all on one data-parallel epoch
+               driver (gradient all-reduce, optional per-epoch
+               Bernoulli minibatching)
   encoder_grad pure-numpy CRF NLL + full encoder backprop (masked-BiLSTM
                BPTT, char-CNN maxpool routing, embedding scatter-adds)
                + k-best MRT gradients over nnmodel's forward functions

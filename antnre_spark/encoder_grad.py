@@ -4,16 +4,15 @@ The reference *trains* its joint model — a BiLSTM-CRF mention detector
 plus a span-pair relation classifier (BASELINE.json:6; SURVEY.md
 §2.E/§2.F, `[pub: antNRE/src/seq_decoder.py, entrel/train]` unverified).
 The forward math is nnmodel's (char_row, encode_padded, crf_lattice,
-pair_features), run in the training dtype with backward caches; this
-module adds the losses and the backward passes:
+pair_features, gcn_forward), run in the training dtype with backward
+caches; this module adds the losses and the backward passes:
 
 - ``crf_nll_grad``: the CRF negative log-likelihood from the
   crf_lattice log-partition, the posterior unary + pairwise marginals,
   and from them the exact gradients w.r.t. emissions and the transition
-  matrix. The same BIO structural constraints used at decode time
-  (nnmodel.CRF_CONSTRAINTS / START_CONSTRAINTS) are applied as additive
-  constants inside the partition function, so training optimizes the
-  *constrained* distribution Viterbi decodes from.
+  matrix. The BIO constraints Viterbi decodes under
+  (nnmodel.constrained_crf) enter the partition function as additive
+  constants, so training optimizes the *constrained* distribution.
 - ``encoder_forward``: nnmodel's padded forward, keeping the caches the
   backward needs — float64 so finite-difference gradient checks are
   meaningful, or float32 for the corpus-scale path.
@@ -27,10 +26,8 @@ module adds the losses and the backward passes:
   whose feature gradient flows back into the encoder hidden states, one
   shared backward.
 
-Everything here returns SUMS (loss sums, gradient sums, token counts):
-sums compose across partitions, so the Spark layer (train.py) is a pure
-all-reduce — per-partition partial rows, one driver-side add — identical
-in shape to the proven relation-decoder trainer.
+Everything here returns SUMS (loss sums, gradient sums, token counts),
+which compose across partitions by addition (train._run_epochs).
 
 Gradient correctness is pinned by central finite differences at random
 parameter coordinates for every trainable array (tests/test_train_encoder
@@ -43,13 +40,16 @@ from __future__ import annotations
 import numpy as np
 
 from antnre_spark.nnmodel import (
-    CRF_CONSTRAINTS,
+    ENT_TYPES,
     N_TAGS,
-    START_CONSTRAINTS,
     TAGS,
+    AntNREModel,
+    _softmax,
     char_row,
+    constrained_crf,
     crf_lattice,
     encode_padded,
+    gcn_forward,
     pair_features,
 )
 
@@ -110,6 +110,16 @@ def tags_from_spans(spans: list[tuple[int, int, str]], n_tokens: int) -> np.ndar
     return tags
 
 
+def _softmax_xent(logits: np.ndarray, y: np.ndarray) -> tuple[float, np.ndarray]:
+    """Softmax cross-entropy SUM over the rows of ``logits`` [n, k] with
+    gold ids ``y`` [n], and its gradient w.r.t. the logits."""
+    P = _softmax(logits, axis=1)
+    rows = np.arange(len(y))
+    loss = float(-np.log(P[rows, y] + 1e-300).sum())
+    P[rows, y] -= 1.0
+    return loss, P
+
+
 def _logsumexp(x: np.ndarray, axis: int) -> np.ndarray:
     m = x.max(axis=axis, keepdims=True)
     return (m + np.log(np.exp(x - m).sum(axis=axis, keepdims=True))).squeeze(axis)
@@ -133,16 +143,11 @@ def crf_nll_grad(
     if T == 0:
         return 0.0, np.zeros_like(emissions), np.zeros_like(transitions)
     em = emissions.astype(np.float64)
-    trans = transitions.astype(np.float64) + CRF_CONSTRAINTS.astype(np.float64)
+    trans, start = constrained_crf(transitions, np.float64)
     alpha, beta = crf_lattice(em, trans)
     logZ = float(_logsumexp(alpha[T - 1], axis=0))
     gamma = np.exp(alpha + beta - logZ)  # unary marginals [T, n_tags]
-
-    # gold path score
-    gold = float(em[np.arange(T), tags].sum() + START_CONSTRAINTS[tags[0]])
-    if T > 1:
-        gold += float(trans[tags[:-1], tags[1:]].sum())
-    nll = logZ - gold
+    nll = logZ - _path_score(em, trans, start, tags)
 
     d_em = gamma.copy()
     d_em[np.arange(T), tags] -= 1.0
@@ -174,8 +179,7 @@ def crf_nll_grad_many(
     if T == 0 or B == 0:
         return 0.0, np.zeros_like(emissions), np.zeros_like(transitions)
     em = emissions.astype(np.float64)
-    trans = transitions.astype(np.float64) + CRF_CONSTRAINTS.astype(np.float64)
-    start = START_CONSTRAINTS.astype(np.float64)
+    trans, start = constrained_crf(transitions, np.float64)
 
     # forward (alpha) in log space, [B, T, N]
     alpha = np.empty((B, T, N_TAGS), dtype=np.float64)
@@ -196,17 +200,11 @@ def crf_nll_grad_many(
 
     gamma = np.exp(alpha + beta - logZ[:, None, None])  # [B, T, N]
 
-    ar = np.arange(T)
-    gold = (
-        np.take_along_axis(em, tags[:, :, None], axis=2).squeeze(2).sum(axis=1)
-        + start[tags[:, 0]]
-    )
-    if T > 1:
-        gold += trans[tags[:, :-1], tags[:, 1:]].sum(axis=1)
+    gold = np.array([_path_score(em[b], trans, start, tags[b]) for b in range(B)])
     nll_sum = float((logZ - gold).sum())
 
     d_em = gamma
-    d_em[np.arange(B)[:, None], ar[None, :], tags] -= 1.0
+    d_em[np.arange(B)[:, None], np.arange(T)[None, :], tags] -= 1.0
 
     d_trans = np.zeros((N_TAGS, N_TAGS), dtype=np.float64)
     for t in range(T - 1):
@@ -337,8 +335,7 @@ def encoder_backward(
     x, mask = cache["x"], cache["mask"]
     B, T, _ = x.shape
     H2 = cache["hid"].shape[2]
-    grads = {k: np.zeros_like(w64[k]) for k in ENC_PARAMS if k != "crf_transitions"}
-    grads["crf_transitions"] = np.zeros_like(w64["crf_transitions"])
+    grads = {k: np.zeros_like(w64[k]) for k in ENC_PARAMS}
 
     # assemble padded [B, T, ...] grads from per-sentence lists
     # (dtype follows the forward: float64 exact path or float32 scale path)
@@ -360,11 +357,8 @@ def encoder_backward(
     d_x_fw = _lstm_backward(w64, x, cache["fw_caches"], d_hid[:, :, :h], "fw", grads)
     d_x_bw = _lstm_backward(w64, x, cache["bw_caches"], d_hid[:, :, h:], "bw", grads)
     d_x = d_x_fw + d_x_bw
-    # zero out padding positions (forward wrote zeros there; inputs at pad
-    # steps DO feed gate pre-activations whose outputs are masked away —
-    # but the mask-carry forward makes those gates affect nothing, and
-    # d_out is zero at pads, so dg is zero there already; this is belt +
-    # braces for exactness)
+    # zero the padding positions (dg is already zero there under the
+    # mask-carry forward; this keeps that exact)
     d_x *= mask[:, :, None]
 
     wdim = emb.shape[1]
@@ -421,18 +415,15 @@ def kbest_viterbi(
     """Constrained k-best decode: returns up to k (score, tag_ids) pairs,
     best first. Same BIO constraints and additive-constant handling as
     crf_nll_grad/viterbi; ties break toward the lower source state, then
-    the earlier rank (deterministic). Backpointer k-best DP:
-    each (t, state, rank) cell stores (score, src_state, src_rank) — O(1)
-    per entry — and the k paths are reconstructed once at the end, so
-    per-step work is O(N_TAGS^2 * k) instead of the old path-tuple DP's
-    O(T) tuple copies per candidate (O(T^2) per sentence — the fit_mrt
-    executor hot loop on long sentences)."""
+    the earlier rank (deterministic). Backpointer k-best DP: each (t,
+    state, rank) cell stores (score, src_state, src_rank) and the k paths
+    are reconstructed once at the end, so per-step work is O(N_TAGS^2 *
+    k) with no per-candidate path copies."""
     T = emissions.shape[0]
     if T == 0:
         return []
     em = emissions.astype(np.float64)
-    trans = transitions.astype(np.float64) + CRF_CONSTRAINTS.astype(np.float64)
-    start = START_CONSTRAINTS.astype(np.float64)
+    trans, start = constrained_crf(transitions, np.float64)
     # layers[t][state] = up to k (score, src_state, src_rank) best-first;
     # (src_state, src_rank) index layers[t-1]; (-1, -1) marks t=0
     layers: list[list[list[tuple[float, int, int]]]] = [
@@ -472,8 +463,6 @@ def _span_f1_risk(
 ) -> float:
     """1 - exact-span micro F1 of a tag sequence vs gold spans — the
     task risk MRT minimizes (the CoNLL04-style entity criterion)."""
-    from antnre_spark.nnmodel import AntNREModel
-
     pred = set(AntNREModel.spans_from_tags(pred_tags))
     gold = set(gold_spans)
     if not pred and not gold:
@@ -488,6 +477,9 @@ def _span_f1_risk(
 def _path_score(
     em: np.ndarray, trans_eff: np.ndarray, start: np.ndarray, tags: np.ndarray
 ) -> float:
+    """Score of one tag path under the constrained CRF (constrained_crf's
+    transitions and start row): the CRF NLL's gold term and MRT's
+    candidate scores."""
     s = float(em[np.arange(len(tags)), tags].sum() + start[tags[0]])
     if len(tags) > 1:
         s += float(trans_eff[tags[:-1], tags[1:]].sum())
@@ -514,8 +506,7 @@ def mrt_sentence_grad(
     if T == 0:
         return 0.0, np.zeros_like(emissions), np.zeros_like(transitions), []
     em = emissions.astype(np.float64)
-    trans_eff = transitions.astype(np.float64) + CRF_CONSTRAINTS.astype(np.float64)
-    start = START_CONSTRAINTS.astype(np.float64)
+    trans_eff, start = constrained_crf(transitions, np.float64)
     if candidates is None:
         cands = [tags for _sc, tags in kbest_viterbi(emissions, transitions, k)]
         gold_tags = tags_from_spans(gold_spans, T)
@@ -525,10 +516,7 @@ def mrt_sentence_grad(
         cands = candidates
     scores = np.array([_path_score(em, trans_eff, start, c) for c in cands])
     risks = np.array([_span_f1_risk(c, gold_spans) for c in cands])
-    z = alpha * scores
-    z -= z.max()
-    q = np.exp(z)
-    q /= q.sum()
+    q = _softmax(alpha * scores)
     L = float((q * risks).sum())
     ds = alpha * q * (risks - L)  # [K]
     d_em = np.zeros_like(em)
@@ -588,61 +576,36 @@ def gcn_grad_loss(
     w: dict[str, np.ndarray],
 ) -> tuple[float, dict[str, np.ndarray], np.ndarray, int]:
     """Cross-entropy loss + exact gradients for ONE sentence's GCN type
-    head, teacher-forced on the gold mention graph — the training twin of
-    nnmodel.refine_mention_types (same message-passing round: nodes =
-    gold-span-mean hidden states, adjacency = symmetric gold relation
-    edges + self-loops, row-normalized, H = relu(A X W), type logits =
-    H Wt + b). Labels = the gold entity types, so the head learns to
-    reproduce a mention's type FROM its graph neighborhood — the ACL'19
-    joint-type-inference objective (`[pub: joint type inference via
-    GCN]` unverified, SURVEY.md §0).
+    head, teacher-forced on the gold mention graph: nnmodel.gcn_forward
+    (the forward refine_mention_types runs at inference) over the gold
+    spans and symmetric gold relation edges, in float64. Labels = the
+    gold entity types, so the head learns to reproduce a mention's type
+    FROM its graph neighborhood — the ACL'19 joint-type-inference
+    objective (`[pub: joint type inference via GCN]` unverified,
+    SURVEY.md §0).
 
     Returns (loss_sum, {gcn param grads}, d_hidden [L, 2h] — the encoder
     coupling, float64 — and n_nodes). All sums, composable across
     sentences/partitions like every other unit in this module."""
-    from antnre_spark.nnmodel import ENT_TYPES
-
     n = len(spans)
-    zero_grads = {
-        "gcn_W": np.zeros_like(np.asarray(w["gcn_W"], dtype=np.float64)),
-        "gcn_type_W": np.zeros_like(np.asarray(w["gcn_type_W"], dtype=np.float64)),
-        "gcn_type_b": np.zeros_like(np.asarray(w["gcn_type_b"], dtype=np.float64)),
-    }
     if n == 0:
+        zero_grads = {k: np.zeros(np.shape(w[k])) for k in GCN_PARAMS}
         return 0.0, zero_grads, np.zeros_like(hidden), 0
-    W = np.asarray(w["gcn_W"], dtype=np.float64)
-    Wt = np.asarray(w["gcn_type_W"], dtype=np.float64)
-    bt = np.asarray(w["gcn_type_b"], dtype=np.float64)
+    w64 = {k: np.asarray(w[k], dtype=np.float64) for k in GCN_PARAMS}
     hid = np.asarray(hidden, dtype=np.float64)
-
-    X = np.stack([hid[b:e].mean(axis=0) for b, e, _t in spans])  # [n, 2h]
-    A = np.eye(n, dtype=np.float64)
-    for (i, j) in rels:
-        A[i, j] = 1.0
-        A[j, i] = 1.0
-    A /= A.sum(axis=1, keepdims=True)
-
-    AX = A @ X
-    pre = AX @ W
-    H = np.maximum(pre, 0.0)
-    logits = H @ Wt + bt  # [n, n_types]
+    fwd: dict = {}
+    logits = gcn_forward(w64, hid, spans, rels, sink=fwd)  # [n, n_types]
     y = np.array([ENT_TYPES.index(t) for _b, _e, t in spans], dtype=np.int64)
 
-    logits = logits - logits.max(axis=1, keepdims=True)
-    expl = np.exp(logits)
-    P = expl / expl.sum(axis=1, keepdims=True)
-    loss = float(-np.log(P[np.arange(n), y] + 1e-300).sum())
-
-    dlogits = P
-    dlogits[np.arange(n), y] -= 1.0
+    loss, dlogits = _softmax_xent(logits, y)
     grads = {
-        "gcn_type_W": H.T @ dlogits,
+        "gcn_type_W": fwd["H"].T @ dlogits,
         "gcn_type_b": dlogits.sum(axis=0),
     }
-    dH = dlogits @ Wt.T
-    dH[pre <= 0.0] = 0.0
-    grads["gcn_W"] = AX.T @ dH
-    dX = A.T @ (dH @ W.T)  # [n, 2h]
+    dH = dlogits @ w64["gcn_type_W"].T
+    dH[fwd["pre"] <= 0.0] = 0.0
+    grads["gcn_W"] = fwd["AX"].T @ dH
+    dX = fwd["A"].T @ (dH @ w64["gcn_W"].T)  # [n, 2h]
 
     d_hidden = np.zeros_like(hid)
     for i, (b, e, _t) in enumerate(spans):
@@ -660,19 +623,10 @@ def rel_grad_loss_dX(
     """Softmax cross-entropy SUM over the relation relu-MLP, returning
     parameter grads AND dX (the feature gradient that flows back into the
     encoder for joint training)."""
-    W1 = np.asarray(rel_w["rel_W1"], dtype=np.float64)
-    b1 = np.asarray(rel_w["rel_b1"], dtype=np.float64)
-    W2 = np.asarray(rel_w["rel_W2"], dtype=np.float64)
-    b2 = np.asarray(rel_w["rel_b2"], dtype=np.float64)
+    W1, b1, W2, b2 = (np.asarray(rel_w[k], dtype=np.float64) for k in REL_PARAMS)
     H = np.maximum(X @ W1 + b1, 0.0)
     logits = H @ W2 + b2
-    logits = logits - logits.max(axis=1, keepdims=True)
-    expl = np.exp(logits)
-    P = expl / expl.sum(axis=1, keepdims=True)
-    n = len(y)
-    loss = float(-np.log(P[np.arange(n), y] + 1e-300).sum())
-    dlogits = P
-    dlogits[np.arange(n), y] -= 1.0
+    loss, dlogits = _softmax_xent(logits, y)
     dW2 = H.T @ dlogits
     db2 = dlogits.sum(axis=0)
     dH = dlogits @ W2.T
@@ -680,11 +634,8 @@ def rel_grad_loss_dX(
     dW1 = X.T @ dH
     db1 = dH.sum(axis=0)
     dX = dH @ W1.T
-    return (
-        {"rel_W1": dW1, "rel_b1": db1, "rel_W2": dW2, "rel_b2": db2},
-        dX,
-        loss,
-    )
+    grads = {"rel_W1": dW1, "rel_b1": db1, "rel_W2": dW2, "rel_b2": db2}
+    return grads, dX, loss
 
 
 def batch_loss_grad(
@@ -725,17 +676,12 @@ def batch_loss_grad(
     # crf_nll_grad_many per exact sentence length — the per-timestep
     # Python loop amortizes over every same-length sentence in the batch
     by_len: dict[int, list[int]] = {}
-    for si in range(len(sentences)):
-        L = cache["lens"][si]
+    for si, L in enumerate(cache["lens"]):
         if L:
             by_len.setdefault(L, []).append(si)
     for L, idxs in by_len.items():
-        em_b = np.stack(
-            [np.asarray(cache["emissions"][si], dtype=np.float64) for si in idxs]
-        )
-        tags_b = np.stack(
-            [tags_from_spans(sentences[si]["spans"], L) for si in idxs]
-        )
+        em_b = np.stack([cache["emissions"][si] for si in idxs]).astype(np.float64)
+        tags_b = np.stack([tags_from_spans(sentences[si]["spans"], L) for si in idxs])
         nll_sum, d_em_b, d_tr = crf_nll_grad_many(em_b, tags_b, trans)
         crf_loss += nll_sum
         n_tokens += L * len(idxs)
@@ -743,8 +689,7 @@ def batch_loss_grad(
         for bk, si in enumerate(idxs):
             d_emissions[si] += d_em_b[bk]
 
-    rel_shapes = {k: np.asarray(weights[k]).shape for k in REL_PARAMS}
-    rel_grads = {k: np.zeros(rel_shapes[k], dtype=np.float64) for k in REL_PARAMS}
+    rel_grads = {k: np.zeros(np.shape(weights[k])) for k in REL_PARAMS}
     rel_loss, n_pairs = 0.0, 0
     if rel_weight > 0.0:
         blocks, labels, meta = [], [], []
@@ -773,12 +718,8 @@ def batch_loss_grad(
                 if hi > lo:
                     d_hidden[si][lo:hi] += dX[row, 2 * h2 :] / (hi - lo)
 
-    gcn_shapes = {
-        k: np.asarray(weights[k]).shape for k in GCN_PARAMS if k in weights
-    }
     gcn_grads = {
-        k: np.zeros(gcn_shapes.get(k, (0,)), dtype=np.float64)
-        for k in GCN_PARAMS
+        k: np.zeros(np.shape(weights[k]) if k in weights else 0) for k in GCN_PARAMS
     }
     gcn_loss, n_nodes = 0.0, 0
     if gcn_weight > 0.0:
@@ -795,24 +736,11 @@ def batch_loss_grad(
             d_hidden[si] += gcn_weight * dh
 
     grads = encoder_backward(cache, d_hidden, d_emissions)
-    grads["crf_transitions"] = (
-        np.asarray(grads["crf_transitions"], dtype=np.float64) + d_trans
-    )
-    enc_flat = flatten_params(grads, ENC_PARAMS)
-    rel_flat = flatten_params(rel_grads, REL_PARAMS)
-    gcn_flat = (
-        flatten_params(gcn_grads, GCN_PARAMS)
-        if gcn_shapes
-        else np.zeros(0, dtype=np.float64)
-    )
+    grads["crf_transitions"] = grads["crf_transitions"].astype(np.float64) + d_trans
     return (
-        enc_flat,
-        rel_flat,
-        gcn_flat,
-        crf_loss,
-        rel_weight * rel_loss,
-        gcn_weight * gcn_loss,
-        n_tokens,
-        n_pairs,
-        n_nodes,
+        flatten_params(grads, ENC_PARAMS),
+        flatten_params(rel_grads, REL_PARAMS),
+        flatten_params(gcn_grads, GCN_PARAMS),  # empty without gcn_* weights
+        crf_loss, rel_weight * rel_loss, gcn_weight * gcn_loss,
+        n_tokens, n_pairs, n_nodes,
     )

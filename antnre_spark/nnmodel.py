@@ -129,6 +129,16 @@ START_CONSTRAINTS = np.array(
 )
 
 
+def constrained_crf(
+    transitions: np.ndarray, dtype: type = np.float32
+) -> tuple[np.ndarray, np.ndarray]:
+    """(transitions + CRF_CONSTRAINTS, START_CONSTRAINTS) in ``dtype``: the
+    constrained CRF every decoder, lattice and training loss scores tag
+    paths under (float32 to decode, float64 for lattices and losses)."""
+    trans = np.asarray(transitions, dtype=dtype) + CRF_CONSTRAINTS.astype(dtype)
+    return trans, START_CONSTRAINTS.astype(dtype)
+
+
 # ---- forward functions shared by inference and training -----------------
 
 
@@ -290,6 +300,33 @@ def pair_features(
     return pairs, X
 
 
+def gcn_forward(
+    w: dict[str, np.ndarray],
+    hidden: np.ndarray,
+    spans: list,
+    edges,
+    sink: dict | None = None,
+) -> np.ndarray:
+    """F4 GCN type logits [n, n_types] of one sentence's mention graph, in
+    hidden's dtype: one message-passing round with nodes = span-mean
+    hidden states (``spans``: (begin, end, ...) tuples, n >= 1), adjacency
+    = the symmetric ``edges`` ((i, j) node pairs) plus self-loops,
+    row-normalized, then relu(A X W) Wt + b. ``sink``: a dict that
+    receives ``A``, ``AX``, ``pre`` (= A X W) and ``H`` for the backward."""
+    n = len(spans)
+    X = np.stack([_mean0(hidden[s[0] : s[1]]) for s in spans])  # [n, 2h]
+    A = np.eye(n, dtype=hidden.dtype)
+    for i, j in edges:
+        A[i, j] = A[j, i] = 1.0
+    A /= A.sum(axis=1, keepdims=True)
+    AX = A @ X
+    pre = AX @ w["gcn_W"]
+    H = np.maximum(pre, 0.0)
+    if sink is not None:
+        sink.update(A=A, AX=AX, pre=pre, H=H)
+    return H @ w["gcn_type_W"] + w["gcn_type_b"]
+
+
 class AntNREModel:
     """Joint NER+RE model over whitespace tokens: the float32 inference
     entry points over the shared forward functions above."""
@@ -322,11 +359,8 @@ class AntNREModel:
         return np.array([v.get(t.lower(), UNK_ID) for t in tokens], dtype=np.int64)
 
     def _char_feats(self, unique_tokens: list[str]) -> np.ndarray:
-        """char_row per unique token. Rows are memoized per token across
-        calls in _char_cache (the model instance lives for the worker's
-        life, so repeated tokens across Arrow batches skip the conv),
-        which holds at most CHAR_CACHE_MAX entries (oldest evicted
-        first)."""
+        """char_row per unique token, memoized in _char_cache (at most
+        CHAR_CACHE_MAX entries, oldest evicted first)."""
         cache = self._char_cache
         c_out = self.w["char_conv_W"].shape[0]
         out = np.zeros((len(unique_tokens), c_out), dtype=np.float32)
@@ -383,11 +417,11 @@ class AntNREModel:
     def viterbi(self, emissions: np.ndarray) -> np.ndarray:
         """CRF Viterbi decode with BIO constraints; ties -> lowest tag id
         (np.argmax's first-max rule). `[pub: seq_decoder.py]` semantics."""
-        trans = self.w["crf_transitions"] + CRF_CONSTRAINTS
+        trans, start = constrained_crf(self.w["crf_transitions"])
         T = emissions.shape[0]
         if T == 0:
             return np.zeros(0, dtype=np.int64)
-        score = emissions[0] + START_CONSTRAINTS
+        score = emissions[0] + start
         back = np.zeros((T, N_TAGS), dtype=np.int64)
         for t in range(1, T):
             cand = score[:, None] + trans  # [src, dst]
@@ -405,11 +439,11 @@ class AntNREModel:
         first-max tie-break as ``viterbi`` (asserted equal in
         tests/test_nnmodel.py); one python loop over T replaces B of them.
         """
-        trans = self.w["crf_transitions"] + CRF_CONSTRAINTS
+        trans, start = constrained_crf(self.w["crf_transitions"])
         B, T, _ = emissions.shape
         if T == 0:
             return np.zeros((B, 0), dtype=np.int64)
-        score = emissions[:, 0] + START_CONSTRAINTS  # [B, n]
+        score = emissions[:, 0] + start  # [B, n]
         back = np.zeros((B, T, N_TAGS), dtype=np.int64)
         for t in range(1, T):
             cand = score[:, :, None] + trans[None]  # [B, src, dst]
@@ -433,7 +467,7 @@ class AntNREModel:
         (encoder_grad.crf_nll_grad)."""
         if emissions.shape[0] == 0:
             return np.zeros((0, N_TAGS), dtype=np.float64)
-        trans = self.w["crf_transitions"].astype(np.float64) + CRF_CONSTRAINTS
+        trans, _start = constrained_crf(self.w["crf_transitions"], np.float64)
         alpha, beta = crf_lattice(emissions.astype(np.float64), trans)
         logp = alpha + beta
         logp -= logp.max(axis=1, keepdims=True)
@@ -555,15 +589,12 @@ class AntNREModel:
         mentions: list[Mention],
         relations: list[Relation],
     ) -> tuple[list[Mention], list[Relation]]:
-        """F4: one GCN message-passing round over the per-sentence mention
-        graph — nodes = mentions (span-mean hidden states), edges =
-        predicted relations (symmetric) + self-loops, degree-normalized —
-        jointly refining entity types (SURVEY.md §2.F, the ACL'19-style
-        joint variant; `[pub: joint_model.py]` unverified).
-
-        Per-sentence graphs have <= MAX_MENTIONS_PER_SENT nodes, so this is
-        plain in-UDF numpy: no distributed graph machinery, zero extra
-        shuffles — the refinement rides inside the same mapInPandas batch.
+        """F4: gcn_forward over the per-sentence mention graph (nodes =
+        mentions, edges = predicted relations) jointly refines entity
+        types (SURVEY.md §2.F, the ACL'19-style joint variant;
+        `[pub: joint_model.py]` unverified). Graphs have <=
+        MAX_MENTIONS_PER_SENT nodes, so this is plain in-UDF numpy inside
+        the same mapInPandas batch: no graph machinery, no shuffle.
 
         The decoded type gets GCN_KEEP_MARGIN as a head start; the GCN can
         flip a type only on strong graph evidence (with the untrained
@@ -574,17 +605,9 @@ class AntNREModel:
         """
         if not mentions or "gcn_W" not in self.w:
             return mentions, relations
-        n = len(mentions)
-        X = np.stack(
-            [hidden[m.begin : m.end].mean(axis=0) for m in mentions]
-        )  # [n, 2h]
-        A = np.eye(n, dtype=np.float32)
-        for r in relations:
-            A[r.subj, r.obj] = 1.0
-            A[r.obj, r.subj] = 1.0
-        A = A / A.sum(axis=1, keepdims=True)
-        H = np.maximum(A @ X @ self.w["gcn_W"], 0.0)
-        logits = H @ self.w["gcn_type_W"] + self.w["gcn_type_b"]  # [n, types]
+        spans = [(m.begin, m.end) for m in mentions]
+        edges = [(r.subj, r.obj) for r in relations]
+        logits = gcn_forward(self.w, hidden, spans, edges)  # [n, types]
         refined: list[Mention] = []
         for i, m in enumerate(mentions):
             li = logits[i].copy()
@@ -625,13 +648,8 @@ class AntNREModel:
         groups: dict[int, list[int]] = {}
         for i, (_h, e) in enumerate(encoded):
             groups.setdefault(e.shape[0], []).append(i)
-        for T, idxs in groups.items():
-            emis = (
-                np.stack([encoded[i][1] for i in idxs])
-                if T
-                else np.zeros((len(idxs), 0, N_TAGS), dtype=np.float32)
-            )
-            tags = self.viterbi_many(emis)
+        for idxs in groups.values():
+            tags = self.viterbi_many(np.stack([encoded[i][1] for i in idxs]))
             for k, i in enumerate(idxs):
                 tags_all[i] = tags[k]
         results = []

@@ -279,7 +279,10 @@ def link_job(spark: SparkSession, cfg: PipelineConfig) -> dict:
         tri_t = cfg.table("triples")
         vert_t = cfg.table("vertices")
         hub_t = cfg.table("hub_entities")
-        ent_t.overwrite_partitions(entities.withColumn("part", F.lit(0)), ["part"])
+        # every output is recomputed from ALL mentions, so each write is a
+        # full-table overwrite: a partition overwrite would keep the old
+        # files of any pred=/bucket= partition a relink no longer fills
+        ent_t.overwrite(entities.withColumn("part", F.lit(0)), ["part"])
         # edge table layout per SURVEY.md §4.3.6: partition by pred,
         # bucket by subj — point lookups prune to one (pred, bucket)
         # slice via manifests. Clustered by the partition columns first,
@@ -287,16 +290,16 @@ def link_job(spark: SparkSession, cfg: PipelineConfig) -> dict:
         # upstream task; the explicit count (one task per core, the model
         # stage's rule) keeps AQE from coalescing this tiny shuffle into
         # a single writer task.
-        tri_snap = tri_t.overwrite_partitions(
+        tri_snap = tri_t.overwrite(
             triples.withColumn("bucket", bucket_of(F.col("subj"), 16)).repartition(
                 spark.sparkContext.defaultParallelism, "pred", "bucket"
             ),
             ["pred", "bucket"],
         )
-        vert_t.overwrite_partitions(vertices.withColumn("part", F.lit(0)), ["part"])
+        vert_t.overwrite(vertices.withColumn("part", F.lit(0)), ["part"])
         # H5 degree stats — the skew-planning input (BASELINE.json:6 "hub
         # entities"): next runs read this to pick explicit salts
-        hub_t.overwrite_partitions(
+        hub_t.overwrite(
             materialize.hub_entities(triples, k=100).withColumn("part", F.lit(0)),
             ["part"],
         )

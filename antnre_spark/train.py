@@ -1,35 +1,21 @@
 """Distributed training of the joint model over gold annotations
 (fixtures/gen_transcripts gold: tokens + ent_spans + relations). Every
-trainer runs nnmodel's forward — the same char-CNN, BiLSTM, CRF lattice
-and pair features the extractor serves — with the losses and backward
-passes of antnre_spark/encoder_grad.py.
+trainer runs nnmodel's forward — the char-CNN, BiLSTM, CRF lattice, pair
+features and GCN the extractor serves — with encoder_grad.py's losses
+and backward passes, on the one epoch driver ``_run_epochs``:
 
-Relation decoder (``pair_training_frame`` + ``fit_relation_decoder``):
-supervised training of the span-pair MLP (rel_W1/b1/W2/b2) over FROZEN
-encoder features. The encoder stays fixed — so feature extraction is a
-one-time distributed pass, and each training epoch touches only the
-compact pair-feature table. The additive inference-time priors
-(pair_bias / validity mask / trigger lexicon / order preference) are NOT
-trained: they are priors applied on top of the learned logits, exactly
-as in nnmodel.classify_relations. Execution model (classic synchronous
-data-parallel SGD — public pattern):
-
-  1. ``pair_training_frame``: one Arrow-batched mapInPandas over gold
-     sentences — encode (frozen BiLSTM), nnmodel.pair_features over the
-     gold spans, label each admissible ordered pair with its gold
-     relation id (0 = None). Distributed, narrow, runs once; cache the
-     output.
-  2. ``fit_relation_decoder``: per epoch, broadcast the current
-     weights; every partition computes its LOCAL gradient/loss sums
-     (map-side combine — one output row per Arrow batch, each a flat
-     float64 gradient vector of ~12.7k entries); the driver sums the
-     partial rows (a bounded collect: n_batches x ~100 KB) and applies
-     a full-batch gradient step. This is the parameter-server-free
-     all-reduce shape that scales to any executor count: gradients,
-     never features, cross the wire.
-
-Mention detector / joint model (``fit_joint``, ``fit_mrt``): the same
-all-reduce shape over encoder_grad.batch_loss_grad / batch_mrt_grad.
+- ``fit_relation_decoder``: the span-pair MLP (rel_W1/b1/W2/b2) over
+  FROZEN encoder features, heavy-ball momentum. Feature extraction
+  (``pair_training_frame``: encode, nnmodel.pair_features over the gold
+  spans, label each admissible ordered pair with its gold relation id,
+  0 = None) is a one-time distributed pass the caller caches, so each
+  epoch touches only the compact pair-feature table. The additive
+  inference-time priors (pair_bias / validity mask / trigger lexicon /
+  order preference) are NOT trained: they apply on top of the learned
+  logits, exactly as in nnmodel.classify_relations.
+- ``fit_joint``: the mention detector or the joint model (CRF NLL,
+  optional relation cross-entropy and F4 GCN head), Adam.
+- ``fit_mrt``: minimum-risk fine-tuning of the mention detector, Adam.
 
 Gradient correctness is pinned by finite-difference tests; learning is
 pinned by loss-decreases + accuracy tests from random init on the
@@ -38,7 +24,8 @@ fixture gold (tests/test_train.py, tests/test_train_encoder.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -58,7 +45,142 @@ from antnre_spark.extract import TOKEN_BUDGET, _budget_bounds, _model_for
 from antnre_spark.nnmodel import REL_TYPES, AntNREModel, pair_features
 
 PAIR_SCHEMA = "feat array<double>, label int"
-GRAD_SCHEMA = "grad array<double>, loss double, n long"
+
+# above this many input partitions an epoch's per-partition gradient rows
+# are summed by 8 combiner tasks before the driver collect (_run_epochs)
+COMBINE_ABOVE = 16
+
+
+class _Fields(NamedTuple):
+    """Named sums of one trainer's gradient rows. The row schema, the
+    partition/combiner/driver reduce and the emit rule all derive from
+    these names, so a field cannot be dropped at one reduce level only."""
+
+    arrays: tuple[str, ...]  # flat float64 gradients, one per params vector
+    scalars: tuple[str, ...]  # float loss sums
+    counts: tuple[str, ...]  # integer denominators; counts[0] == 0 emits no row
+
+
+def _sum_into(acc: dict, parts: Iterable[dict]) -> dict:
+    """Add partial-sum dicts into ``acc`` in order; a field absent from
+    ``acc`` starts from its first partial. Every reduce level — chunks in
+    a partition, combiner rows, collected rows — adds with this rule."""
+    for part in parts:
+        for f, v in part.items():
+            acc[f] = acc[f] + v if f in acc else v
+    return acc
+
+
+def _run_epochs(
+    src: DataFrame,
+    params: tuple[np.ndarray, ...],
+    fields: _Fields,
+    batch_sums: Callable[[pd.DataFrame, tuple], Iterator[dict]],
+    step: Callable[[int, dict, tuple], tuple[tuple, object]],
+    epochs: int,
+    empty: str,
+    skipped: object = None,
+    sample_fraction: float | None = None,
+    seed: int = 0,
+    zero_start: bool = False,
+) -> tuple[tuple[np.ndarray, ...], list]:
+    """The epoch loop of every trainer: synchronous data-parallel gradient
+    descent, all-reduce without a parameter server. Each epoch ``ep`` in
+    1..epochs:
+
+    1. with ``sample_fraction``, train on a fresh deterministic Bernoulli
+       sample of ``src`` (``sample(seed + ep)``): minibatch SGD at
+       DataFrame granularity, where a full scan per step is neither
+       needed nor affordable;
+    2. broadcast the flat parameter vectors ``params``;
+    3. one mapInPandas: ``batch_sums(pdf, params)`` yields partial-sum
+       dicts per non-empty Arrow batch, and each partition adds them into
+       ONE row (map-side combine) — gradients, never features or
+       activations, cross the wire (~40k float64 ≈ 320 KB per partition
+       for the joint model), so the shape is executor-count-independent;
+    4. above COMBINE_ABOVE input partitions, 8 combiner tasks sum those
+       rows first — a two-level tree reduce that caps the driver's fan-in
+       at 8 rows for one tiny shuffle; below it the flat collect saves a
+       stage barrier per epoch;
+    5. collect and sum; ``step(ep, sums, params)`` returns (new params,
+       history entry) — the optimizer state lives on the driver.
+
+    An epoch with no rows appends ``skipped`` when sampling (an unlucky
+    small sample; the optimizer state is kept) and raises
+    ValueError(``empty``) otherwise. Sums are float64 and add in a fixed
+    order: scalars from 0.0, counts from 0, arrays from the first partial
+    — or, within a partition, from zeros when ``zero_start``."""
+    names = fields.arrays + fields.scalars + fields.counts
+    schema = ", ".join(
+        [f"{f} array<double>" for f in fields.arrays]
+        + [f"{f} double" for f in fields.scalars]
+        + [f"{f} long" for f in fields.counts]
+    )
+
+    def start() -> dict:
+        return dict.fromkeys(fields.scalars, 0.0) | dict.fromkeys(fields.counts, 0)
+
+    def as_sums(row) -> dict:  # a collected Row or a pandas record
+        return {
+            f: np.asarray(row[f], dtype=np.float64) if f in fields.arrays else row[f]
+            for f in names
+        }
+
+    def emit(acc: dict) -> Iterator[pd.DataFrame]:
+        if acc[fields.counts[0]]:
+            yield pd.DataFrame(
+                {f: [acc[f].tolist() if f in fields.arrays else acc[f]] for f in names}
+            )
+
+    def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = (as_sums(r) for pdf in batches for r in pdf.to_dict("records"))
+        yield from emit(_sum_into(start(), rows))
+
+    sc = src.sparkSession.sparkContext
+    tree = src.rdd.getNumPartitions() > COMBINE_ABOVE
+    history: list = []
+    for ep in range(1, epochs + 1):
+        epoch_src = (
+            src.sample(fraction=sample_fraction, seed=seed + ep)
+            if sample_fraction is not None
+            else src
+        )
+        bc = sc.broadcast(params)
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            p = bc.value
+            acc = start()
+            if zero_start:
+                acc.update(zip(fields.arrays, map(np.zeros_like, p)))
+            for pdf in batches:
+                if not pdf.empty:
+                    _sum_into(acc, batch_sums(pdf, p))
+            yield from emit(acc)
+
+        grad_df = epoch_src.mapInPandas(run, schema)
+        if tree:
+            grad_df = grad_df.repartition(8).mapInPandas(combine, schema)
+        rows = grad_df.collect()
+        bc.unpersist()
+        if not rows:
+            if sample_fraction is None:
+                raise ValueError(empty)
+            history.append(skipped)
+            continue
+        params, entry = step(ep, _sum_into(start(), map(as_sums, rows)), params)
+        history.append(entry)
+    return params, history
+
+
+def _adam_step(w, g, m, v, t, lr, b1=0.9, b2=0.999, eps=1e-8) -> None:
+    """One Adam step, in place on ``w`` and its moments ``m``, ``v``."""
+    m *= b1
+    m += (1 - b1) * g
+    v *= b2
+    v += (1 - b2) * g * g
+    mh = m / (1 - b1**t)
+    vh = v / (1 - b2**t)
+    w -= lr * mh / (np.sqrt(vh) + eps)
 
 
 def _gold_pairs(
@@ -82,8 +204,8 @@ def _gold_pairs(
 def pair_training_frame(
     gold: DataFrame, weights_bc, vocab_bc, model_key: str = "default"
 ) -> DataFrame:
-    """gold(tokens, ent_spans, relations) -> (feat, label) pair rows.
-    Distributed frozen-encoder feature extraction (step 1)."""
+    """gold(tokens, ent_spans, relations) -> (feat, label) pair rows:
+    the one-time frozen-encoder feature pass of fit_relation_decoder."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _model_for(weights_bc, vocab_bc, model_key)
@@ -134,10 +256,10 @@ def fit_relation_decoder(
     seed: int = 0,
     init: dict[str, np.ndarray] | None = None,
 ) -> tuple[dict[str, np.ndarray], list[float]]:
-    """Full-batch distributed gradient descent with heavy-ball momentum
-    over SCALAR-STANDARDIZED features (step 2). Returns the trained
-    decoder weights (float32, the inference dtype) and the per-epoch
-    mean-loss history.
+    """Full-batch distributed gradient descent (``_run_epochs``) with
+    heavy-ball momentum over SCALAR-STANDARDIZED features. Returns the
+    trained decoder weights (float32, the inference dtype) and the
+    per-epoch mean-loss history.
 
     Standardization matters here, not as a flourish: the frozen-encoder
     features are tiny-scale (RMS ~0.03 on the fixture), which leaves
@@ -147,9 +269,7 @@ def fit_relation_decoder(
     single distributed aggregation — conditions the problem so that
     lr=0.1 / momentum=0.9 reaches accuracy 1.0 on every seed tried.
     The scalar folds back into the returned weights
-    (W1_out = W1_std / scale), so inference code is untouched. The
-    velocity lives on the DRIVER; the cluster only ever computes
-    gradient partial sums, so the execution shape is unchanged.
+    (W1_out = W1_std / scale), so inference code is untouched.
 
     ``pairs`` should be cached by the caller — every epoch scans it.
     ``init`` warm-starts from existing weights (fine-tuning; W1 enters
@@ -157,7 +277,6 @@ def fit_relation_decoder(
     random init (training from scratch)."""
     from pyspark.sql import functions as F
 
-    spark = pairs.sparkSession
     # one aggregation: global RMS of every feature entry
     agg = pairs.select(
         F.aggregate(
@@ -181,43 +300,25 @@ def fit_relation_decoder(
             "rel_W2": rng.standard_normal((hidden, n_rels)) * np.sqrt(2.0 / hidden),
             "rel_b2": np.zeros(n_rels),
         }
+
+    def batch_sums(pdf: pd.DataFrame, params: tuple) -> Iterator[dict]:
+        X = np.stack([np.asarray(f, dtype=np.float64) for f in pdf["feat"]]) / scale
+        y = pdf["label"].to_numpy()
+        g, loss = grad_and_loss(params[0], X, y, dims)
+        yield {"grad": g, "loss": loss, "n": len(y)}
+
     w = flatten_params(init, REL_PARAMS)
-    history: list[float] = []
     velocity = np.zeros_like(w)
-    for _ep in range(epochs):
-        w_bc = spark.sparkContext.broadcast(w)
 
-        def step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc: np.ndarray | None = None
-            loss_sum, n_sum = 0.0, 0
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(
-                    [np.asarray(f, dtype=np.float64) for f in pdf["feat"]]
-                ) / scale
-                y = pdf["label"].to_numpy()
-                g, loss = grad_and_loss(w_bc.value, X, y, dims)
-                acc = g if acc is None else acc + g
-                loss_sum += loss
-                n_sum += len(y)
-            if acc is not None:
-                yield pd.DataFrame(
-                    {"grad": [acc.tolist()], "loss": [loss_sum], "n": [n_sum]}
-                )
+    def step(_ep: int, s: dict, params: tuple) -> tuple[tuple, float]:
+        nonlocal velocity
+        velocity = momentum * velocity - lr * s["grad"] / s["n"]
+        return (params[0] + velocity,), round(s["loss"] / s["n"], 6)
 
-        rows = pairs.mapInPandas(step, GRAD_SCHEMA).collect()
-        w_bc.unpersist()
-        if not rows:
-            raise ValueError("no training pairs")
-        total_n = sum(r["n"] for r in rows)
-        grad = np.sum(
-            [np.asarray(r["grad"], dtype=np.float64) for r in rows], axis=0
-        )
-        loss = sum(r["loss"] for r in rows) / total_n
-        history.append(round(loss, 6))
-        velocity = momentum * velocity - lr * grad / total_n
-        w = w + velocity
+    (w,), history = _run_epochs(
+        pairs, (w,), _Fields(("grad",), ("loss",), ("n",)), batch_sums, step,
+        epochs, empty="no training pairs",
+    )
     out = unflatten_params(w, _rel_shapes(dims), REL_PARAMS)
     out["rel_W1"] = out["rel_W1"] / scale  # fold the standardization back
     return {k: v.astype(np.float32) for k, v in out.items()}, history
@@ -268,30 +369,9 @@ def pair_feature_frame(
 
 
 # ---------------------------------------------------------------------------
-# mention-detector (CRF NLL + full encoder backprop) and JOINT
-# training — the reference's core capability (its model trains; see
-# antnre_spark/encoder_grad.py for the gradient machinery and SURVEY.md
-# §2.E/§2.F provenance). Same execution shape as fit_relation_decoder:
-# per-partition gradient SUMS over Arrow batches, driver-side all-reduce
-# + Adam step; gradients (~40k float64 ≈ 320 KB/partition), never
-# features or activations, cross the wire — executor-count-independent.
+# mention-detector and JOINT training through the encoder (the gradient
+# machinery is antnre_spark/encoder_grad.py; SURVEY.md §2.E/§2.F)
 
-# single source of truth for the gradient-row layout: the schema and
-# the tree-reduce combiner (_sum_grad_rows) both derive from these
-# three tuples. The emit site (fit_joint.step) and the driver all-reduce
-# keep literal names — a field missing THERE fails loudly (Arrow schema
-# validation / KeyError at every partition count), whereas a field
-# missed only in the combiner would silently drop gradients ONLY above
-# combine_above partitions, i.e. only at scale, where tests don't run.
-# The tuples close exactly that silent path.
-_GRAD_ARRAY_FIELDS = ("enc", "rel", "gcn")  # flat grads, element-wise sum
-_GRAD_SCALAR_FIELDS = ("crf", "rell", "gcnl")  # loss sums
-_GRAD_COUNT_FIELDS = ("nt", "npair", "nnode")  # denominators
-JOINT_GRAD_SCHEMA = ", ".join(
-    [f"{f} array<double>" for f in _GRAD_ARRAY_FIELDS]
-    + [f"{f} double" for f in _GRAD_SCALAR_FIELDS]
-    + [f"{f} long" for f in _GRAD_COUNT_FIELDS]
-)
 # sentences per padded forward. 512 is the measured bandwidth sweet spot
 # for the float32 BPTT path (local[16] epoch throughput 28.3k ->
 # 38.7k sent-grads/s vs 256 — bigger B amortizes weight traffic across
@@ -304,71 +384,36 @@ def sentences_from_gold_rows(rows) -> list[dict]:
     """Parquet gold rows (tokens, ent_spans, relations) -> the sentence
     dicts encoder_grad.batch_loss_grad consumes. Accepts pyspark Rows,
     pandas rows, or plain dicts (struct fields index the same way)."""
-    out = []
-    for r in rows:
-        out.append(
-            {
-                "tokens": [str(t) for t in r["tokens"]],
-                "spans": [
-                    (int(s["begin"]), int(s["end"]), str(s["ent_type"]))
-                    for s in r["ent_spans"]
-                ],
-                "rels": {
-                    (int(x["subj"]), int(x["obj"])): REL_TYPES.index(
-                        str(x["pred"])
-                    )
-                    for x in r["relations"]
-                },
-            }
-        )
-    return out
+    return [
+        {
+            "tokens": [str(t) for t in r["tokens"]],
+            "spans": [
+                (int(s["begin"]), int(s["end"]), str(s["ent_type"]))
+                for s in r["ent_spans"]
+            ],
+            "rels": {
+                (int(x["subj"]), int(x["obj"])): REL_TYPES.index(str(x["pred"]))
+                for x in r["relations"]
+            },
+        }
+        for r in rows
+    ]
 
 
-def _adam_step(w, g, m, v, t, lr, b1=0.9, b2=0.999, eps=1e-8):
-    m *= b1
-    m += (1 - b1) * g
-    v *= b2
-    v += (1 - b2) * g * g
-    mh = m / (1 - b1**t)
-    vh = v / (1 - b2**t)
-    w -= lr * mh / (np.sqrt(vh) + eps)
-    return w, m, v
+def _sentence_chunks(pdf: pd.DataFrame) -> Iterator[list[dict]]:
+    """One Arrow batch of gold rows as length-sorted chunks of at most
+    _TRAIN_SUB_BATCH sentences: bounds padded-forward waste, the same
+    discipline as nnmodel.encode's length bucketing."""
+    sents = sentences_from_gold_rows(pdf.to_dict("records"))
+    sents.sort(key=lambda s: len(s["tokens"]))
+    for lo in range(0, len(sents), _TRAIN_SUB_BATCH):
+        yield sents[lo : lo + _TRAIN_SUB_BATCH]
 
 
-def _sum_grad_rows(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """Combiner stage of the two-level gradient reduce: element-wise sum
-    of JOINT_GRAD_SCHEMA rows within a partition. Pure addition — the
-    same composition rule the driver applies, just one level earlier."""
-    acc: dict | None = None
-    for pdf in batches:
-        for _i, r in pdf.iterrows():
-            if acc is None:
-                # np.array (copy), NOT asarray: Arrow-backed rows are
-                # zero-copy read-only buffers, and acc is mutated below
-                acc = {
-                    f: np.array(r[f], dtype=np.float64)
-                    for f in _GRAD_ARRAY_FIELDS
-                }
-                acc.update({f: float(r[f]) for f in _GRAD_SCALAR_FIELDS})
-                acc.update({f: int(r[f]) for f in _GRAD_COUNT_FIELDS})
-            else:
-                for f in _GRAD_ARRAY_FIELDS:
-                    acc[f] += np.asarray(r[f], dtype=np.float64)
-                for f in _GRAD_SCALAR_FIELDS:
-                    acc[f] += float(r[f])
-                for f in _GRAD_COUNT_FIELDS:
-                    acc[f] += int(r[f])
-    if acc is not None:
-        yield pd.DataFrame(
-            {
-                f: [acc[f].tolist() if f in _GRAD_ARRAY_FIELDS else acc[f]]
-                for f in (
-                    _GRAD_ARRAY_FIELDS
-                    + _GRAD_SCALAR_FIELDS
-                    + _GRAD_COUNT_FIELDS
-                )
-            }
-        )
+def _float32(flat: np.ndarray, shapes: dict, keys: tuple[str, ...]) -> dict:
+    """Trained flat float64 vector -> weight arrays in the inference dtype."""
+    arrays = unflatten_params(flat, shapes, keys)
+    return {k: a.astype(np.float32) for k, a in arrays.items()}
 
 
 def fit_joint(
@@ -382,22 +427,17 @@ def fit_joint(
     seed: int = 0,
     refine: bool = False,
     dtype: str = "float64",
-    combine_above: int = 16,
 ) -> tuple[dict[str, np.ndarray], list[dict]]:
-    """Distributed full-batch training of the mention detector
-    (``rel_weight=0``: CRF NLL through BiLSTM/char-CNN/embeddings/
-    transitions) or the JOINT model (``rel_weight>0``: + relation
-    cross-entropy over gold-span pairs, both losses backpropagated
-    through the shared encoder — the EMNLP'18-style joint objective,
-    teacher-forced on gold spans).
-
-    Per epoch: broadcast the current flat parameters, one mapInPandas
-    over the gold table computing per-partition (grad, loss, count) SUMS
-    via encoder_grad.batch_loss_grad, one bounded collect, one Adam step
-    on the driver. ``gold`` should be cached by the caller — every epoch
-    scans it. Returns (full weight dict with the trained arrays replaced
-    as float32 — the inference dtype — and a per-epoch history of
-    {crf, rel} mean losses).
+    """Distributed training (``_run_epochs``, Adam) of the mention
+    detector (``rel_weight=0``: CRF NLL through BiLSTM/char-CNN/
+    embeddings/transitions) or the JOINT model (``rel_weight>0``: +
+    relation cross-entropy over gold-span pairs, both losses
+    backpropagated through the shared encoder — the EMNLP'18-style joint
+    objective, teacher-forced on gold spans), each batch through
+    encoder_grad.batch_loss_grad. ``gold`` should be cached by the
+    caller — every epoch scans it. Returns (full weight dict with the
+    trained arrays replaced as float32 — the inference dtype — and a
+    per-epoch history of {crf, rel} mean losses).
 
     Calibration on the fixture gold (1,276 train sentences, driver-local
     identical math): from a DEGRADED init (gaz_emis zeroed, emit/crf/rel
@@ -406,187 +446,84 @@ def fit_joint(
     epoch 30 — above the shipped fixture weights' own 0.994/0.947.
 
     ``sample_fraction`` (the 10^12-scale path): each epoch trains on a
-    DIFFERENT deterministic Bernoulli sample of the gold table
-    (df.sample seeded by ``seed + epoch``) instead of the full set —
-    classic minibatch SGD at DataFrame granularity. Full-batch epochs
-    scan every gold row; at billions of annotated sentences that is
-    neither necessary (gradient noise is fine under Adam) nor
-    affordable. The gradient is still normalized per token, so the step
-    scale is fraction-independent; loss history reports the SAMPLED
-    epoch means.
+    DIFFERENT seeded sample of the gold table. The gradient is still
+    normalized per token, so the step scale is fraction-independent;
+    loss history reports the SAMPLED epoch means.
 
-    ``refine``: also train the F4 GCN type-refinement head —
-    per-sentence cross-entropy on the gold mention graph
-    (encoder_grad.gcn_grad_loss), weight 1, its feature gradient flowing
-    into the shared encoder. The trained gcn_* arrays
-    replace the fixture priors in the returned weights; without
-    ``refine`` they pass through untouched (inference defaults
-    unchanged).
+    ``refine``: also train the F4 GCN type-refinement head on the gold
+    mention graph (encoder_grad.gcn_grad_loss, weight 1, its feature
+    gradient flowing into the shared encoder); without it the gcn_*
+    arrays pass through untouched.
 
-    ``dtype``: 'float64' (default — reproduces the
-    pinned fixture numbers exactly) or 'float32' — the corpus-scale
-    path; the encoder forward/backward runs single-precision (the BPTT
-    matmuls are memory-bandwidth-bound; the float32 kernel isolate
-    measured 0.887 N->4N vs float64's 0.81 platform ceiling) while the
-    CRF lattice, loss sums, cross-partition accumulation, and the Adam
-    state all stay float64, so optimizer trajectories differ only at
-    single-precision rounding (tests pin the tolerance).
-
-    ``combine_above``: when the gold table has more partitions than
-    this, the per-partition gradient rows go through one intermediate
-    combine stage (8 combiners) before the driver collect — a two-level
-    tree reduce. At 1000 executors the flat collect would pull
-    1000 x ~320 KB to one socket; the combine caps driver fan-in at 8
-    rows while adding one tiny shuffle (the rows, not the data). Below
-    the threshold the flat collect is strictly faster (fewer stage
-    barriers per epoch — the synchronous term the scaling harness
-    measures).
+    ``dtype``: 'float64' (default — reproduces the pinned fixture
+    numbers exactly) or 'float32', the corpus-scale path: the encoder
+    forward/backward runs single-precision (encoder_grad.encoder_forward)
+    while the CRF lattice, loss sums, cross-partition accumulation and
+    the Adam state stay float64 (tests pin the tolerance).
     """
     np_dtype = np.float32 if dtype == "float32" else np.float64
-    spark = gold.sparkSession
-    sc = spark.sparkContext
     trained_keys = ENC_PARAMS + REL_PARAMS + (GCN_PARAMS if refine else ())
     shapes = {k: tuple(np.asarray(weights[k]).shape) for k in trained_keys}
-    frozen = {
-        k: np.asarray(v)
-        for k, v in weights.items()
-        if k not in trained_keys
-    }
-    vocab_bc = sc.broadcast(vocab)
-    enc = flatten_params(weights, ENC_PARAMS)
-    rel = flatten_params(weights, REL_PARAMS)
-    gcn = (
-        flatten_params(weights, GCN_PARAMS)
-        if refine
-        else np.zeros(0, dtype=np.float64)
-    )
-    m_e, v_e = np.zeros_like(enc), np.zeros_like(enc)
-    m_r, v_r = np.zeros_like(rel), np.zeros_like(rel)
-    m_g, v_g = np.zeros_like(gcn), np.zeros_like(gcn)
-    gcn_w = 1.0 if refine else 0.0
-    history: list[dict] = []
-    gold3 = gold.select("tokens", "ent_spans", "relations")
-    n_parts = gold3.rdd.getNumPartitions()
+    frozen = {k: np.asarray(v) for k, v in weights.items() if k not in trained_keys}
+    vocab_bc = gold.sparkSession.sparkContext.broadcast(vocab)
 
-    for ep in range(1, epochs + 1):
-        epoch_src = (
-            gold3.sample(fraction=sample_fraction, seed=seed + ep)
-            if sample_fraction is not None
-            else gold3
+    def batch_sums(pdf: pd.DataFrame, params: tuple) -> Iterator[dict]:
+        e_flat, r_flat, g_flat = params
+        ww = dict(
+            unflatten_params(e_flat, shapes, ENC_PARAMS),
+            **unflatten_params(r_flat, shapes, REL_PARAMS),
         )
-        w_bc = sc.broadcast((enc, rel, gcn))
-
-        def step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            e_flat, r_flat, g_flat = w_bc.value
-            ww = dict(
-                unflatten_params(e_flat, shapes, ENC_PARAMS),
-                **unflatten_params(r_flat, shapes, REL_PARAMS),
-            )
-            if gcn_w > 0.0:
-                ww.update(unflatten_params(g_flat, shapes, GCN_PARAMS))
-            acc_e = np.zeros_like(e_flat)
-            acc_r = np.zeros_like(r_flat)
-            acc_g = np.zeros_like(g_flat)
-            crf_s = rel_s = gcn_s = 0.0
-            nt_s = np_s = nn_s = 0
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                sents = sentences_from_gold_rows(
-                    pdf.to_dict("records")
-                )
-                # length-sort then chunk: bounds padded-forward waste,
-                # same discipline as nnmodel.encode's length bucketing
-                sents.sort(key=lambda s: len(s["tokens"]))
-                for lo in range(0, len(sents), _TRAIN_SUB_BATCH):
-                    chunk = sents[lo : lo + _TRAIN_SUB_BATCH]
-                    ge, gr, gg, cl, rl, gl, nt, npair, nnode = batch_loss_grad(
-                        ww, vocab_bc.value, chunk,
-                        rel_weight=rel_weight, gcn_weight=gcn_w,
-                        dtype=np_dtype,
-                    )
-                    acc_e += ge
-                    acc_r += gr
-                    if gcn_w > 0.0:
-                        acc_g += gg
-                    crf_s += cl
-                    rel_s += rl
-                    gcn_s += gl
-                    nt_s += nt
-                    np_s += npair
-                    nn_s += nnode
-            if nt_s:
-                yield pd.DataFrame(
-                    {
-                        "enc": [acc_e.tolist()],
-                        "rel": [acc_r.tolist()],
-                        "gcn": [acc_g.tolist()],
-                        "crf": [crf_s],
-                        "rell": [rel_s],
-                        "gcnl": [gcn_s],
-                        "nt": [nt_s],
-                        "npair": [np_s],
-                        "nnode": [nn_s],
-                    }
-                )
-
-        grad_df = epoch_src.mapInPandas(step, JOINT_GRAD_SCHEMA)
-        if n_parts > combine_above:
-            # two-level tree reduce: sum the per-partition rows in 8
-            # combiner tasks before the driver sees them (see docstring)
-            grad_df = grad_df.repartition(8).mapInPandas(
-                _sum_grad_rows, JOINT_GRAD_SCHEMA
-            )
-        rows = grad_df.collect()
-        w_bc.unpersist()
-        if not rows:
-            if sample_fraction is not None:
-                # an unlucky tiny sample can be empty — skip the step,
-                # keep the optimizer state, move to the next epoch
-                history.append({"crf": None, "rel": None})
-                continue
-            raise ValueError("no training sentences")
-        nt = sum(r["nt"] for r in rows)
-        npair = sum(r["npair"] for r in rows)
-        nnode = sum(r["nnode"] for r in rows)
-        g_enc = np.sum([np.asarray(r["enc"]) for r in rows], axis=0) / nt
-        crf_loss = sum(r["crf"] for r in rows) / nt
-        rel_loss = (
-            sum(r["rell"] for r in rows) / npair if npair else 0.0
-        )
-        gcn_loss = (
-            sum(r["gcnl"] for r in rows) / nnode if nnode else 0.0
-        )
-        enc, m_e, v_e = _adam_step(enc, g_enc, m_e, v_e, ep, lr)
-        if rel_weight > 0.0 and npair:
-            g_rel = np.sum([np.asarray(r["rel"]) for r in rows], axis=0) / npair
-            rel, m_r, v_r = _adam_step(rel, g_rel, m_r, v_r, ep, lr)
-        if gcn_w > 0.0 and nnode:
-            g_gcn = np.sum([np.asarray(r["gcn"]) for r in rows], axis=0) / nnode
-            gcn, m_g, v_g = _adam_step(gcn, g_gcn, m_g, v_g, ep, lr)
-        hist_row = {"crf": round(crf_loss, 6), "rel": round(rel_loss, 6)}
         if refine:
-            hist_row["gcn"] = round(gcn_loss, 6)
-        history.append(hist_row)
+            ww.update(unflatten_params(g_flat, shapes, GCN_PARAMS))
+        for chunk in _sentence_chunks(pdf):
+            ge, gr, gg, cl, rl, gl, nt, npair, nnode = batch_loss_grad(
+                ww, vocab_bc.value, chunk,
+                rel_weight=rel_weight, gcn_weight=float(refine), dtype=np_dtype,
+            )
+            yield {
+                "enc": ge, "rel": gr, "gcn": gg, "crf": cl, "rell": rl,
+                "gcnl": gl, "nt": nt, "npair": npair, "nnode": nnode,
+            }
 
-    out = dict(frozen)
-    for k, arr in unflatten_params(enc, shapes, ENC_PARAMS).items():
-        out[k] = arr.astype(np.float32)
-    trained_rel = unflatten_params(rel, shapes, REL_PARAMS)
-    for k in REL_PARAMS:
-        out[k] = (
-            trained_rel[k].astype(np.float32)
-            if rel_weight > 0.0
-            else np.asarray(weights[k], dtype=np.float32)
-        )
-    if refine:
-        for k, arr in unflatten_params(gcn, shapes, GCN_PARAMS).items():
-            out[k] = arr.astype(np.float32)
+    params = (
+        flatten_params(weights, ENC_PARAMS),
+        flatten_params(weights, REL_PARAMS),
+        flatten_params(weights, GCN_PARAMS) if refine else np.zeros(0),
+    )
+    moments = [(np.zeros_like(p), np.zeros_like(p)) for p in params]
+
+    def step(ep: int, s: dict, params: tuple) -> tuple[tuple, dict]:
+        enc, rel, gcn = params
+        nt, npair, nnode = s["nt"], s["npair"], s["nnode"]
+        _adam_step(enc, s["enc"] / nt, *moments[0], ep, lr)
+        if rel_weight > 0.0 and npair:
+            _adam_step(rel, s["rel"] / npair, *moments[1], ep, lr)
+        if refine and nnode:
+            _adam_step(gcn, s["gcn"] / nnode, *moments[2], ep, lr)
+        entry = {
+            "crf": round(s["crf"] / nt, 6),
+            "rel": round(s["rell"] / npair if npair else 0.0, 6),
+        }
+        if refine:
+            entry["gcn"] = round(s["gcnl"] / nnode if nnode else 0.0, 6)
+        return params, entry
+
+    (enc, rel, gcn), history = _run_epochs(
+        gold.select("tokens", "ent_spans", "relations"), params,
+        _Fields(("enc", "rel", "gcn"), ("crf", "rell", "gcnl"), ("nt", "npair", "nnode")),
+        batch_sums, step, epochs,
+        empty="no training sentences", skipped={"crf": None, "rel": None},
+        sample_fraction=sample_fraction, seed=seed, zero_start=True,
+    )
     vocab_bc.unpersist()
+    out = dict(frozen, **_float32(enc, shapes, ENC_PARAMS))
+    if rel_weight > 0.0:
+        out.update(_float32(rel, shapes, REL_PARAMS))
+    else:
+        out.update({k: np.asarray(weights[k], dtype=np.float32) for k in REL_PARAMS})
+    if refine:
+        out.update(_float32(gcn, shapes, GCN_PARAMS))
     return out, history
-
-
-MRT_GRAD_SCHEMA = "enc array<double>, risk double, n long"
 
 
 def fit_mrt(
@@ -606,77 +543,72 @@ def fit_mrt(
     unverified; SURVEY.md §0): minimize the expected span-F1 risk over a
     per-sentence k-best candidate distribution
     (encoder_grad.batch_mrt_grad — deterministic k-best approximation,
-    so gradients are exact and finite-difference-checked). Same
-    execution shape as fit_joint: per-partition gradient sums, bounded
-    all-reduce, driver Adam. Returns (weights, per-epoch mean risk).
+    so gradients are exact and finite-difference-checked), on the same
+    epoch driver and driver Adam step as fit_joint. Returns (weights,
+    per-epoch mean risk).
 
     Calibration (driver-local identical math, 600 fixture sentences):
     from the degraded init (held-out F1 0.03), 10 epochs reach mean risk
     0.08 and held-out F1 0.995. In practice MRT shines as a FINE-TUNING
     stage after NLL training — it optimizes the actual task metric,
     absorbing decode-time constraint interactions NLL cannot see.
-    ``dtype``: see fit_joint — 'float32' is the corpus-scale path."""
+    ``sample_fraction``, ``dtype``: see fit_joint."""
     np_dtype = np.float32 if dtype == "float32" else np.float64
-    spark = gold.sparkSession
-    sc = spark.sparkContext
     shapes = {k2: tuple(np.asarray(weights[k2]).shape) for k2 in ENC_PARAMS}
-    frozen = {
-        k2: np.asarray(v) for k2, v in weights.items() if k2 not in ENC_PARAMS
-    }
-    vocab_bc = sc.broadcast(vocab)
+    frozen = {k2: np.asarray(v) for k2, v in weights.items() if k2 not in ENC_PARAMS}
+    vocab_bc = gold.sparkSession.sparkContext.broadcast(vocab)
+
+    def batch_sums(pdf: pd.DataFrame, params: tuple) -> Iterator[dict]:
+        ww = dict(frozen, **unflatten_params(params[0], shapes, ENC_PARAMS))
+        for chunk in _sentence_chunks(pdf):
+            g, r, n = batch_mrt_grad(
+                ww, vocab_bc.value, chunk, k=k, alpha=alpha, dtype=np_dtype
+            )
+            yield {"enc": g, "risk": r, "n": n}
+
     enc = flatten_params(weights, ENC_PARAMS)
-    m_e, v_e = np.zeros_like(enc), np.zeros_like(enc)
-    history: list[float] = []
-    gold3 = gold.select("tokens", "ent_spans", "relations")
+    moments = (np.zeros_like(enc), np.zeros_like(enc))
 
-    for ep in range(1, epochs + 1):
-        epoch_src = (
-            gold3.sample(fraction=sample_fraction, seed=seed + ep)
-            if sample_fraction is not None
-            else gold3
-        )
-        w_bc = sc.broadcast(enc)
+    def step(ep: int, s: dict, params: tuple) -> tuple[tuple, float]:
+        _adam_step(params[0], s["enc"] / s["n"], *moments, ep, lr)
+        return params, round(s["risk"] / s["n"], 6)
 
-        def step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ww = dict(frozen)
-            ww.update(unflatten_params(w_bc.value, shapes, ENC_PARAMS))
-            acc: np.ndarray | None = None
-            risk_s, n_s = 0.0, 0
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                sents = sentences_from_gold_rows(pdf.to_dict("records"))
-                sents.sort(key=lambda s: len(s["tokens"]))
-                for lo in range(0, len(sents), _TRAIN_SUB_BATCH):
-                    g, r, n = batch_mrt_grad(
-                        ww, vocab_bc.value, sents[lo : lo + _TRAIN_SUB_BATCH],
-                        k=k, alpha=alpha, dtype=np_dtype,
-                    )
-                    acc = g if acc is None else acc + g
-                    risk_s += r
-                    n_s += n
-            if n_s:
-                yield pd.DataFrame(
-                    {"enc": [acc.tolist()], "risk": [risk_s], "n": [n_s]}
-                )
-
-        rows = epoch_src.mapInPandas(step, MRT_GRAD_SCHEMA).collect()
-        w_bc.unpersist()
-        if not rows:
-            if sample_fraction is not None:
-                history.append(None)
-                continue
-            raise ValueError("no training sentences")
-        n = sum(r["n"] for r in rows)
-        g = np.sum([np.asarray(r["enc"]) for r in rows], axis=0) / n
-        history.append(round(sum(r["risk"] for r in rows) / n, 6))
-        enc, m_e, v_e = _adam_step(enc, g, m_e, v_e, ep, lr)
-
-    out = dict(frozen)
-    for k2, arr in unflatten_params(enc, shapes, ENC_PARAMS).items():
-        out[k2] = arr.astype(np.float32)
+    (enc,), history = _run_epochs(
+        gold.select("tokens", "ent_spans", "relations"), (enc,),
+        _Fields(("enc",), ("risk",), ("n",)), batch_sums, step, epochs,
+        empty="no training sentences",
+        sample_fraction=sample_fraction, seed=seed,
+    )
     vocab_bc.unpersist()
-    return out, history
+    return dict(frozen, **_float32(enc, shapes, ENC_PARAMS)), history
+
+
+def _prf(
+    weights: dict[str, np.ndarray],
+    vocab: dict[str, int],
+    sentences: list[dict],
+    refine_types: bool,
+    items: Callable[[list, list, dict], tuple[set, set]],
+) -> dict:
+    """Micro-P/R/F1 of the inference path (nnmodel.extract) over
+    ``sentences``; ``items(mentions, relations, sentence)`` returns the
+    (predicted, gold) item sets of one sentence. Driver-local — sized for
+    fixture-scale held-out evaluation (hundreds of sentences); the
+    corpus-scale twin is jobs/evaluate.py over the distributed extract."""
+    model = AntNREModel(weights, vocab)
+    tp = fp = fn = 0
+    for (ments, rels), s in zip(
+        model.extract([s["tokens"] for s in sentences], refine_types=refine_types),
+        sentences,
+    ):
+        pred, gold = items(ments, rels, s)
+        tp += len(pred & gold)
+        fp += len(pred - gold)
+        fn += len(gold - pred)
+    p = tp / (tp + fp) if tp + fp else 0.0
+    r = tp / (tp + fn) if tp + fn else 0.0
+    f1 = 2 * p * r / (p + r) if p + r else 0.0
+    return {"precision": round(p, 4), "recall": round(r, 4), "f1": round(f1, 4)}
 
 
 def mention_prf(
@@ -685,25 +617,13 @@ def mention_prf(
     sentences: list[dict],
     refine_types: bool = False,
 ) -> dict:
-    """Exact-span entity micro-P/R/F1 of the INFERENCE path (Viterbi
-    decode, nnmodel.extract) against gold spans. Driver-local — sized for
-    fixture-scale held-out evaluation (hundreds of sentences); the
-    corpus-scale twin is jobs/evaluate.py over the distributed extract."""
-    model = AntNREModel(weights, vocab)
-    tp = fp = fn = 0
-    for (ments, _rels), s in zip(
-        model.extract([s["tokens"] for s in sentences], refine_types=refine_types),
-        sentences,
-    ):
-        pred = {(m.begin, m.end, m.ent_type) for m in ments}
-        gold = set(s["spans"])
-        tp += len(pred & gold)
-        fp += len(pred - gold)
-        fn += len(gold - pred)
-    p = tp / (tp + fp) if tp + fp else 0.0
-    r = tp / (tp + fn) if tp + fn else 0.0
-    f1 = 2 * p * r / (p + r) if p + r else 0.0
-    return {"precision": round(p, 4), "recall": round(r, 4), "f1": round(f1, 4)}
+    """Exact-span entity micro-P/R/F1 of the inference path (Viterbi
+    decode) against gold spans."""
+
+    def items(ments, _rels, s):
+        return {(m.begin, m.end, m.ent_type) for m in ments}, set(s["spans"])
+
+    return _prf(weights, vocab, sentences, refine_types, items)
 
 
 def triple_prf(
@@ -714,34 +634,21 @@ def triple_prf(
 ) -> dict:
     """(subj span, obj span, pred) micro-P/R/F1 of the full inference
     path (decode -> classify_relations with its priors) vs gold."""
-    model = AntNREModel(weights, vocab)
-    tp = fp = fn = 0
-    for (ments, rels), s in zip(
-        model.extract([s["tokens"] for s in sentences], refine_types=refine_types),
-        sentences,
-    ):
+
+    def items(ments, rels, s):
         pred = {
-            (
-                ments[r.subj].begin,
-                ments[r.subj].end,
-                ments[r.obj].begin,
-                ments[r.obj].end,
-                r.pred,
-            )
+            (ments[r.subj].begin, ments[r.subj].end,
+             ments[r.obj].begin, ments[r.obj].end, r.pred)
             for r in rels
         }
-        gold = set()
-        for (si, oi), rid in s["rels"].items():
-            sb, se, _ = s["spans"][si]
-            ob, oe, _ = s["spans"][oi]
-            gold.add((sb, se, ob, oe, REL_TYPES[rid]))
-        tp += len(pred & gold)
-        fp += len(pred - gold)
-        fn += len(gold - pred)
-    p = tp / (tp + fp) if tp + fp else 0.0
-    r = tp / (tp + fn) if tp + fn else 0.0
-    f1 = 2 * p * r / (p + r) if p + r else 0.0
-    return {"precision": round(p, 4), "recall": round(r, 4), "f1": round(f1, 4)}
+        sp = s["spans"]
+        gold = {
+            (sp[si][0], sp[si][1], sp[oi][0], sp[oi][1], REL_TYPES[rid])
+            for (si, oi), rid in s["rels"].items()
+        }
+        return pred, gold
+
+    return _prf(weights, vocab, sentences, refine_types, items)
 
 
 def training_accuracy(
@@ -749,10 +656,7 @@ def training_accuracy(
 ) -> float:
     """Fraction of pairs whose argmax logit matches the gold label —
     computed distributed (per-batch correct/total, summed)."""
-    W1 = weights["rel_W1"].astype(np.float64)
-    b1 = weights["rel_b1"].astype(np.float64)
-    W2 = weights["rel_W2"].astype(np.float64)
-    b2 = weights["rel_b2"].astype(np.float64)
+    W1, b1, W2, b2 = (weights[k].astype(np.float64) for k in REL_PARAMS)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         correct, total = 0, 0
@@ -765,9 +669,9 @@ def training_accuracy(
             correct += int((pred == y).sum())
             total += len(y)
         if total:
-            yield pd.DataFrame({"grad": [[float(correct)]], "loss": [0.0], "n": [total]})
+            yield pd.DataFrame({"correct": [correct], "n": [total]})
 
-    rows = pairs.mapInPandas(run, GRAD_SCHEMA).collect()
+    rows = pairs.mapInPandas(run, "correct long, n long").collect()
     total = sum(r["n"] for r in rows)
-    correct = sum(r["grad"][0] for r in rows)
+    correct = sum(r["correct"] for r in rows)
     return round(correct / total, 4) if total else 0.0

@@ -44,9 +44,9 @@ def _scratch_init(
     values — they are inference-time priors, not learned here. gcn_* is
     re-initialized ONLY when ``refine`` (it trains then); without
     --refine the fixture head is kept verbatim so refine_types=True
-    inference on a scratch-trained model still has a working prior
-    (r6 review: scratch+refine previously warm-started from the fixture
-    head, contradicting the from-scratch contract)."""
+    inference on a scratch-trained model still has a working prior.
+    With --refine the head is re-initialized too: warm-starting it from
+    the fixture would contradict the from-scratch contract."""
     rng = np.random.default_rng(seed)
     out = dict(w)
     trained = ENC_PARAMS + REL_PARAMS

@@ -300,6 +300,38 @@ class TestEncoderChain:
         assert AntNREModel.spans_from_tags(tags) == spans
 
 
+class TestGCNHead:
+    def test_gcn_grad_loss_runs_the_shared_forward(self, monkeypatch):
+        """gcn_grad_loss takes its logits from nnmodel.gcn_forward — the
+        forward refine_mention_types runs at inference — in float64, over
+        the gold spans and relation edges, and its loss is the
+        cross-entropy of exactly those logits."""
+        from antnre_spark.nnmodel import ENT_TYPES
+
+        rng = np.random.default_rng(5)
+        sentences, vocab = _tiny_batch()
+        w = _tiny_weights(rng, V=len(vocab))
+        calls = []
+        real = eg.gcn_forward
+
+        def spy(ww, hidden, spans, edges, sink=None):
+            out = real(ww, hidden, spans, edges, sink)
+            calls.append((hidden, spans, edges, out))
+            return out
+
+        monkeypatch.setattr(eg, "gcn_forward", spy)
+        s = sentences[0]
+        hidden = rng.standard_normal((len(s["tokens"]), 14)).astype(np.float32)
+        loss, _g, _dh, n = eg.gcn_grad_loss(hidden, s["spans"], s["rels"], w)
+        [(h, spans, edges, logits)] = calls
+        assert h.dtype == logits.dtype == np.float64
+        assert spans == s["spans"] and set(edges) == set(s["rels"])
+        y = [ENT_TYPES.index(t) for _b, _e, t in s["spans"]]
+        z = logits - logits.max(axis=1, keepdims=True)
+        want = -(z[np.arange(n), y] - np.log(np.exp(z).sum(axis=1))).sum()
+        assert loss == pytest.approx(want, rel=1e-12)
+
+
 class TestMRT:
     """k-best approximate minimum-risk training (the reference's
     EMNLP'18 signature objective): k-best decode properties + exact

@@ -116,6 +116,30 @@ class TestWrites:
         t.overwrite_partitions(df, ["pred", "bucket"])
         df.writeTo.return_value.overwritePartitions.assert_called_once_with()
 
+    def test_overwrite_replaces_the_whole_table(self, monkeypatch):
+        """Full-table overwrite (the link outputs, graph analytics, query
+        --write): overwrite(lit(True)) on an existing table, so partitions
+        the new frame no longer fills keep no stale rows."""
+        from antnre_spark import iceberg_adapter
+
+        monkeypatch.setattr(iceberg_adapter.F, "lit", lambda v: ("lit", v))
+        t, _ = make_table(exists=True, snapshots=(5, 6))
+        df = MagicMock()
+        assert t.overwrite(df, ["pred", "bucket"]) == 6
+        w = df.writeTo.return_value
+        w.overwrite.assert_called_once_with(("lit", True))
+        w.overwritePartitions.assert_not_called()
+        w.create.assert_not_called()
+
+    def test_first_overwrite_creates_partitioned(self):
+        t, _ = make_table(exists=False)
+        df = MagicMock()
+        t.overwrite(df, partition_by=["pred", "bucket"])
+        w = df.writeTo.return_value
+        assert len(w.partitionedBy.call_args.args) == 2
+        w.partitionedBy.return_value.create.assert_called_once_with()
+        w.overwrite.assert_not_called()
+
 
 class TestReads:
     def test_load_latest_and_pinned_snapshot(self):

@@ -201,6 +201,45 @@ class TestGCNRefinement:
         assert got == want
 
 
+    def test_gcn_forward_is_the_refinement_forward(
+        self, model, fixture_paths, monkeypatch
+    ):
+        """refine_mention_types takes its logits from nnmodel.gcn_forward,
+        and in float32 on the fixture weights those logits are
+        bit-identical to the F4 round written out inline (span-mean nodes,
+        symmetric row-normalized adjacency with self-loops, relu(A X W)
+        Wt + b) over every fixture gold sentence's decoded mention graph."""
+        import pyarrow.parquet as pq
+
+        from antnre_spark import nnmodel
+
+        gold = pq.read_table(fixture_paths["gold"], columns=["tokens"])
+        toks = [list(t) for t in gold.column("tokens").to_pylist()]
+        calls = []
+        real = nnmodel.gcn_forward
+
+        def spy(w, hidden, spans, edges, sink=None):
+            out = real(w, hidden, spans, edges, sink)
+            calls.append((hidden, spans, edges, out))
+            return out
+
+        monkeypatch.setattr(nnmodel, "gcn_forward", spy)
+        model.extract(toks, refine_types=True)
+        assert len(calls) > 1000 and any(edges for _h, _s, edges, _o in calls)
+        w = model.w
+        for hidden, spans, edges, logits in calls:
+            X = np.stack([hidden[b:e].mean(axis=0) for b, e in spans])
+            A = np.eye(len(spans), dtype=np.float32)
+            for i, j in edges:
+                A[i, j] = 1.0
+                A[j, i] = 1.0
+            A = A / A.sum(axis=1, keepdims=True)
+            H = np.maximum(A @ X @ w["gcn_W"], 0.0)
+            want = H @ w["gcn_type_W"] + w["gcn_type_b"]
+            assert logits.dtype == np.float32
+            assert logits.tobytes() == want.tobytes()
+
+
 class TestBatchedViterbi:
     def test_viterbi_many_matches_single(self, model):
         rng = np.random.default_rng(11)

@@ -213,3 +213,53 @@ class TestModelVersioning:
         assert os.path.exists(os.path.join(out, "models", f"{h}.npz"))
         rows = cfg2.markers().rows("model")
         assert [r["model_hash"] for r in rows] == [h]
+
+
+class TestRelink:
+    def test_relink_replaces_triples_the_new_mentions_drop(
+        self, spark, transcripts_df, fixture_paths, cfg_factory, tmp_path
+    ):
+        """link_job recomputes every derived table from all mentions, so a
+        relink must replace them whole. Re-extracting every bucket with a
+        model that never predicts Work_For and relinking must leave no
+        old Work_For triple behind (a partition overwrite kept every
+        pred=Work_For/bucket=* file the new triples no longer fill): the
+        triples and the link marker's count equal a fresh run's."""
+        import numpy as np
+
+        from antnre_spark.nnmodel import REL_TYPES
+
+        with np.load(fixture_paths["weights"]) as z:
+            w = {k: z[k] for k in z.files}
+        w["rel_b2"] = w["rel_b2"].copy()
+        w["rel_b2"][REL_TYPES.index("Work_For")] -= 1000.0
+        npz = str(tmp_path / "no_work_for.npz")
+        np.savez(npz, **w)
+
+        def with_weights(cfg):
+            return PipelineConfig(
+                out_root=cfg.out_root,
+                weights_npz=npz,
+                vocab_json=cfg.vocab_json,
+                n_buckets=cfg.n_buckets,
+            )
+
+        cfg = cfg_factory("relink")
+        extract_job(spark, transcripts_df, cfg)
+        link_job(spark, cfg)
+        assert any(p == "Work_For" for _s, p, _o, _n in triple_set(spark, cfg))
+
+        relinked = with_weights(cfg)
+        extract_job(spark, transcripts_df, relinked, resume=False)
+        stats = link_job(spark, relinked)
+
+        fresh = with_weights(cfg_factory("relink_fresh"))
+        extract_job(spark, transcripts_df, fresh)
+        link_job(spark, fresh)
+        expected = triple_set(spark, fresh)
+        assert not any(p == "Work_For" for _s, p, _o, _n in expected)
+        assert triple_set(spark, relinked) == expected
+        n_fresh = fresh.table("triples").total_rows()
+        assert stats["triples"] == n_fresh
+        marker = relinked.markers().rows("link_materialize")[-1]
+        assert marker["triple_count"] == n_fresh

@@ -209,24 +209,37 @@ class TestGCNRefinement:
 
 
 class TestTreeReduce:
-    def test_combine_stage_is_value_identical(self, gold_split, fixture_model):
-        """The two-level gradient reduce (fit_joint combine_above) must
+    @pytest.fixture(scope="class")
+    def many(self, gold_split):
+        """The training table at 24 partitions: above COMBINE_ABOVE = 16,
+        so the epoch driver takes the two-level reduce."""
+        many = gold_split[0].repartition(24).persist()
+        many.count()
+        yield many
+        many.unpersist()
+
+    def test_combine_stage_is_value_identical(self, many, fixture_model, monkeypatch):
+        """The two-level gradient reduce (train.COMBINE_ABOVE) must
         be pure composition: training histories with and without the
         combiner stage are identical — it only changes WHERE the
         partial-row sums happen (8 combiner tasks vs the driver)."""
-        train_df, _heldout = gold_split
         w, vocab = fixture_model
-        many = train_df.repartition(24).persist()
-        many.count()
-        try:
-            _t1, h_comb = train.fit_joint(
-                many, w, vocab, epochs=2, lr=0.05, rel_weight=1.0,
-                combine_above=16,
-            )
-            _t2, h_flat = train.fit_joint(
-                many, w, vocab, epochs=2, lr=0.05, rel_weight=1.0,
-                combine_above=10**9,
-            )
-        finally:
-            many.unpersist()
+        monkeypatch.setattr(train, "COMBINE_ABOVE", 16)
+        _t1, h_comb = train.fit_joint(
+            many, w, vocab, epochs=2, lr=0.05, rel_weight=1.0
+        )
+        monkeypatch.setattr(train, "COMBINE_ABOVE", 10**9)
+        _t2, h_flat = train.fit_joint(
+            many, w, vocab, epochs=2, lr=0.05, rel_weight=1.0
+        )
+        assert h_comb == h_flat, (h_comb, h_flat)
+
+    def test_mrt_combine_stage_matches_flat(self, many, fixture_model, monkeypatch):
+        """fit_mrt runs the same epoch driver, so it takes the same tree
+        reduce above COMBINE_ABOVE partitions with the same history."""
+        w, vocab = fixture_model
+        monkeypatch.setattr(train, "COMBINE_ABOVE", 16)
+        _t1, h_comb = train.fit_mrt(many, w, vocab, epochs=2, lr=0.05)
+        monkeypatch.setattr(train, "COMBINE_ABOVE", 10**9)
+        _t2, h_flat = train.fit_mrt(many, w, vocab, epochs=2, lr=0.05)
         assert h_comb == h_flat, (h_comb, h_flat)
