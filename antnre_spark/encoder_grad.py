@@ -327,8 +327,8 @@ def encoder_backward(
 ) -> dict[str, np.ndarray]:
     """Backprop per-sentence gradients w.r.t. hidden states and emissions
     down to every ENC_PARAMS array except crf_transitions (whose gradient
-    comes straight from crf_nll_grad). Returns a dict of float64 gradient
-    arrays shaped like the weights."""
+    comes straight from crf_nll_grad). Returns a dict of gradient arrays
+    shaped like the weights, in the forward's dtype."""
     w64 = cache["w64"]
     emb = w64["word_emb"]
     eW = w64["emit_W"]
@@ -561,7 +561,7 @@ def batch_mrt_grad(
         d_emissions[si] += d_em
         d_trans += d_tr
     grads = encoder_backward(cache, d_hidden, d_emissions)
-    grads["crf_transitions"] += d_trans
+    grads["crf_transitions"] = grads["crf_transitions"].astype(np.float64) + d_trans
     return flatten_params(grads, ENC_PARAMS), risk_sum, n
 
 

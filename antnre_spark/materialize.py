@@ -3,12 +3,12 @@ BASELINE.json:6 "(subj, pred, obj) triples materialized into partitioned
 Iceberg vertex/edge tables").
 
 Join strategy (SURVEY.md §2.I): the mention->entity surface map is distinct-
-surface sized (orders of magnitude smaller than mentions), so H1 hints
-broadcast when the caller says it fits; otherwise it is a sort-merge equi
-join with AQE skew splitting. The hub-entity mention skew never reaches a
-reducer as raw rows: resolution joins on the surface KEY (one row per hot
-surface on the map side), and the triple dedup (H2) partially aggregates
-map-side before the (subj, pred, obj) shuffle.
+surface sized (orders of magnitude smaller than mentions), so H1 always
+broadcasts it (tests/test_plans.py pins BroadcastHashJoin, no
+SortMergeJoin). The hub-entity mention skew never reaches a reducer as raw
+rows: resolution joins on the surface KEY (one row per hot surface on the
+map side), and the triple dedup (H2) partially aggregates map-side before
+the (subj, pred, obj) shuffle.
 """
 
 from __future__ import annotations
@@ -19,17 +19,6 @@ from pyspark.sql import functions as F
 from antnre_spark.link import normalize_surface
 
 PROVENANCE_CAP = 20  # per-triple provenance kept bounded (SURVEY.md §4.3.4)
-
-
-def resolve_mentions(
-    mentions: DataFrame, surface_map: DataFrame, broadcast_map: bool = True
-) -> DataFrame:
-    """H1: mention rows -> + entity_id via (ent_type, norm) equi join."""
-    m = mentions.withColumn("norm", normalize_surface(F.col("surface")))
-    sm = surface_map.select("ent_type", "norm", "entity_id")
-    if broadcast_map:
-        sm = F.broadcast(sm)
-    return m.join(sm, ["ent_type", "norm"], "inner").drop("norm")
 
 
 def _agg_triples(resolved: DataFrame, provenance_cap: int) -> DataFrame:
@@ -101,7 +90,6 @@ def build_triples(
     relations: DataFrame,
     surface_map: DataFrame,
     provenance_cap: int = PROVENANCE_CAP,
-    broadcast_map: bool = True,
     hub_subjects: list[str] | None = None,
     owned_caches: list[DataFrame] | None = None,
 ) -> DataFrame:
@@ -122,9 +110,7 @@ def build_triples(
     two-level path (_salted_triple_agg, value-identical); everything else
     takes the plain single-shuffle aggregate.
     """
-    sm = surface_map.select("ent_type", "norm", "entity_id")
-    if broadcast_map:
-        sm = F.broadcast(sm)
+    sm = F.broadcast(surface_map.select("ent_type", "norm", "entity_id"))
     subj_map = sm.select(
         F.col("ent_type").alias("subj_ent_type"),
         F.col("norm").alias("_subj_norm"),
@@ -149,7 +135,7 @@ def build_triples(
         # on a localCheckpointed DF (blocks bypass the CacheManager), so a
         # caller could never release it. The persisted handle is appended
         # to ``owned_caches`` — the caller unpersists after its sinks run
-        # (pipeline.link_job does; see the r4 cache-sweep test).
+        # (pipeline.link_job does; tests/test_resume.py::TestCacheSweep).
         resolved = resolved.persist()
         if owned_caches is not None:
             owned_caches.append(resolved)
@@ -167,7 +153,7 @@ def triple_partials(
 ) -> DataFrame:
     """Per-batch MERGEABLE triple aggregates keyed by the normalized
     SURFACE pair (not entity ids) — the streaming incremental
-    materializer's unit (r4 verdict task 5).
+    materializer's unit.
 
     Why surface keys: entity ids are a GLOBAL property (a new surface in
     a later micro-batch can merge two previously-distinct entities), so
@@ -202,7 +188,6 @@ def merge_triple_partials(
     partials: DataFrame,
     surface_map: DataFrame,
     provenance_cap: int = PROVENANCE_CAP,
-    broadcast_map: bool = True,
 ) -> DataFrame:
     """All-batch partials + CURRENT surface map -> the final triples
     table, value-identical to build_triples over the same underlying
@@ -211,9 +196,7 @@ def merge_triple_partials(
     relation stream — so re-materializing after each micro-batch (or
     every K batches) is the delta+compact lakehouse shape, not a
     recompute of the corpus."""
-    sm = surface_map.select("ent_type", "norm", "entity_id")
-    if broadcast_map:
-        sm = F.broadcast(sm)
+    sm = F.broadcast(surface_map.select("ent_type", "norm", "entity_id"))
     subj_map = sm.select(
         F.col("ent_type").alias("subj_ent_type"),
         F.col("norm").alias("subj_norm"),

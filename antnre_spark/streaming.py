@@ -2,15 +2,16 @@
 
 The reference has no streaming; the v1 obligation is incremental batch
 (snapshot diff + idempotent re-extract, antnre_spark/pipeline.py). This
-module is the documented streaming extension: the SAME stage functions
-(fused segment+extract ``extract.extract_turns`` -> explode) run inside
-``foreachBatch``, so batch and streaming share one code path —
+module is the documented streaming extension: one incremental-KG stream
+(``start_kg_stream``) runs the SAME stage functions as the batch job
+(fused segment+extract ``extract.extract_turns`` -> explode -> surface
+counts / triple partials -> link -> materialize) inside ``foreachBatch``,
+so its triples equal the batch ``link_job`` over the same turns —
 late-arriving turns are handled either by watermarked session windows
-here or by the next snapshot diff there. Both streams run their model
-stage through one helper (``_extracted_batch``).
+here or by the next snapshot diff there.
 
 Scale notes: file-source streaming scales by input-directory partitioning
-(days(ts)/bucket). foreachBatch is at-least-once: a crash between the two
+(days(ts)/bucket). foreachBatch is at-least-once: a crash between the
 sink writes (or before the checkpoint commit) REPLAYS the batch, so the
 sink commit must be idempotent — each micro-batch therefore commits with
 ``overwrite_partitions(df, ["batch_id"])``, replacing its own batch_id
@@ -20,9 +21,6 @@ too.)
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -188,42 +186,6 @@ def streaming_assemble_documents(
     )
 
 
-def start_extraction_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_root: str,
-    weights_npz: str,
-    vocab_json: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """readStream -> foreachBatch(extract stages) -> IcebergLite append.
-
-    Each micro-batch runs the same fused extract/explode stages as the
-    batch job (``_extracted_batch``); the mention/relation tables are
-    partitioned by ``batch_id`` and each batch OVERWRITES its own
-    partition — a foreachBatch replay after a mid-commit failure replaces
-    rather than duplicates (exactly-once effect from at-least-once
-    delivery)."""
-    weights_bc, vocab_bc, model_key = extract.broadcast_model(
-        spark, weights_npz, vocab_json
-    )
-    ment_t = IceLite(f"{out_root}/mentions_stream")
-    rel_t = IceLite(f"{out_root}/relations_stream")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        process_extraction_batch(
-            batch_df, batch_id, ment_t, rel_t, weights_bc, vocab_bc, model_key
-        )
-
-    return (
-        stream_transcripts(spark, input_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def kg_stream_tables(out_root: str) -> dict[str, IceLite]:
     """The incremental-KG stream's sink tables."""
     return {
@@ -247,7 +209,6 @@ def _link_marker_path(tables: dict[str, IceLite]) -> str:
 def materialize_kg_stream(
     spark: SparkSession,
     tables: dict[str, IceLite],
-    skip_if_current: bool = True,
 ) -> None:
     """Phase 2 of the incremental-KG stream, standalone: merge the
     persisted surface counts, relink, merge the triple partials against
@@ -257,15 +218,14 @@ def materialize_kg_stream(
     sound: skipped batches lose nothing durable, and one call after the
     stream drains brings the serving tables current.
 
-    ``skip_if_current``: a marker file beside the triples table
-    records the (surface_counts, triple_partials) snapshot ids the last
-    relink consumed; when they match the current snapshots
-    the call is a NO-OP. This makes the drain-then-materialize idiom
-    free when the final micro-batch already relinked (the
-    ``n_batches % link_every == 0`` case paid a full redundant relink
-    before). Crash-safe in both directions: a lost marker just re-runs
-    the idempotent relink; a replayed/later batch bumps the source
-    snapshot ids so a stale marker never suppresses real work."""
+    A marker file beside the triples table records the
+    (surface_counts, triple_partials) snapshot ids the last relink
+    consumed; when they match the current snapshots the call is a
+    NO-OP, so the drain-then-materialize idiom costs no relink when the
+    final micro-batch already relinked (``n_batches % link_every ==
+    0``). Crash-safe in both directions: a lost marker just re-runs the
+    idempotent relink; a replayed/later batch bumps the source snapshot
+    ids so a stale marker never suppresses real work."""
     import json as _json
     import os
 
@@ -284,7 +244,7 @@ def materialize_kg_stream(
     if per_raw_t is None:
         return
     marker = _link_marker_path(tables)
-    if skip_if_current and os.path.exists(marker):
+    if os.path.exists(marker):
         try:
             with open(marker) as fh:
                 if _json.load(fh) == linked_key:
@@ -315,45 +275,6 @@ def materialize_kg_stream(
         surface_map.unpersist()
 
 
-@contextmanager
-def _extracted_batch(
-    batch_df: DataFrame, weights_bc, vocab_bc, model_key: str
-) -> Iterator[DataFrame]:
-    """The model stage of one micro-batch, shared by both streams: yields
-    the persisted EXTRACTED frame and releases it when the block exits.
-
-    A file-source micro-batch arrives with one partition per ~input file,
-    so the turns are hash-partitioned by conv_id to defaultParallelism
-    first — the same sizing the batch pipeline's partition_for_extraction
-    uses: one model task per core. Fewer tasks leave cores idle (the
-    compute-bound UDF once ran on 2 of 32 cores and the stream read 2.1x
-    the batch wall); more tasks each pay the Python worker's fixed
-    per-task cost (~0.25 s measured on a 4-core host: 40 tasks per
-    micro-batch spent 3.4 s of wall on ~0.1 s of model work).
-
-    The EXTRACTED frame is then repartitioned DOWN (max(2,
-    parallelism/8)) before the persist that the sink writes share, so
-    each write schedules a handful of tasks and emits a handful of
-    parquet files instead of one per extraction partition: the small
-    extracted rows cross one cheap round-robin exchange.
-
-    persist, not localCheckpoint: one forward pass shared by the sink
-    writes, then RELEASED — a localCheckpoint here would leak one
-    persisted RDD per micro-batch for the life of the stream
-    (DataFrame.unpersist cannot release localCheckpoint blocks)."""
-    parallelism = batch_df.sparkSession.sparkContext.defaultParallelism
-    turns = assemble.partition_for_extraction(
-        assemble.filter_extractable(batch_df), parallelism
-    )
-    extracted = extract.extract_turns(
-        turns, weights_bc, vocab_bc, model_key=model_key,
-    ).repartition(max(2, parallelism // 8)).persist()
-    try:
-        yield extracted
-    finally:
-        extracted.unpersist()
-
-
 def process_kg_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -375,7 +296,7 @@ def process_kg_batch(
        (materialize.triple_partials — entity ids are global and can be
        re-clustered by later batches, surface keys never change, so
        partials are write-once). A foreachBatch replay overwrites its own
-       batch_id partitions, exactly like the extraction stream.
+       batch_id partitions instead of appending duplicate rows.
     2. Merge + relink from the PERSISTED tables: merged surface counts ->
        link_surfaces (the same hybrid local/distributed linker as batch)
        -> merge_triple_partials against the CURRENT surface map ->
@@ -396,7 +317,31 @@ def process_kg_batch(
 
     if batch_df.isEmpty():
         return
-    with _extracted_batch(batch_df, weights_bc, vocab_bc, model_key) as extracted:
+    # The model stage. A file-source micro-batch arrives with one
+    # partition per ~input file, so the turns are hash-partitioned by
+    # conv_id to defaultParallelism first — the same sizing as the batch
+    # pipeline: one model task per core. Fewer tasks leave cores idle
+    # (the compute-bound UDF once ran on 2 of 32 cores and the stream
+    # read 2.1x the batch wall); more tasks each pay the Python worker's
+    # fixed per-task cost (~0.25 s measured on a 4-core host: 40 tasks
+    # per micro-batch spent 3.4 s of wall on ~0.1 s of model work).
+    # The EXTRACTED frame is then repartitioned DOWN (max(2,
+    # parallelism/8)) before the persist the sink writes share, so each
+    # write schedules a handful of tasks and emits a handful of parquet
+    # files instead of one per extraction partition: the small extracted
+    # rows cross one cheap round-robin exchange. persist, not
+    # localCheckpoint: one forward pass shared by the sink writes, then
+    # RELEASED — a localCheckpoint here would leak one persisted RDD per
+    # micro-batch for the life of the stream (DataFrame.unpersist cannot
+    # release localCheckpoint blocks).
+    parallelism = batch_df.sparkSession.sparkContext.defaultParallelism
+    turns = assemble.partition_for_extraction(
+        assemble.filter_extractable(batch_df), parallelism
+    )
+    extracted = extract.extract_turns(
+        turns, weights_bc, vocab_bc, model_key=model_key,
+    ).repartition(max(2, parallelism // 8)).persist()
+    try:
         bid = F.lit(batch_id).alias("batch_id")
         mentions = extract.explode_mentions(extracted)
         relations = extract.explode_relations(extracted)
@@ -413,6 +358,8 @@ def process_kg_batch(
             materialize.triple_partials(relations).select("*", bid),
             ["batch_id"],
         )
+    finally:
+        extracted.unpersist()
 
     if (batch_id + 1) % max(link_every, 1) != 0:
         return  # phase 2 amortized to every link_every-th batch
@@ -456,29 +403,3 @@ def start_kg_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def process_extraction_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    ment_t: IceLite,
-    rel_t: IceLite,
-    weights_bc,
-    vocab_bc,
-    model_key: str,
-) -> None:
-    """One micro-batch of the extraction stream. Module-level (not a
-    closure) so the replay-idempotency property is directly testable:
-    calling this twice with the same batch_id — exactly what an
-    at-least-once foreachBatch replay does — must leave the sink
-    unchanged, because each batch OVERWRITES its own batch_id partition."""
-    if batch_df.isEmpty():
-        return
-    with _extracted_batch(batch_df, weights_bc, vocab_bc, model_key) as extracted:
-        bid = F.lit(batch_id).alias("batch_id")
-        ment_t.overwrite_partitions(
-            extract.explode_mentions(extracted).select("*", bid), ["batch_id"]
-        )
-        rel_t.overwrite_partitions(
-            extract.explode_relations(extracted).select("*", bid), ["batch_id"]
-        )

@@ -1,11 +1,14 @@
-"""Streaming extraction job (SURVEY.md §2.J extension) — spark-submit entry.
+"""Streaming KG job (SURVEY.md §2.J extension) — spark-submit entry.
 
 spark-submit --py-files kg.zip jobs/extract_stream.py \
     --in <transcript parquet drop dir> --out <table root> --checkpoint <dir>
 
-Watches the input directory for parquet drops, runs the same extraction
-stages per micro-batch (exactly-once via checkpoint + idempotent sink),
-then exits when caught up (availableNow trigger).
+Watches the input directory for parquet drops and runs the incremental-KG
+stream over them: per micro-batch, extraction + surface/partial merge +
+linking + triple materialization (exactly-once via checkpoint +
+idempotent sink), so triples_stream equals the batch link_job over the
+same turns. Exits when caught up (availableNow trigger) after
+materializing the tail, and prints the four table row counts.
 """
 
 from __future__ import annotations
@@ -17,26 +20,23 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from antnre_spark.icelite import IceLite  # noqa: E402
 from antnre_spark.session import get_spark  # noqa: E402
-from antnre_spark.streaming import start_extraction_stream  # noqa: E402
+from antnre_spark.streaming import (  # noqa: E402
+    kg_stream_tables,
+    materialize_kg_stream,
+    start_kg_stream,
+)
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    # no prefix matching: a stale ``--link`` must fail as unrecognized,
+    # not be read as ``--link-every``
+    ap = argparse.ArgumentParser(allow_abbrev=False)
     ap.add_argument("--in", dest="input_dir", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--weights", default="fixtures/data/weights.npz")
     ap.add_argument("--vocab", default="fixtures/data/vocab.json")
-    ap.add_argument(
-        "--link",
-        action="store_true",
-        help="run the FULL incremental-KG stream (r5): extraction + "
-        "per-batch surface/partial merge + linking + triple "
-        "materialization; triples_stream then equals the batch link_job "
-        "over the same turns",
-    )
     ap.add_argument(
         "--link-every",
         type=int,
@@ -48,40 +48,20 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("kg_extract_stream")
-    if args.link:
-        from antnre_spark.streaming import (
-            kg_stream_tables,
-            materialize_kg_stream,
-            start_kg_stream,
-        )
-
-        q = start_kg_stream(
-            spark, args.input_dir, args.out, args.weights, args.vocab,
-            args.checkpoint, link_every=args.link_every,
-        )
-        q.awaitTermination()
-        # bring the serving tables current regardless of where the last
-        # link_every boundary fell (idempotent)
-        materialize_kg_stream(spark, kg_stream_tables(args.out))
-        out = {
-            "mentions": IceLite(f"{args.out}/mentions_stream").total_rows(),
-            "relations": IceLite(f"{args.out}/relations_stream").total_rows(),
-            "triples": IceLite(f"{args.out}/triples_stream").total_rows(),
-            "entities": IceLite(f"{args.out}/entities_stream").total_rows(),
-        }
-        print(json.dumps(out))
-        return
-    q = start_extraction_stream(
-        spark, args.input_dir, args.out, args.weights, args.vocab, args.checkpoint
+    q = start_kg_stream(
+        spark, args.input_dir, args.out, args.weights, args.vocab,
+        args.checkpoint, link_every=args.link_every,
     )
     q.awaitTermination()
-    ment = IceLite(f"{args.out}/mentions_stream")
-    rel = IceLite(f"{args.out}/relations_stream")
-    print(
-        json.dumps(
-            {"mentions": ment.total_rows(), "relations": rel.total_rows()}
-        )
-    )
+    # bring the serving tables current regardless of where the last
+    # link_every boundary fell (idempotent)
+    tables = kg_stream_tables(args.out)
+    materialize_kg_stream(spark, tables)
+    out = {
+        name: tables[name].total_rows()
+        for name in ("mentions", "relations", "triples", "entities")
+    }
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":

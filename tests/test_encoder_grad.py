@@ -397,6 +397,33 @@ class TestMRT:
                 d_tr[a, b], rel=1e-4, abs=1e-8
             )
 
+    def test_float32_transition_gradient_stays_float64(self):
+        """Under dtype=float32 only the encoder runs in single precision:
+        batch_mrt_grad's transition block must equal the float64 sum of
+        the per-sentence mrt_sentence_grad transition gradients exactly,
+        not that sum rounded to float32 (the same contract as
+        batch_loss_grad's CRF lattice)."""
+        rng = np.random.default_rng(11)
+        sentences, vocab = _tiny_batch()
+        w = _tiny_weights(rng, V=len(vocab))
+        flat, _risk, n = eg.batch_mrt_grad(
+            w, vocab, sentences, k=4, dtype=np.float32
+        )
+        assert n == len(sentences)
+        cache = eg.encoder_forward(
+            w, [s["tokens"] for s in sentences], vocab, dtype=np.float32
+        )
+        trans = np.asarray(w["crf_transitions"], dtype=np.float64)
+        want = np.zeros_like(trans)
+        for si, sent in enumerate(sentences):
+            want += eg.mrt_sentence_grad(
+                cache["emissions"][si], sent["spans"], trans, k=4
+            )[2]
+        shapes = {k: w[k].shape for k in eg.ENC_PARAMS}
+        got = eg.unflatten_params(flat, shapes, eg.ENC_PARAMS)
+        assert np.any(want.astype(np.float32).astype(np.float64) != want)
+        np.testing.assert_array_equal(got["crf_transitions"], want)
+
     def test_risk_is_zero_iff_gold_dominates(self):
         """When the model is confident in the gold path, expected risk
         -> 0; when confident in a wrong path, risk -> 1."""

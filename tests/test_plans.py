@@ -329,19 +329,20 @@ class TestModelStageSizing:
         assert parts == [f"hashpartitioning(conv_id, {n})"]
 
     def test_stream_batch_model_stage_has_one_partition_per_core(
-        self, spark, transcripts_df, fixture_paths, monkeypatch
+        self, spark, transcripts_df, fixture_paths, tmp_path, monkeypatch
     ):
         from antnre_spark import extract, streaming
 
         w_bc, v_bc, key = extract.broadcast_model(
             spark, fixture_paths["weights"], fixture_paths["vocab"]
         )
-
-        def run():
-            with streaming._extracted_batch(transcripts_df, w_bc, v_bc, key):
-                pass
-
-        parts = _model_stage_partitionings(monkeypatch, run)
+        tables = streaming.kg_stream_tables(str(tmp_path / "kg"))
+        parts = _model_stage_partitionings(
+            monkeypatch,
+            lambda: streaming.process_kg_batch(
+                transcripts_df, 0, tables, w_bc, v_bc, key
+            ),
+        )
         n = spark.sparkContext.defaultParallelism
         assert parts == [f"hashpartitioning(conv_id, {n})"]
 

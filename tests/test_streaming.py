@@ -1,5 +1,6 @@
-"""Streaming extension (SURVEY.md §2.J): foreachBatch extraction matches
-the batch pipeline; watermarked session windows count correctly."""
+"""Streaming extension (SURVEY.md §2.J): the incremental-KG stream's
+foreachBatch extraction and triples match the batch pipeline; watermarked
+session windows count correctly."""
 
 from __future__ import annotations
 
@@ -33,7 +34,9 @@ class TestExtractionStream:
     def test_stream_matches_batch_extraction(
         self, spark, stream_dirs, fixture_paths, transcripts_df
     ):
-        q = streaming.start_extraction_stream(
+        """The stream's mentions table equals the staged batch extraction
+        (segment_turns -> extract_sentences) over the same raw turns."""
+        q = streaming.start_kg_stream(
             spark,
             stream_dirs["in"],
             stream_dirs["out"],
@@ -64,70 +67,16 @@ class TestExtractionStream:
         w = {tuple(r) for r in want.collect()}
         assert g == w
 
-    def test_restart_is_exactly_once(self, spark, stream_dirs, fixture_paths):
-        for _ in range(2):
-            q = streaming.start_extraction_stream(
-                spark,
-                stream_dirs["in"],
-                stream_dirs["out"],
-                fixture_paths["weights"],
-                fixture_paths["vocab"],
-                stream_dirs["ckpt"],
-            )
-            q.awaitTermination(300)
-        from antnre_spark.icelite import IceLite
-
-        got = IceLite(f"{stream_dirs['out']}/mentions_stream").load(spark)
-        dupes = (
-            got.groupBy("mention_id").count().filter(F.col("count") > 1).count()
-        )
-        assert dupes == 0
-
-
-    def test_extraction_and_kg_streams_write_same_rows(
-        self, spark, stream_dirs, fixture_paths
-    ):
-        """Both streams run their model stage through one helper, so over
-        the same drops they write identical mention and relation rows."""
-        from antnre_spark.icelite import IceLite
-
-        outs = {}
-        for name, start in (
-            ("extract", streaming.start_extraction_stream),
-            ("kg", streaming.start_kg_stream),
-        ):
-            out = f"{stream_dirs['out']}_{name}"
-            start(
-                spark,
-                stream_dirs["in"],
-                out,
-                fixture_paths["weights"],
-                fixture_paths["vocab"],
-                f"{stream_dirs['ckpt']}_{name}",
-            ).awaitTermination(300)
-            outs[name] = out
-        for table in ("mentions_stream", "relations_stream"):
-            a, b = (
-                {
-                    tuple(r)
-                    for r in IceLite(f"{outs[n]}/{table}")
-                    .load(spark).drop("batch_id").collect()
-                }
-                for n in ("extract", "kg")
-            )
-            assert a == b and a, table
-
 
 class TestKgStream:
     def test_stream_triples_match_batch_link_job(
         self, spark, stream_dirs, fixture_paths, transcripts_df
     ):
-        """r4 verdict task 5: the incremental-linking stream's final
-        triples/entities tables equal the BATCH linking+materialization
-        over the same turns — per-batch surface counts and surface-keyed
-        triple partials merge exactly (the _salted_triple_agg identity),
-        and relinking the merged surfaces reproduces the batch surface
-        map."""
+        """The incremental-linking stream's final triples/entities tables
+        equal the BATCH linking+materialization over the same turns —
+        per-batch surface counts and surface-keyed triple partials merge
+        exactly (the _salted_triple_agg identity), and relinking the
+        merged surfaces reproduces the batch surface map."""
         q = streaming.start_kg_stream(
             spark,
             stream_dirs["in"],
@@ -196,8 +145,9 @@ class TestKgStream:
         self, spark, stream_dirs, fixture_paths
     ):
         """Running the drained stream again (same checkpoint — no new
-        files) must leave the triples table unchanged; and a REPLAYED
-        batch (same batch_id, fresh call) must overwrite, not duplicate."""
+        files) must leave the triples table unchanged and the mention_ids
+        unique (exactly-once across a restart); and a REPLAYED batch (same
+        batch_id, fresh call) must overwrite, not duplicate."""
         from antnre_spark import extract
         from antnre_spark.icelite import IceLite
 
@@ -211,6 +161,11 @@ class TestKgStream:
                 stream_dirs["ckpt"],
             )
             q.awaitTermination(300)
+        got = IceLite(f"{stream_dirs['out']}/mentions_stream").load(spark)
+        dupes = (
+            got.groupBy("mention_id").count().filter(F.col("count") > 1).count()
+        )
+        assert dupes == 0
         t1 = sorted(
             tuple(r)
             for r in IceLite(f"{stream_dirs['out']}/triples_stream")
@@ -298,29 +253,36 @@ class TestReplayIdempotency:
     def test_replayed_batch_overwrites_not_duplicates(
         self, spark, tmp_path, transcripts_df, fixture_paths
     ):
-        """foreachBatch is at-least-once: a crash between the two sink
-        writes replays the WHOLE batch with the same batch_id. The sink
-        must come out identical, not doubled."""
+        """foreachBatch is at-least-once: a crash between the sink writes
+        replays the WHOLE batch with the same batch_id. Every phase-1
+        table must come out identical, not doubled (link_every is set
+        past the batch so only phase 1 runs)."""
         from antnre_spark import extract
-        from antnre_spark.icelite import IceLite
 
         w_bc, v_bc, key = extract.broadcast_model(
             spark, fixture_paths["weights"], fixture_paths["vocab"]
         )
-        ment_t = IceLite(str(tmp_path / "m"))
-        rel_t = IceLite(str(tmp_path / "r"))
+        tables = streaming.kg_stream_tables(str(tmp_path / "kg"))
+        phase1 = ("mentions", "relations", "surface_counts", "triple_partials")
         batch = transcripts_df.filter(F.col("conv_id") < "c000020")
-        streaming.process_extraction_batch(batch, 7, ment_t, rel_t, w_bc, v_bc, key)
-        n_m = ment_t.load(spark).count()
-        n_r = rel_t.load(spark).count()
-        assert n_m > 0
+
+        def counts():
+            return {t: tables[t].load(spark).count() for t in phase1}
+
+        streaming.process_kg_batch(
+            batch, 7, tables, w_bc, v_bc, key, link_every=10**6
+        )
+        before = counts()
+        assert all(n > 0 for n in before.values()), before
         # replay: same batch, same batch_id — must be a no-op for counts
-        streaming.process_extraction_batch(batch, 7, ment_t, rel_t, w_bc, v_bc, key)
-        assert ment_t.load(spark).count() == n_m
-        assert rel_t.load(spark).count() == n_r
+        streaming.process_kg_batch(
+            batch, 7, tables, w_bc, v_bc, key, link_every=10**6
+        )
+        assert counts() == before
+        assert tables["triples"].load(spark) is None
         # and mention_ids stay unique (content-position ids + overwrite)
-        ids = ment_t.load(spark).select("mention_id")
-        assert ids.distinct().count() == n_m
+        ids = tables["mentions"].load(spark).select("mention_id")
+        assert ids.distinct().count() == before["mentions"]
 
 
 class TestStatefulAssembly:
@@ -402,12 +364,12 @@ class TestStatefulAssembly:
 
     @pytest.mark.parametrize("dedupe", [True, False])
     def test_replayed_duplicate_turns(self, spark, tmp_path, dedupe):
-        """r3 verdict task 7: an at-least-once source re-delivering the
-        SAME turn rows (a replayed file) must not double the assembled
-        document. dropDuplicatesWithinWatermark on (conv_id, turn_idx)
-        ahead of the stateful assembler absorbs the replay; the
-        dedupe=False leg proves this test actually detects the hole the
-        operator closes (turns double without it)."""
+        """An at-least-once source re-delivering the SAME turn rows (a
+        replayed file) must not double the assembled document.
+        dropDuplicatesWithinWatermark on (conv_id, turn_idx) ahead of the
+        stateful assembler absorbs the replay; the dedupe=False leg proves
+        this test actually detects the hole the operator closes (turns
+        double without it)."""
         import shutil
         import time as _time
         from datetime import datetime
@@ -544,7 +506,7 @@ class TestLinkEveryAmortization:
     def test_link_every_plus_tail_materialize_converges(
         self, spark, stream_dirs, fixture_paths
     ):
-        """r5 amortization knob: with link_every=3 over 2 micro-batches
+        """The amortization knob: with link_every=3 over 2 micro-batches
         the in-stream merge never fires, yet one materialize_kg_stream
         call after draining produces exactly the per-batch-merge
         triples — phase 1 alone carries all durable state."""
@@ -591,10 +553,10 @@ class TestLinkEveryAmortization:
 
 class TestKgStreamEmptyBatches:
     def test_no_mention_batch_does_not_crash(self, spark, tmp_path, fixture_paths):
-        """r5 self-review: a micro-batch whose turns yield ZERO mentions
-        writes empty partitions; IceLite.load then returns None for the
-        all-empty tables and process_kg_batch must skip the merge phase
-        instead of crashing the stream with AttributeError."""
+        """A micro-batch whose turns yield ZERO mentions writes empty
+        partitions; IceLite.load then returns None for the all-empty
+        tables and process_kg_batch must skip the merge phase instead of
+        crashing the stream with AttributeError."""
         import datetime
 
         from antnre_spark import extract
@@ -629,11 +591,11 @@ class TestLinkMarker:
     def test_materialize_skips_when_current(
         self, spark, tmp_path, fixture_paths
     ):
-        """r7: the drain-then-materialize idiom must not pay a redundant
+        """The drain-then-materialize idiom must not pay a redundant
         relink when the final micro-batch already linked — the marker
         beside the triples table records the consumed source snapshots
-        and a matching call is a no-op; any new batch (or an explicit
-        skip_if_current=False) relinks."""
+        and a matching call is a no-op; any new batch (or a lost marker)
+        relinks."""
         import datetime
 
         from antnre_spark import extract
@@ -661,9 +623,10 @@ class TestLinkMarker:
         streaming.materialize_kg_stream(spark, tables)
         assert tables["triples"].current_snapshot() == snap0
 
-        # forced -> relinks (idempotent content, new snapshot)
-        streaming.materialize_kg_stream(spark, tables,
-                                        skip_if_current=False)
+        # lost marker (a crash before it was written) -> relinks
+        # (idempotent content, new snapshot)
+        os.remove(streaming._link_marker_path(tables))
+        streaming.materialize_kg_stream(spark, tables)
         snap1 = tables["triples"].current_snapshot()
         assert snap1 == snap0 + 1
 
