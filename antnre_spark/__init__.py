@@ -41,11 +41,10 @@ Modules map to SURVEY.md §2 operator families:
                Lloyd refresh) + bulk batch kNN for a bounded query
                table (cosine_topk_batch / ivf_topk_batch /
                bucketed_topk_batch, one shared numpy scoring kernel)
-  streaming    foreachBatch extraction (idempotent per-batch overwrite),
-               watermarked session windows, applyInPandasWithState
-               stateful document assembly, incremental linking +
-               triple materialization (start_kg_stream — stream triples
-               equal the batch link job exactly)
+  streaming    the incremental-KG stream (start_kg_stream): foreachBatch
+               extraction with an idempotent per-batch overwrite,
+               incremental linking + triple materialization — stream
+               triples equal the batch link job exactly
   multimodal   binary media columns: byte-capped decode batches, frame
                plans, REAL pure-numpy PPM/WAV decode kernels with a
                flagged byte-stat fallback

@@ -154,7 +154,3 @@ def levenshtein(a: str, b: str) -> int:
         prev = cur
     return prev[-1]
 
-
-def xxhash_like(s: str, salt: int = 0) -> int:
-    """Cheap deterministic 31-bit hash for salting keys (process-stable)."""
-    return (zlib.crc32(s.encode("utf-8")) ^ (salt * 0x9E3779B1)) & 0x7FFFFFFF

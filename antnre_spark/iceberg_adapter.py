@@ -10,7 +10,7 @@ surface over real Iceberg tables, so the cutover is a constructor swap
 
   IceLite(path)                       ->  IcebergTable(spark, "cat.db.t")
   .append(df, partition_by)           ->  df.writeTo(ident).append()
-  .overwrite_partitions(df, cols)     ->  df.writeTo(ident).overwritePartitions()
+  .overwrite_partitions(df, {c: vals}) ->  df.writeTo(ident).overwrite(col(c).isin(vals))
   .overwrite(df, partition_by)        ->  df.writeTo(ident).overwrite(lit(True))
   .load(spark, snapshot, filter)      ->  spark.read.option("snapshot-id", ...)
                                                .table(ident).filter(...)
@@ -147,18 +147,23 @@ class IcebergTable:
         return self.current_snapshot() or 0
 
     def overwrite_partitions(
-        self, df: DataFrame, partition_by: list[str]
+        self, df: DataFrame, partitions: dict[str, list]
     ) -> int:
-        """Dynamic partition overwrite — Iceberg's native
-        overwritePartitions() replaces exactly the partitions present in
-        df, the same idempotent re-extract primitive IceLite implements
-        via manifest diffing."""
+        """Replace the named partitions: ``overwrite(c IN values AND ...)``
+        deletes the rows of every named partition and writes df, so a
+        partition df no longer fills still loses its old rows (IceLite's
+        semantics; dynamic ``overwritePartitions()`` would keep them). The
+        first write creates the table partitioned by the named columns."""
         writer = df.writeTo(self.identifier)
         if not self._table_exists():
-            writer = writer.partitionedBy(*[df[c] for c in partition_by])
+            writer = writer.partitionedBy(*[df[c] for c in partitions])
             writer.create()
         else:
-            writer.overwritePartitions()
+            cond = None
+            for c, vals in partitions.items():
+                term = F.col(c).isin(list(vals))
+                cond = term if cond is None else cond & term
+            writer.overwrite(cond)
         return self.current_snapshot() or 0
 
     def overwrite(

@@ -32,6 +32,7 @@ import os
 import shutil
 import time
 import uuid
+from urllib.parse import unquote
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -221,23 +222,38 @@ class IceLite:
         return self._commit_or_clean(new_files, parent, "overwrite", new_files)
 
     def overwrite_partitions(
-        self, df: DataFrame, partition_by: list[str]
+        self, df: DataFrame, partitions: dict[str, list]
     ) -> int:
-        """Replace every live file whose partition values appear in df
-        (dynamic partition overwrite — the idempotent re-extract primitive,
-        SURVEY.md §2.J)."""
+        """Replace the named partitions with df in one snapshot — the
+        idempotent re-extract primitive (SURVEY.md §2.J). ``partitions``
+        maps each partition column to the values this write owns, e.g.
+        ``{"bucket": [3]}``: every live file whose value of each column is
+        among them is dropped, and df is written partitioned by those
+        columns. The caller names the values because df may be empty: a
+        re-extracted bucket that now yields no rows must still lose its old
+        ones. A df row outside the named partitions raises ValueError
+        before the commit, instead of landing as an unowned append."""
+        named = {c: {str(v) for v in vals} for c, vals in partitions.items()}
+
+        def owned(f: dict) -> bool:
+            return all(
+                unquote(f["partitions"].get(c, "")) in vals
+                for c, vals in named.items()
+            )
+
         parent = self.current_snapshot()
         snap = (parent if parent is not None else -1) + 1
-        new_files = self._write_files(df, snap, partition_by)
-        replaced = {
-            tuple(sorted(f["partitions"].items())) for f in new_files
-        }
+        new_files = self._write_files(df, snap, list(partitions))
+        stray = [f["partitions"] for f in new_files if not owned(f)]
+        if stray:
+            for d in {f["path"].split(os.sep)[0] for f in new_files}:
+                shutil.rmtree(os.path.join(self.data_dir, d), ignore_errors=True)
+            raise ValueError(
+                f"overwrite_partitions({partitions}) got rows in partitions "
+                f"it does not name: {stray[:3]}"
+            )
         live = self.manifest(parent)["files"] if parent is not None else []
-        kept = [
-            f
-            for f in live
-            if tuple(sorted(f["partitions"].items())) not in replaced
-        ]
+        kept = [f for f in live if not owned(f)]
         return self._commit_or_clean(
             kept + new_files, parent, "overwrite_partitions", new_files
         )
@@ -253,7 +269,7 @@ class IceLite:
         into one file per partition (the IceLite twin of Iceberg's
         ``rewrite_data_files``). Row-identical by construction — the
         rewrite reads exactly the target partitions' live files and
-        recommits them through the dynamic-partition-overwrite path — and
+        replaces them with the rewritten files in one commit — and
         the operational gap a 10^12-turn table hits first: every
         streaming micro-batch / resume bucket commit adds small files,
         and scan cost grows with file count (task-per-file scheduling +
@@ -429,7 +445,3 @@ class IceLite:
             return 0
         return self.manifest(snap)["total_rows"]
 
-
-def with_bucket(df: DataFrame, col: str, n_buckets: int) -> DataFrame:
-    """Iceberg-style bucket(col, N) partition transform as a column."""
-    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int"))

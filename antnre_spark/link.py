@@ -20,13 +20,11 @@ Pipeline: mentions -> G1 normalize -> distinct surfaces -> G2 MinHash sigs
 explode -> G4 candidate self-join per band -> G5 exact-Jaccard verify ->
 G6 connected components (driver-local union-find at <=100k edges, else
 large-star/small-star with a lineage cut per round — localCheckpoint on
-local mode, reliable df.checkpoint when a checkpoint dir is configured;
-see _cut_lineage) -> G7 canonical representative + entity_id.
+local mode, reliable df.checkpoint when the session has a checkpoint
+dir; see _cut_lineage) -> G7 canonical representative + entity_id.
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -78,10 +76,10 @@ def _cut_lineage(df: DataFrame) -> DataFrame:
     and kills the whole job — acceptable on local[N], not on a 1000-
     executor cluster where some executor loss per hour is the norm. When
     the session has a reliable checkpoint dir configured
-    (``spark.sparkContext.setCheckpointDir(hdfs_or_dbfs_path)`` — done
-    once at job setup, or via connected_components(checkpoint_dir=...)),
-    use ``df.checkpoint()`` instead: blocks are replicated to the fault-
-    tolerant store, and a lost executor's partitions re-read from there.
+    (``spark.sparkContext.setCheckpointDir(hdfs_or_dbfs_path)``, done
+    once at job setup), use ``df.checkpoint()`` instead: blocks are
+    replicated to the fault-tolerant store, and a lost executor's
+    partitions re-read from there.
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
@@ -390,55 +388,10 @@ def _star_components(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
     )
 
 
-# reliable-checkpoint dirs installed via connected_components(
-# checkpoint_dir=...) this process; swept by sweep_checkpoints() once the
-# caller has materialized every output that may lazily read them. Bounds
-# the otherwise-unbounded checkpoint-store growth on long-running
-# drivers.
-_INSTALLED_CHECKPOINT_DIRS: list[str] = []
-
-
-def installed_checkpoint_dirs() -> list[str]:
-    """Checkpoint dirs this process installed and has not yet swept."""
-    return list(_INSTALLED_CHECKPOINT_DIRS)
-
-
-def sweep_checkpoints(spark=None) -> int:
-    """Delete the contents of every checkpoint dir installed by
-    ``connected_components(checkpoint_dir=...)`` and un-install the
-    session's checkpoint dir if it points at one of them. Call AFTER
-    materializing (writing/collecting) every DataFrame that rode a
-    checkpointed lineage — their blocks live in these dirs. Returns the
-    number of filesystem entries removed. Local-filesystem paths only
-    (shutil); on HDFS/S3 the caller sweeps with the store's own tooling,
-    same as any Spark checkpoint location."""
-    import shutil
-
-    removed = 0
-    for d in list(_INSTALLED_CHECKPOINT_DIRS):
-        if os.path.isdir(d):
-            for entry in os.listdir(d):
-                shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
-                removed += 1
-        _INSTALLED_CHECKPOINT_DIRS.remove(d)
-        if spark is not None:
-            cur = spark.sparkContext.getCheckpointDir()
-            # Spark normalizes the dir to a URI (file:/...) AND appends a
-            # per-install UUID subdir — match on the parent path
-            if cur is not None:
-                cur_path = os.path.abspath(cur.removeprefix("file:"))
-                if cur_path == os.path.abspath(d) or cur_path.startswith(
-                    os.path.abspath(d) + os.sep
-                ):
-                    spark.sparkContext.setCheckpointDir(None)
-    return removed
-
-
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
     local_threshold: int = LOCAL_CC_MAX_EDGES,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """G6: connected components, driver-local union-find at <=100k edges,
     else large-star/small-star.
@@ -454,29 +407,14 @@ def connected_components(
     pure fixed cost). Above it, _star_components runs: shuffle-bounded
     rounds, diameter-independent, so wide typo chains are never split.
 
-    ``checkpoint_dir``: when set, it is installed as the context's
-    RELIABLE checkpoint dir (HDFS/S3/DBFS path on a real cluster) and
-    every lineage cut uses ``df.checkpoint()`` instead of
-    ``localCheckpoint`` — executor loss mid-run then recovers from the
-    fault-tolerant store instead of killing the job (see _cut_lineage).
-    Leaving it None keeps local-mode behavior (and respects a dir the
-    caller already installed via ``sc.setCheckpointDir``).
-
-    Lifecycle (deliberate, know it): the setting is SESSION-GLOBAL and
-    stays installed after this call — later CC runs in the same session
-    keep using reliable checkpoints (call
-    ``sc.setCheckpointDir(None)`` to revert, as the tests do). The
-    checkpoint FILES cannot be deleted here because the returned labels
-    frame lazily reads them; every dir installed by this function is
-    recorded, and ``sweep_checkpoints()`` deletes their contents once the
-    job's outputs are materialized (the explicit-sweep contract — the GC
-    route, ``spark.cleaner.referenceTracking.cleanCheckpoints``, must be
-    set before the JVM starts and is therefore not installable here).
+    Reliable checkpoints: every lineage cut goes through _cut_lineage,
+    which uses fault-tolerant ``df.checkpoint()`` whenever the session
+    has a checkpoint dir (``sc.setCheckpointDir``, set once at job
+    setup). The checkpoint files cannot be deleted here because the
+    returned labels frame lazily reads them; the store is cleaned by
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` set at
+    submit time, or by the store's own tooling.
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        if checkpoint_dir not in _INSTALLED_CHECKPOINT_DIRS:
-            _INSTALLED_CHECKPOINT_DIRS.append(checkpoint_dir)
     sym = edges.select("ent_type", F.col("norm_a").alias("src"), F.col("norm_b").alias("dst")).unionByName(
         edges.select("ent_type", F.col("norm_b").alias("src"), F.col("norm_a").alias("dst"))
     )

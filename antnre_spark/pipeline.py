@@ -39,13 +39,10 @@ class PipelineConfig:
     weights_npz: str
     vocab_json: str
     n_buckets: int = 8
-    token_budget: int = extract.TOKEN_BUDGET
     # mention-confidence mode: 'local' (frozen golden-output default) or
     # 'marginal' (true CRF posterior marginal; see nnmodel
     # .extract_mentions). Spans are identical either way.
     conf_mode: str = "local"
-    jaccard_tau: float = link.JACCARD_TAU
-    max_turns_per_doc: int = assemble.MAX_TURNS_PER_DOC
     model_hash: str = field(default="")
     # real-Iceberg cutover (DEPLOY.md §Iceberg cutover): set to a
     # "catalog.db" namespace on a session with an Iceberg catalog
@@ -184,10 +181,12 @@ def extract_job(
 
         # fused C2+C1: dedup + ordered assembly in a single shuffle
         docs = assemble.assemble_documents_fused(
-            assemble.partition_for_extraction(part.drop("bucket"), n_parts),
-            cfg.max_turns_per_doc,
+            assemble.partition_for_extraction(part.drop("bucket"), n_parts)
         ).withColumn("bucket", F.lit(b))
-        docs_t.overwrite_partitions(docs, ["bucket"])
+        # every write names its bucket: a re-extract that now yields no
+        # rows for it still replaces the previous run's rows
+        own = {"bucket": [b]}
+        docs_t.overwrite_partitions(docs, own)
         input_rows = int(obs.get["input_rows"])
 
         ext_turns = assemble.filter_extractable(assemble.explode_documents(docs))
@@ -195,7 +194,7 @@ def extract_job(
         # N->4N efficiency vs 0.758 staged; row-identical to
         # extract_sentences(segment_turns(...)), tests/test_invariants.py)
         extracted = extract.extract_turns(
-            ext_turns, weights_bc, vocab_bc, cfg.token_budget, model_key,
+            ext_turns, weights_bc, vocab_bc, model_key=model_key,
             conf_mode=cfg.conf_mode,
         )
         # persist, not localCheckpoint: one forward pass shared by the
@@ -216,10 +215,10 @@ def extract_job(
             mentions = extract.explode_mentions(extracted).withColumn("bucket", F.lit(b))
             relations = extract.explode_relations(extracted).withColumn("bucket", F.lit(b))
             ment_snap = ment_t.overwrite_partitions(
-                mentions.observe(obs_m, F.count(F.lit(1)).alias("n")), ["bucket"]
+                mentions.observe(obs_m, F.count(F.lit(1)).alias("n")), own
             )
             rel_t.overwrite_partitions(
-                relations.observe(obs_r, F.count(F.lit(1)).alias("n")), ["bucket"]
+                relations.observe(obs_r, F.count(F.lit(1)).alias("n")), own
             )
             n_m = int(obs_m.get["n"])
             n_r = int(obs_r.get["n"])
@@ -248,7 +247,7 @@ def link_job(spark: SparkSession, cfg: PipelineConfig) -> dict:
     if mentions is None or relations is None:
         raise RuntimeError("run extract_job first")
 
-    surface_map, entities = link.link_entities(mentions, tau=cfg.jaccard_tau)
+    surface_map, entities = link.link_entities(mentions)
     # explicit salting at known-hot keys (BASELINE.json:6): the PREVIOUS
     # run's hub_entities table (top out-degree subjects, written below)
     # routes those subjects through the salted two-level triple aggregate;

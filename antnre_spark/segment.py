@@ -92,89 +92,15 @@ def build_vocab(
     vocabulary after min-freq pruning is small (≤ a few 100k rows); if it
     were not, switch to zipWithIndex-style two-phase ranking.
     """
-    counts = _token_counts(sentences, min_freq, lowercase)
-    w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
-    return counts.withColumn("id", F.row_number().over(w) + F.lit(1)).select(
-        "token", "id", "freq"
-    )
-
-
-def _token_counts(
-    sentences: DataFrame, min_freq: int, lowercase: bool
-) -> DataFrame:
-    tok = F.explode("tokens").alias("token")
-    tokens = sentences.select(tok)
+    tokens = sentences.select(F.explode("tokens").alias("token"))
     if lowercase:
         tokens = tokens.select(F.lower("token").alias("token"))
-    return (
+    counts = (
         tokens.groupBy("token")
         .agg(F.count("*").alias("freq"))
         .filter(F.col("freq") >= min_freq)
     )
-
-
-def build_vocab_distributed(
-    sentences: DataFrame,
-    min_freq: int = 1,
-    lowercase: bool = True,
-    num_partitions: int | None = None,
-    owned_caches: list | None = None,
-) -> DataFrame:
-    """D3 at scale: the same (token, id, freq) table as build_vocab with
-    IDENTICAL ids, ranked in two phases instead of a single-partition
-    window (which funnels the whole vocabulary through one task — fine
-    at <=100k tokens, a straggler at web-corpus vocabulary sizes).
-
-    Phase 1: range-partition the counts on the rank key
-    (freq DESC, token ASC) and sort within partitions — partition p now
-    holds a contiguous, ordered rank slice. Phase 2: collect ONE count
-    per partition (bounded driver traffic), turn them into exclusive
-    cumulative offsets, and assign id = offset + local position inside a
-    narrow mapInPandas (the classic zipWithIndex two-phase ranking —
-    no single-partition exchange anywhere).
-
-    The ordered counts are persisted internally (the offsets action and
-    the output pass must see the SAME partition layout); the handle is
-    appended to ``owned_caches`` for the caller to unpersist after
-    materializing the result — the same ownership pattern as
-    materialize.build_triples."""
-    import numpy as np
-    import pandas as pd
-
-    counts = _token_counts(sentences, min_freq, lowercase)
-    spark = sentences.sparkSession
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    ordered = (
-        counts.repartitionByRange(
-            n_parts, F.col("freq").desc(), F.col("token").asc()
-        )
-        .sortWithinPartitions(F.col("freq").desc(), F.col("token").asc())
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
+    return counts.withColumn("id", F.row_number().over(w) + F.lit(1)).select(
+        "token", "id", "freq"
     )
-    if owned_caches is not None:
-        owned_caches.append(ordered)
-    per_pid = {
-        r["_pid"]: r["n"]
-        for r in ordered.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(per_pid):
-        offsets[pid] = acc
-        acc += per_pid[pid]
-    off_bc = spark.sparkContext.broadcast(offsets)
-
-    def assign(batches):
-        local = 0
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            off = off_bc.value[int(pdf["_pid"].iloc[0])]
-            ids = off + local + np.arange(len(pdf), dtype=np.int64) + 2
-            local += len(pdf)
-            yield pd.DataFrame(
-                {"token": pdf["token"], "id": ids, "freq": pdf["freq"]}
-            )
-
-    return ordered.mapInPandas(assign, "token string, id long, freq long")

@@ -6,23 +6,22 @@ module is the documented streaming extension: one incremental-KG stream
 (``start_kg_stream``) runs the SAME stage functions as the batch job
 (fused segment+extract ``extract.extract_turns`` -> explode -> surface
 counts / triple partials -> link -> materialize) inside ``foreachBatch``,
-so its triples equal the batch ``link_job`` over the same turns —
-late-arriving turns are handled either by watermarked session windows
-here or by the next snapshot diff there.
+so its triples equal the batch ``link_job`` over the same turns. A
+late-arriving turn lands in whichever micro-batch reads its file; the
+batch path picks it up with the next snapshot diff.
 
 Scale notes: file-source streaming scales by input-directory partitioning
 (days(ts)/bucket). foreachBatch is at-least-once: a crash between the
 sink writes (or before the checkpoint commit) REPLAYS the batch, so the
 sink commit must be idempotent — each micro-batch therefore commits with
-``overwrite_partitions(df, ["batch_id"])``, replacing its own batch_id
-partition on replay instead of appending duplicate rows. (mention_id being
-a pure function of content position makes the rows themselves replay-stable
-too.)
+``overwrite_partitions(df, {"batch_id": [batch_id]})``, replacing its own
+batch_id partition on replay instead of appending duplicate rows (an
+empty batch output still replaces it). (mention_id being a pure function
+of content position makes the rows themselves replay-stable too.)
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -41,148 +40,6 @@ def stream_transcripts(
         spark.readStream.schema(TRANSCRIPTS)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
-    )
-
-
-def streaming_session_counts(
-    turns: DataFrame, gap_minutes: int = 30, watermark_minutes: int = 60
-) -> DataFrame:
-    """C3 in streaming form: watermarked session windows over ts — late
-    turns beyond the watermark are dropped deterministically; sessions
-    close after gap_minutes of silence."""
-    return (
-        turns.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy(
-            F.session_window("ts", f"{gap_minutes} minutes"),
-            F.col("conv_id"),
-        )
-        .agg(F.count("*").alias("n_turns"))
-        .select(
-            "conv_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_turns",
-        )
-    )
-
-
-DOC_OUT_SCHEMA = "conv_id string, n_turns int, doc_text string, closed_by string"
-DOC_STATE_SCHEMA = "turn_idxs array<int>, texts array<string>, last_ts_ms long"
-
-
-def streaming_assemble_documents(
-    turns: DataFrame,
-    gap_seconds: int = 1800,
-    max_turns: int = 512,
-    watermark: str = "10 seconds",
-    dedupe: bool = True,
-) -> DataFrame:
-    """CUSTOM STATEFUL operator (``applyInPandasWithState``): streaming
-    document assembly — the C1 groupBy cannot run on an unbounded stream,
-    so per-conversation state accumulates turns and a document is emitted
-    when either
-
-    - the conversation is silent past ``gap_seconds`` of EVENT time
-      (GroupState event-time timeout against the watermark — late turns
-      inside the watermark still join their document), or
-    - ``max_turns`` accumulate (the long-conversation skew cap applied at
-      the STATE layer: a runaway conversation is cut into bounded
-      documents instead of growing state without bound — the same
-      MAX_TURNS_PER_DOC discipline as the batch assembler).
-
-    Emitted rows: (conv_id, n_turns, doc_text ordered by turn_idx,
-    closed_by in {'timeout', 'cap'}). State per key is two arrays + a
-    long — O(turns in flight) per conversation, bounded by max_turns.
-
-    ``dedupe``: the source is at-least-once, so a replayed file
-    re-delivers turns the assembler already holds — the batch path
-    repairs this with C2 (latest-ts dedup), a stream cannot.
-    ``dropDuplicatesWithinWatermark`` on (conv_id, turn_idx) ahead of
-    the stateful assembler drops re-deliveries whose key was seen within
-    the watermark (first arrival wins — exactly the replay case, where
-    the duplicates are identical rows). Dedup state expires with the
-    watermark, so state size is bounded by in-flight turns, not history.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_ms = gap_seconds * 1000
-    src = turns.withWatermark("ts", watermark)
-    if dedupe:
-        src = src.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-    # epoch-ms is projected IN THE PLAN (unix_millis) rather than read
-    # back from pandas datetimes inside the UDF: applyInPandasWithState
-    # renders ts as tz-NAIVE datetimes in the session timezone, and
-    # re-localizing is zone-dependent and DST-unsafe (a fold/gap local
-    # time raises AmbiguousTimeError/NonExistentTimeError inside the
-    # stateful UDF and kills the query). An integer column
-    # sidesteps pandas tz entirely; GroupState timeouts are epoch ms.
-    # NOTE the watermarked 'ts' column itself must SURVIVE the projection:
-    # EventTimeTimeout analysis rejects a stateful operator whose input
-    # lost the watermark attribute.
-    src = src.select(
-        "conv_id", "turn_idx", "text", "ts",
-        F.unix_millis("ts").alias("ts_ms"),
-    )
-
-    def assemble_fn(key, pdf_iter, state: GroupState):
-        conv_id = key[0]
-
-        def doc_frame(idxs, texts, closed_by):
-            order = sorted(range(len(idxs)), key=lambda i: (idxs[i], i))
-            return pd.DataFrame(
-                [
-                    {
-                        "conv_id": conv_id,
-                        "n_turns": len(idxs),
-                        "doc_text": " ".join(texts[i] for i in order),
-                        "closed_by": closed_by,
-                    }
-                ]
-            )
-
-        if state.hasTimedOut:
-            idxs, texts, _last = state.get
-            state.remove()
-            yield doc_frame(list(idxs), list(texts), "timeout")
-            return
-        idxs: list[int] = []
-        texts: list[str] = []
-        last_ms = 0
-        if state.exists:
-            s_idxs, s_texts, s_last = state.get
-            idxs, texts, last_ms = list(s_idxs), list(s_texts), int(s_last)
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            idxs.extend(int(x) for x in pdf["turn_idx"])
-            texts.extend(str(x) for x in pdf["text"])
-            last_ms = max(last_ms, int(pdf["ts_ms"].max()))
-        if len(idxs) >= max_turns:
-            # order the in-flight turns by turn_idx BEFORE cutting, so cap
-            # documents slice in turn order (the batch assembler's
-            # MAX_TURNS_PER_DOC discipline), not arrival order
-            order = sorted(range(len(idxs)), key=lambda i: (idxs[i], i))
-            idxs = [idxs[i] for i in order]
-            texts = [texts[i] for i in order]
-        while len(idxs) >= max_turns:
-            # cut a full cap-sized document; remainder stays in flight
-            yield doc_frame(idxs[:max_turns], texts[:max_turns], "cap")
-            idxs, texts = idxs[max_turns:], texts[max_turns:]
-        if idxs:
-            state.update((idxs, texts, last_ms))
-            # timeout must sit strictly past the current watermark
-            state.setTimeoutTimestamp(
-                max(last_ms + gap_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        elif state.exists:
-            state.remove()
-
-    return src.groupBy("conv_id").applyInPandasWithState(
-        assemble_fn,
-        DOC_OUT_SCHEMA,
-        DOC_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -259,12 +116,8 @@ def materialize_kg_stream(
             triples = materialize.merge_triple_partials(
                 partials_t.drop("batch_id"), surface_map
             )
-            tables["triples"].overwrite_partitions(
-                triples.withColumn("part", F.lit(0)), ["part"]
-            )
-        tables["entities"].overwrite_partitions(
-            entities.withColumn("part", F.lit(0)), ["part"]
-        )
+            tables["triples"].overwrite(triples.withColumn("part", F.lit(0)), ["part"])
+        tables["entities"].overwrite(entities.withColumn("part", F.lit(0)), ["part"])
         # marker LAST (after both overwrites): a crash before this line
         # leaves no marker and the next call simply relinks
         tmp = marker + ".tmp"
@@ -343,20 +196,16 @@ def process_kg_batch(
     ).repartition(max(2, parallelism // 8)).persist()
     try:
         bid = F.lit(batch_id).alias("batch_id")
+        own = {"batch_id": [batch_id]}
         mentions = extract.explode_mentions(extracted)
         relations = extract.explode_relations(extracted)
-        tables["mentions"].overwrite_partitions(
-            mentions.select("*", bid), ["batch_id"]
-        )
-        tables["relations"].overwrite_partitions(
-            relations.select("*", bid), ["batch_id"]
-        )
+        tables["mentions"].overwrite_partitions(mentions.select("*", bid), own)
+        tables["relations"].overwrite_partitions(relations.select("*", bid), own)
         tables["surface_counts"].overwrite_partitions(
-            link.surface_counts(mentions).select("*", bid), ["batch_id"]
+            link.surface_counts(mentions).select("*", bid), own
         )
         tables["triple_partials"].overwrite_partitions(
-            materialize.triple_partials(relations).select("*", bid),
-            ["batch_id"],
+            materialize.triple_partials(relations).select("*", bid), own
         )
     finally:
         extracted.unpersist()

@@ -43,7 +43,7 @@ class TestNgramJaccard:
         assert (0, 3) not in pairs
 
     def test_hot_shingle_cap_bounds_join_unchanged_pair_set(self, spark):
-        """r6 verdict task 5: one stop-trigram shared by most docs must
+        """One stop-trigram shared by most docs must
         not degenerate the shingle self-join toward all-pairs. Plant a
         universal trigram across 60 otherwise-disjoint docs plus two
         true near-dups: with the cap, the planted stop-shingle produces
@@ -103,7 +103,7 @@ class TestMinHashLSH:
         assert (0, 3) not in cand
 
     def test_bucket_stats_measure_planted_degenerate_band(self, spark):
-        """r4 verdict task 4: a planted degenerate band (80 identical
+        """A planted degenerate band (80 identical
         docs -> every band oversized at cap 64) must surface as a
         non-zero dropped_frac in the pre-flight, and vanish when the cap
         is raised above the clump — measured caps, not silent ones."""
@@ -205,7 +205,7 @@ class TestCosineDedup:
         assert got == {(500, 501)}  # degenerate bucket dropped, dup kept
 
     def test_banded_recovers_recall_where_single_set_fails(self, spark):
-        """The r2 advice item made concrete: at n_planes=24 a tau=0.95
+        """Why banded LSH: at n_planes=24 a tau=0.95
         pair survives a SINGLE plane set with p ~ (1-theta/pi)^24 ~ 0.08,
         so single-set LSH misses almost every planted near-dup; 4 bands
         of 6 planes push pair-collision to ~0.95. Plant 40 near-dup pairs
@@ -269,7 +269,7 @@ class TestSimSearch:
         assert got[0] == exact[0] == 0  # the true nearest always survives
 
     def test_ivf_batch_matches_per_query_loop(self, spark):
-        """r4 bulk ANN: ivf_topk_batch over a query table must return,
+        """Bulk ANN: ivf_topk_batch over a query table must return,
         for every query, exactly the rows of the single-vector ivf_topk
         driver loop (same centroids, same nprobe, same tie-breaks)."""
         import numpy as np
@@ -317,7 +317,7 @@ class TestSimSearch:
         cents = simsearch.kmeans_centroids(df, n_centroids=6, sample_size=48)
         idx = simsearch.ivf_index(df, cents)
         t = IceLite(str(tmp_path / "ivf_index"))
-        t.overwrite_partitions(idx, ["cell"])
+        t.overwrite(idx, ["cell"])
 
         query = rows[0][1]
         # the same probe computation ivf_topk does driver-side
@@ -441,7 +441,7 @@ class TestTextOps:
         assert got == {0: "en", 1: "de", 2: "fr", 3: "und"}
 
     def test_language_id_widened_r3(self, spark):
-        """r3 breadth: the four added languages resolve on short prose and
+        """The four added languages resolve on short prose and
         do not steal the original four (shared function words like nl/pt
         'de' tie-break by LANG_PRIORITY, deterministically)."""
         rows = [
@@ -481,7 +481,7 @@ class TestTextOps:
         assert got == again
 
     def test_trigram_join_path_matches_map_path(self, spark):
-        """r4 verdict task 3: the broadcast-join trigram scorer (the
+        """The broadcast-join trigram scorer (the
         corpus-scale path the curation job now uses) must be
         value-identical to the map-literal path after round(4) — on the
         real testdata documents AND on edge rows (empty text, whitespace,
@@ -517,7 +517,7 @@ class TestTextOps:
         assert fps[0] != fps[1]
 
     def test_ngram_langid_beats_stopword_heuristic(self, spark):
-        """r3 verdict task 6: the trained 14-language char-trigram NB
+        """The trained 14-language char-trigram NB
         must beat the 8-language stopword heuristic on held-out fixture
         lines it never trained on — and be near-perfect in absolute
         terms."""
@@ -630,7 +630,7 @@ def _make_wav(rate=8000, n=64, channels=1):
 
 
 class TestRealDecodeKernels:
-    """r3 verdict task 4: the decode kernels parse REAL public container
+    """The decode kernels parse REAL public container
     formats (PPM P6, RIFF/WAV PCM16) with pure numpy — features are
     genuine pixel/sample statistics, verified against direct numpy
     computation on the same arrays."""
@@ -791,7 +791,7 @@ class TestCosineBucketStats:
 
 class TestIVF:
     def test_clustered_corpus_recall_floor(self, spark):
-        """r4 verdict task 6: on a CLUSTERED corpus (the regime IVF is
+        """On a CLUSTERED corpus (the regime IVF is
         built for — real embedding corpora cluster; the i.i.d. testdata
         sweep in BENCH/ann_recall.py is the honest worst case), batch IVF
         retrieval at the default nprobe=2 must reach recall@10 >= 0.9
@@ -892,7 +892,7 @@ class TestIVF:
 
     def test_kmeans_sample_is_hash_ordered_not_id_ordered(self, clustered):
         """The quantizer sample must be the smallest-md5(id) rows, not the
-        lowest ids (the r2 bias): training on a strict id-prefix subset
+        lowest ids (an id-prefix sample is biased): training on a strict id-prefix subset
         must give different centroids than the hash sample when the prefix
         is unrepresentative."""
         import hashlib

@@ -1,7 +1,7 @@
 """Iceberg adapter (antnre_spark/iceberg_adapter.py): the sandbox has no
 Iceberg runtime, so every Spark call the adapter makes is MOCKED and the
 tests assert the exact call surface — writeTo().append()/
-overwritePartitions(), snapshot-id read options, incremental scan
+overwrite(condition), snapshot-id read options, incremental scan
 options, snapshots-metadata SQL — plus the flag-guarded factory."""
 
 from __future__ import annotations
@@ -110,11 +110,33 @@ class TestWrites:
         w.partitionedBy.return_value.create.assert_called_once_with()
         w.append.assert_not_called()
 
-    def test_overwrite_partitions_is_dynamic(self):
+    def test_overwrite_partitions_is_dynamic(self, monkeypatch):
+        """Each call picks the partitions it replaces: overwrite(bucket IN
+        (3)) on an existing table, so the named partition loses its old
+        rows even when df is empty — which Spark's dynamic
+        overwritePartitions() (replace only the partitions df fills)
+        would not do."""
+        from antnre_spark import iceberg_adapter
+
+        col = MagicMock(name="col")
+        monkeypatch.setattr(iceberg_adapter.F, "col", col)
         t, _ = make_table(exists=True, snapshots=(5,))
         df = MagicMock()
-        t.overwrite_partitions(df, ["pred", "bucket"])
-        df.writeTo.return_value.overwritePartitions.assert_called_once_with()
+        t.overwrite_partitions(df, {"bucket": [3]})
+        col.assert_called_once_with("bucket")
+        col.return_value.isin.assert_called_once_with([3])
+        w = df.writeTo.return_value
+        w.overwrite.assert_called_once_with(col.return_value.isin.return_value)
+        w.overwritePartitions.assert_not_called()
+
+    def test_first_overwrite_partitions_creates_partitioned(self):
+        t, _ = make_table(exists=False)
+        df = MagicMock()
+        t.overwrite_partitions(df, {"pred": ["a"], "bucket": [1]})
+        w = df.writeTo.return_value
+        assert len(w.partitionedBy.call_args.args) == 2
+        w.partitionedBy.return_value.create.assert_called_once_with()
+        w.overwrite.assert_not_called()
 
     def test_overwrite_replaces_the_whole_table(self, monkeypatch):
         """Full-table overwrite (the link outputs, graph analytics, query
@@ -236,7 +258,7 @@ class TestPipelineCutover:
 
 
 class TestMaintenanceSurface:
-    """r5: the real-procedure maintenance twins (mocked call surface)."""
+    """The real-procedure maintenance twins (mocked call surface)."""
 
     def test_compact_calls_rewrite_data_files(self):
         t, _spark = make_table(snapshots=((1, 10),))
@@ -253,11 +275,10 @@ class TestMaintenanceSurface:
     def test_expire_snapshots_pins_older_than_to_now(self):
         """Iceberg's default older_than = now()-5d would make a daily
         maintenance job expire NOTHING; the adapter must pass an explicit
-        older_than so retain_last is the only retention rule (r5
-        self-review). It must be a CONSTANT typed literal — Iceberg's
+        older_than so retain_last is the only retention rule. It must be a CONSTANT typed literal — Iceberg's
         CALL grammar rejects function calls like current_timestamp()
-        (r6 review) — carrying an EXPLICIT zone offset so a UTC+X
-        session cannot re-read it hours in the past (r5 ADVICE)."""
+        — carrying an EXPLICIT zone offset so a UTC+X
+        session cannot re-read it hours in the past."""
         from datetime import datetime, timezone
 
         t, _spark = make_table(snapshots=((1, 10),))
@@ -285,7 +306,7 @@ class TestMaintenanceSurface:
     def test_total_rows_counts_when_latest_summary_missing(self):
         """A maintenance/delete commit without 'total-records' must NOT
         fall back to a STALE older summary — the adapter pays for a real
-        (manifest-served) count instead (r5 self-review)."""
+        (manifest-served) count instead."""
         t, _spark = make_table(snapshots=((1, 100), (2, None)))
         orig_sql = t._sql
 

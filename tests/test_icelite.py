@@ -1,4 +1,4 @@
-"""IcebergLite snapshot layer (SURVEY.md §7.4): append, dynamic partition
+"""IcebergLite snapshot layer (SURVEY.md §7.4): append, named-partition
 overwrite, incremental read, manifest-level partition pruning, atomicity."""
 
 from __future__ import annotations
@@ -38,15 +38,32 @@ class TestAppend:
 class TestOverwritePartitions:
     def test_only_touched_partitions_replaced(self, spark, table):
         table.append(df_of(spark, [(1, "a", 10), (2, "b", 20)]), ["part"])
-        table.overwrite_partitions(df_of(spark, [(3, "a", 30)]), ["part"])
+        table.overwrite_partitions(df_of(spark, [(3, "a", 30)]), {"part": ["a"]})
         got = {(r["k"], r["part"]) for r in table.load(spark).collect()}
         assert got == {(3, "a"), (2, "b")}
 
     def test_overwrite_is_idempotent(self, spark, table):
         data = df_of(spark, [(1, "a", 10)])
-        table.overwrite_partitions(data, ["part"])
-        table.overwrite_partitions(data, ["part"])
+        table.overwrite_partitions(data, {"part": ["a"]})
+        table.overwrite_partitions(data, {"part": ["a"]})
         assert table.load(spark).count() == 1
+
+    def test_empty_frame_replaces_the_named_partition(self, spark, table):
+        table.append(df_of(spark, [(1, "a", 10), (2, "b", 20)]), ["part"])
+        empty = df_of(spark, [(3, "a", 30)]).limit(0)
+        table.overwrite_partitions(empty, {"part": ["a"]})
+        got = {(r["k"], r["part"]) for r in table.load(spark).collect()}
+        assert got == {(2, "b")}
+
+    def test_rows_outside_the_named_partitions_raise(self, spark, table):
+        table.append(df_of(spark, [(1, "a", 10)]), ["part"])
+        with pytest.raises(ValueError, match="does not name"):
+            table.overwrite_partitions(
+                df_of(spark, [(2, "b", 20)]), {"part": ["a"]}
+            )
+        assert table.snapshots() == [0]
+        # the refused write left no data directory behind
+        assert len(os.listdir(table.data_dir)) == 1
 
 
 class TestFullOverwrite:
@@ -102,8 +119,8 @@ class TestAtomicity:
     def test_concurrent_commit_loses_instead_of_clobbering(self, spark, table):
         """Two writers racing to the same snapshot id: the second commit
         must raise ConcurrentCommitError, not silently overwrite the
-        winner's manifest (r5 ADVICE — jobs/compact.py vs a live
-        streaming micro-batch). Simulated by handing _commit a stale
+        winner's manifest (jobs/compact.py racing a live streaming
+        micro-batch). Simulated by handing _commit a stale
         parent after another commit landed."""
         from antnre_spark.icelite import ConcurrentCommitError
 
@@ -122,7 +139,7 @@ class TestAtomicity:
         ]
 
     def test_losing_writer_cannot_touch_winner_data(self, spark, table):
-        """The full data-level race (r6 review): both writers derive snap
+        """The full data-level race: both writers derive snap
         id 1, BOTH write their data files (writer-unique dirs mean neither
         rmtrees/renames over the other), the loser's commit raises and its
         orphaned data dir is cleaned; the winner's rows stay intact."""
@@ -145,7 +162,7 @@ class TestAtomicity:
 
 
 class TestMaintenance:
-    """r4 verdict task 8: small-file compaction + snapshot expiry."""
+    """Small-file compaction + snapshot expiry."""
 
     def test_compact_reduces_files_keeps_rows(self, spark, table):
         # 6 appends x 1 row per partition -> many small files
@@ -183,7 +200,7 @@ class TestMaintenance:
 
         # overwrite the same partition 5 times: 4 dead file generations
         for i in range(5):
-            table.overwrite_partitions(df_of(spark, [(i, "a", i)]), ["part"])
+            table.overwrite_partitions(df_of(spark, [(i, "a", i)]), {"part": ["a"]})
         all_parquet = lambda: [
             p for p in pathlib.Path(table.data_dir).rglob("*.parquet")
         ]
@@ -207,7 +224,7 @@ class TestMaintenance:
         then verify load() equality — the jobs/compact.py contract."""
         for b in range(4):
             table.overwrite_partitions(
-                df_of(spark, [(b, str(b % 2), b * 7)]), ["part"]
+                df_of(spark, [(b, str(b % 2), b * 7)]), {"part": [str(b % 2)]}
             )
         rows = sorted(tuple(r) for r in table.load(spark).collect())
         table.compact(spark)

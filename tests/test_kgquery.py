@@ -1069,7 +1069,7 @@ class TestRandomizedBgp:
 
 class TestManifestStats:
     def test_manifest_counts_equal_scan_counts(self, spark, tmp_path):
-        """r7: per-predicate stats from the IceLite manifest of a
+        """Per-predicate stats from the IceLite manifest of a
         pred-partitioned table must equal the one-pass scan's counts —
         and cost zero Spark jobs (pure metadata read)."""
         from antnre_spark.icelite import IceLite
@@ -1080,7 +1080,7 @@ class TestManifestStats:
 
         df = spark.createDataFrame(TRIPLES, ["subj", "pred", "obj"])
         tab = IceLite(str(tmp_path / "triples"))
-        tab.overwrite_partitions(df, ["pred"])
+        tab.overwrite(df, ["pred"])
         from_manifest = predicate_stats_from_manifest(tab)
         assert from_manifest == predicate_stats(tab.load(spark))
 
@@ -1100,7 +1100,7 @@ class TestClosureCapBoundary:
     def test_fixpoint_at_exact_cap_does_not_raise(
         self, spark, monkeypatch
     ):
-        """r7 review: the seeded BFS checks emptiness on the delta JUST
+        """The seeded BFS checks emptiness on the delta JUST
         computed, so a closure whose last new pair lands in the final
         allowed round completes instead of raising spuriously."""
         import antnre_spark.kgquery as kq

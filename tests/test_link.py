@@ -307,12 +307,12 @@ class TestReliableCheckpoint:
         )
         ckdir = str(tmp_path / f"ck_{route}")
         threshold = link.LOCAL_CC_MAX_EDGES if route == "auto" else 0
+        # the session checkpoint dir is the only switch: a deployment
+        # sets it once at job setup and every lineage cut honours it
+        sc.setCheckpointDir(ckdir)
         try:
             labels = link.connected_components(
-                edges,
-                nodes,
-                local_threshold=threshold,
-                checkpoint_dir=ckdir,
+                edges, nodes, local_threshold=threshold
             )
             got = {r["norm"]: r["component"] for r in labels.collect()}
             assert got == {n: "n00" for n in names}
@@ -336,33 +336,3 @@ class TestReliableCheckpoint:
             # the scala side), so later tests keep fast localCheckpoints
             sc.setCheckpointDir(None)
             assert sc.getCheckpointDir() is None
-
-    def test_sweep_checkpoints_empties_installed_dirs(self, spark, tmp_path):
-        """The checkpoint store must not grow unboundedly —
-        sweep_checkpoints() removes the files of every dir installed via
-        connected_components(checkpoint_dir=...) and un-installs the
-        session checkpoint dir, once outputs are materialized."""
-        import pathlib
-
-        sc = spark.sparkContext
-        edges = spark.createDataFrame(
-            [("T", "a", "b"), ("T", "b", "c")], ["ent_type", "norm_a", "norm_b"]
-        )
-        nodes = spark.createDataFrame(
-            [("T", n) for n in "abc"], ["ent_type", "norm"]
-        )
-        ckdir = str(tmp_path / "ck_sweep")
-        try:
-            labels = link.connected_components(
-                edges, nodes, local_threshold=0, checkpoint_dir=ckdir
-            )
-            labels.collect()  # materialize BEFORE sweeping
-            assert ckdir in link.installed_checkpoint_dirs()
-            assert any(p.is_file() for p in pathlib.Path(ckdir).rglob("*"))
-            removed = link.sweep_checkpoints(spark)
-            assert removed > 0
-            assert not any(pathlib.Path(ckdir).iterdir())
-            assert link.installed_checkpoint_dirs() == []
-            assert sc.getCheckpointDir() is None
-        finally:
-            sc.setCheckpointDir(None)

@@ -108,7 +108,7 @@ class TestEmptyBucket:
     ):
         """A bucket whose turns are all non-extractable writes NO mention
         files (IceLite.load returns None) — the marker must still commit so
-        resume doesn't redo the bucket forever (advisor finding, round 1)."""
+        resume doesn't redo the bucket forever."""
         import datetime
 
         from antnre_spark.schema import TRANSCRIPTS
@@ -135,12 +135,45 @@ class TestEmptyBucket:
         s2 = extract_job(spark, df, cfg)  # resume: nothing left to do
         assert s2["buckets_run"] == 0
 
+    def test_reextract_to_no_rows_replaces_the_bucket(
+        self, spark, transcripts_df, cfg_factory
+    ):
+        """Re-extracting a bucket whose turns are now all non-extractable
+        must leave that bucket with NO mentions or relations: the writes
+        name the bucket they replace, so an empty output still drops the
+        previous run's rows instead of keeping them live beside a marker
+        that reads 0."""
+        cfg = cfg_factory("reextract-empty")
+        extract_job(spark, transcripts_df, cfg)
+
+        def rows_in_bucket0():
+            return {
+                tbl: cfg.table(tbl).load(spark).filter(F.col("bucket") == 0).count()
+                for tbl in ("mentions", "relations")
+            }
+
+        before = rows_in_bucket0()
+        assert before["mentions"] > 0 and before["relations"] > 0, before
+        in_bucket0 = bucket_of(F.col("conv_id"), cfg.n_buckets) == 0
+        tooled = transcripts_df.withColumn(
+            "role", F.when(in_bucket0, F.lit("tool")).otherwise(F.col("role"))
+        )
+        stats = extract_job(spark, tooled, cfg, buckets=[0], resume=False)
+        assert stats["buckets_run"] == 1 and stats["mentions"] == 0
+        assert rows_in_bucket0() == {"mentions": 0, "relations": 0}
+        marker = [
+            r for r in cfg.markers().rows("extract") if r["partition_key"] == "0"
+        ]
+        assert [m["output_rows"] for m in marker] == [0]
+        # the other buckets keep their rows
+        assert cfg.table("mentions").load(spark).count() > 0
+
 
 class TestCacheSweep:
     def test_full_run_leaves_no_persistent_rdds(
         self, spark, transcripts_df, fixture_paths, tmp_path
     ):
-        """r2 verdict task 8 (closed r4): pipeline.full_run owns every
+        """pipeline.full_run owns every
         cache it creates — the per-bucket checkpointed forward pass, the
         linking surface map, and the checkpointed triples DF are all
         released before return, so a long-lived session that runs the
@@ -167,7 +200,7 @@ class TestModelVersioning:
     def test_mixed_model_resume_refused_and_registry(
         self, spark, transcripts_df, fixture_paths, tmp_path
     ):
-        """r5 verdict task 8: a resume that would extract NEW buckets
+        """A resume that would extract NEW buckets
         with a DIFFERENT model than the committed ones must refuse
         (mentions from two models in one table are silently
         inconsistent); resume=False re-extracts all idempotently; and

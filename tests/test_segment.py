@@ -52,57 +52,3 @@ class TestBuildVocab:
         vocab = segment.build_vocab(sents, min_freq=2)
         assert {r["token"] for r in vocab.collect()} == {".", "one"}
 
-
-class TestDistributedVocab:
-    def test_two_phase_ids_identical_to_window(self, spark):
-        """build_vocab_distributed must assign EXACTLY the ids of the
-        single-partition-window build_vocab — including heavy freq ties
-        resolved by token order — at several partition counts."""
-        from antnre_spark.segment import build_vocab, build_vocab_distributed
-
-        words = (
-            ["the"] * 50 + ["cat"] * 10 + ["dog"] * 10 + ["ant"] * 10
-            + ["bee"] * 3 + ["cow"] * 3 + ["elk"] * 1
-        )
-        rows = [(words[i : i + 5],) for i in range(0, len(words), 5)]
-        sents = spark.createDataFrame(rows, "tokens array<string>")
-        want = {
-            (r["token"], r["id"], r["freq"])
-            for r in build_vocab(sents, min_freq=2).collect()
-        }
-        for n_parts in (1, 3, 8):
-            owned = []
-            got = {
-                (r["token"], r["id"], r["freq"])
-                for r in build_vocab_distributed(
-                    sents, min_freq=2, num_partitions=n_parts,
-                    owned_caches=owned,
-                ).collect()
-            }
-            for df in owned:
-                df.unpersist()
-            assert got == want, n_parts
-
-    def test_no_single_partition_exchange(self, spark):
-        """The point of the two-phase rank: the plan must not funnel the
-        vocabulary through a single-partition exchange (the window
-        version does)."""
-        from antnre_spark.segment import build_vocab, build_vocab_distributed
-
-        sents = spark.createDataFrame(
-            [(["a", "b", "a"],)], "tokens array<string>"
-        )
-        owned = []
-        plan = (
-            build_vocab_distributed(sents, owned_caches=owned)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        for df in owned:
-            df.unpersist()
-        assert "SinglePartition" not in plan
-        window_plan = (
-            build_vocab(sents)._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "SinglePartition" in window_plan

@@ -1,6 +1,6 @@
 """Streaming extension (SURVEY.md §2.J): the incremental-KG stream's
-foreachBatch extraction and triples match the batch pipeline; watermarked
-session windows count correctly."""
+foreachBatch extraction and triples match the batch pipeline, and its
+micro-batch writes are replay-safe."""
 
 from __future__ import annotations
 
@@ -203,67 +203,6 @@ class TestKgStream:
         assert t1 == t2
 
 
-class TestSessionWindows:
-    def test_watermarked_sessions(self, spark, tmp_path, transcripts_df):
-        """Append mode emits only CLOSED sessions: a later-batch sentinel
-        event advances the watermark past the conversation so both planted
-        sessions (the >1h idle gap splits c000007) close and emit."""
-        import shutil
-        from datetime import datetime, timezone
-
-        from antnre_spark.schema import TRANSCRIPTS
-
-        conv = transcripts_df.filter(F.col("conv_id") == "c000007")
-        in_dir = tmp_path / "sess_in"
-        in_dir.mkdir()
-
-        def drop_file(df, name):
-            d = tmp_path / name
-            df.coalesce(1).write.parquet(str(d))
-            for f in os.listdir(d):
-                if f.endswith(".parquet"):
-                    shutil.copy(d / f, in_dir / f"{name}_{f}")
-
-        drop_file(conv, "batch1")
-
-        out_dir = str(tmp_path / "sess_out")
-
-        def run_pass():
-            stream = streaming.stream_transcripts(spark, str(in_dir))
-            sessions = streaming.streaming_session_counts(stream, gap_minutes=30)
-            q = (
-                sessions.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-            return (
-                spark.read.parquet(out_dir)
-                .filter(F.col("conv_id") == "c000007")
-                .collect()
-            )
-
-        first = run_pass()
-        sentinel = spark.createDataFrame(
-            [
-                (
-                    "zz_sentinel", 0, "user", "flush .", None,
-                    datetime(2025, 1, 1, tzinfo=timezone.utc),
-                )
-            ],
-            TRANSCRIPTS,
-        )
-        drop_file(sentinel, "batch2")
-        second = run_pass()
-
-        got = {(r["session_start"], r["n_turns"]) for r in second or first}
-        assert len(got) == 2
-        assert sum(n for _, n in got) == conv.count()
-
-
 class TestReplayIdempotency:
     def test_replayed_batch_overwrites_not_duplicates(
         self, spark, tmp_path, transcripts_df, fixture_paths
@@ -298,223 +237,6 @@ class TestReplayIdempotency:
         # and mention_ids stay unique (content-position ids + overwrite)
         ids = tables["mentions"].load(spark).select("mention_id")
         assert ids.distinct().count() == before["mentions"]
-
-
-class TestStatefulAssembly:
-    """applyInPandasWithState custom stateful operator: streaming document
-    assembly with event-time timeout (watermark-driven) and a max_turns
-    state cap (SURVEY.md §2.J; the north-star's 'custom stateful
-    operators' surface)."""
-
-    def test_timeout_and_cap_emission(self, spark, tmp_path):
-        import shutil
-        import time as _time
-        from datetime import datetime
-
-        from antnre_spark.schema import TRANSCRIPTS
-
-        base = datetime(2026, 1, 1, 12, 0, 0)
-
-        def t(sec):
-            return datetime.fromtimestamp(base.timestamp() + sec)
-
-        in_dir = tmp_path / "in"
-        in_dir.mkdir()
-
-        def drop(name, rows):
-            staging = tmp_path / f"stage_{name}"
-            spark.createDataFrame(rows, TRANSCRIPTS).coalesce(1).write.parquet(
-                str(staging)
-            )
-            for f in os.listdir(staging):
-                if f.endswith(".parquet"):
-                    shutil.copy(staging / f, in_dir / f"{name}.parquet")
-            _time.sleep(1.1)  # distinct mtimes -> deterministic file order
-
-        # drop 1: conv A (4 turns, out of order on purpose) + conv D
-        # (5 turns -> cap of 3 emits immediately, 2 stay in flight)
-        drop(
-            "d1",
-            [("A", i, "user", w, None, t(i)) for i, w in
-             [(1, "b"), (0, "a"), (3, "d"), (2, "c")]]
-            + [("D", i, "user", f"w{i}", None, t(i)) for i in range(5)],
-        )
-        # drop 2: conv B 2h later -> watermark passes A/D timeouts
-        drop("d2", [("B", 0, "user", "hello", None, t(7200))])
-        # drop 3: conv C 4h later -> watermark passes B's timeout
-        drop("d3", [("C", 0, "user", "late", None, t(14400))])
-
-        turns = (
-            spark.readStream.schema(TRANSCRIPTS)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir))
-        )
-        docs = streaming.streaming_assemble_documents(
-            turns, gap_seconds=1800, max_turns=3, watermark="10 seconds"
-        )
-        q = (
-            docs.writeStream.format("memory")
-            .queryName("assembled_docs")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-        got = {
-            (r["conv_id"], r["closed_by"]): (r["n_turns"], r["doc_text"])
-            for r in spark.sql("SELECT * FROM assembled_docs").collect()
-        }
-        # A has 4 turns > max_turns=3: a cap doc of the FIRST 3 BY
-        # turn_idx (despite shuffled arrival), then the remainder times out
-        assert got[("A", "cap")] == (3, "a b c")
-        assert got[("A", "timeout")] == (1, "d")
-        # D: cap doc with the first 3, remainder timed out later
-        assert got[("D", "cap")] == (3, "w0 w1 w2")
-        assert got[("D", "timeout")] == (2, "w3 w4")
-        # B: flushed by C's watermark advance (no-data batch timeout)
-        assert got[("B", "timeout")] == (1, "hello")
-        # C: still in flight -> not emitted
-        assert ("C", "timeout") not in got and ("C", "cap") not in got
-
-    @pytest.mark.parametrize("dedupe", [True, False])
-    def test_replayed_duplicate_turns(self, spark, tmp_path, dedupe):
-        """An at-least-once source re-delivering the SAME turn rows (a
-        replayed file) must not double the assembled document.
-        dropDuplicatesWithinWatermark on (conv_id, turn_idx) ahead of the
-        stateful assembler absorbs the replay; the dedupe=False leg proves
-        this test actually detects the hole the operator closes (turns
-        double without it)."""
-        import shutil
-        import time as _time
-        from datetime import datetime
-
-        from antnre_spark.schema import TRANSCRIPTS
-
-        base = datetime(2026, 5, 1, 8, 0, 0)
-
-        def t(sec):
-            return datetime.fromtimestamp(base.timestamp() + sec)
-
-        in_dir = tmp_path / "in"
-        in_dir.mkdir()
-
-        def drop(name, rows):
-            staging = tmp_path / f"stage_{name}"
-            spark.createDataFrame(rows, TRANSCRIPTS).coalesce(1).write.parquet(
-                str(staging)
-            )
-            for f in os.listdir(staging):
-                if f.endswith(".parquet"):
-                    shutil.copy(staging / f, in_dir / f"{name}.parquet")
-            _time.sleep(1.1)
-
-        rows = [
-            ("A", i, "user", w, None, t(i))
-            for i, w in [(0, "a"), (1, "b"), (2, "c")]
-        ]
-        drop("d1", rows)
-        drop("d2", rows)  # the replayed delivery — identical rows
-        drop("d3", [("B", 0, "user", "later", None, t(7200))])  # flush A
-
-        turns = (
-            spark.readStream.schema(TRANSCRIPTS)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir))
-        )
-        docs = streaming.streaming_assemble_documents(
-            turns, gap_seconds=1800, max_turns=100,
-            watermark="10 seconds", dedupe=dedupe,
-        )
-        qname = f"replay_docs_{dedupe}"
-        q = (
-            docs.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        got = {
-            (r["conv_id"], r["closed_by"]): (r["n_turns"], r["doc_text"])
-            for r in spark.sql(f"SELECT * FROM {qname}").collect()
-        }
-        if dedupe:
-            assert got[("A", "timeout")] == (3, "a b c")
-        else:
-            assert got[("A", "timeout")][0] == 6  # the hole, undefended
-
-    def test_state_survives_restart(self, spark, tmp_path):
-        """GroupState persists in the checkpoint: a stream stopped after
-        the first drop and RESTARTED as a new query (same checkpoint) must
-        resume the in-flight conversation and emit it on timeout — the
-        resume guarantee a long-running 10^12-turn ingest depends on."""
-        import shutil
-        import time as _time
-        from datetime import datetime
-
-        from antnre_spark.schema import TRANSCRIPTS
-
-        base = datetime(2026, 3, 1, 9, 0, 0)
-
-        def t(sec):
-            return datetime.fromtimestamp(base.timestamp() + sec)
-
-        in_dir = tmp_path / "in"
-        in_dir.mkdir()
-        out_dir = str(tmp_path / "docs_out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def drop(name, rows):
-            staging = tmp_path / f"stage_{name}"
-            spark.createDataFrame(rows, TRANSCRIPTS).coalesce(1).write.parquet(
-                str(staging)
-            )
-            for f in os.listdir(staging):
-                if f.endswith(".parquet"):
-                    shutil.copy(staging / f, in_dir / f"{name}.parquet")
-            _time.sleep(1.1)
-
-        def run_stream():
-            turns = (
-                spark.readStream.schema(TRANSCRIPTS)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(in_dir))
-            )
-            docs = streaming.streaming_assemble_documents(
-                turns, gap_seconds=600, max_turns=100, watermark="5 seconds"
-            )
-            q = (
-                docs.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-
-        # phase 1: only conversation R's turns exist; it stays in flight
-        drop("p1", [("R", i, "user", w, None, t(i)) for i, w in
-                    [(1, "two"), (0, "one"), (2, "three")]])
-        run_stream()
-        first = spark.read.schema(
-            "conv_id string, n_turns int, doc_text string, closed_by string"
-        ).parquet(out_dir)
-        assert first.filter(F.col("conv_id") == "R").count() == 0
-
-        # phase 2: later drops advance the watermark past R's timeout;
-        # a brand-new query on the same checkpoint must recover R's state
-        drop("p2", [("S", 0, "user", "later", None, t(3600))])
-        drop("p3", [("T", 0, "user", "latest", None, t(7200))])
-        run_stream()
-        rows = {
-            r["conv_id"]: (r["n_turns"], r["doc_text"], r["closed_by"])
-            for r in spark.read.parquet(out_dir).collect()
-        }
-        assert rows["R"] == (3, "one two three", "timeout")
-        assert rows["S"][2] == "timeout"  # flushed by T's watermark
-        assert "T" not in rows            # still in flight
 
 
 class TestLinkEveryAmortization:

@@ -12,12 +12,16 @@ uncommitted edits included. Pair i runs both sides with seed i; the base
 runs first on the 1st, 3rd, ... pair and second on the others.
 
 Every run prints one JSON line (side, seed, position in the pair,
-correctness, metrics). Then, per workload and metric of
-``BENCHMARK.json`` (end-to-end, or per-layer with ``--trace 1``): each
-side's median and quartiles, the pairs the change won, the change/base
-ratio of the medians beside the metric's bound, and whether the change
-would count as a gain: it won >= 90% of the pairs and the medians differ
-by more than the base's interquartile range.
+correctness, metrics). Then, per workload: each side's incorrect runs
+(a run that crashed counts as incorrect) and its failed/attempted ops;
+and per metric of ``BENCHMARK.json`` (end-to-end, or per-layer with
+``--trace 1``): each side's median and quartiles, the pairs the change
+won, the change/base ratio of the medians beside the metric's bound,
+and whether the change would count as a gain: no incorrect change run,
+no more failed ops than the base, >= 90% of the pairs won, and medians
+that differ by more than the base's interquartile range. A metric whose
+change median is worse than the base median by more than its bound is
+marked ``WORSE THAN BOUND``.
 """
 
 from __future__ import annotations
@@ -74,6 +78,18 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 def summarize(workload: str, runs: list[dict], metrics: list[dict]) -> None:
     print(f"\n{workload}: {len(runs) // 2} pairs")
+    tally = {}
+    for side in ("base", "change"):
+        mine = [r for r in runs if r["side"] == side]
+        incorrect = [r["seed"] for r in mine if not r.get("correct")]
+        failed = sum(r.get("failed", 0) for r in mine)
+        attempted = sum(r.get("attempted", 0) for r in mine)
+        tally[side] = (incorrect, failed)
+        print(f"  {side:6} incorrect runs {len(incorrect)}/{len(mine)}"
+              f"{f' (seeds {incorrect})' if incorrect else ''}"
+              f", failed ops {failed}/{attempted}")
+    # a change with an incorrect run or more failed ops gains nothing
+    change_sound = not tally["change"][0] and tally["change"][1] <= tally["base"][1]
     print(f"  {'metric':38} {'base q1/med/q3':>28} {'change q1/med/q3':>28}"
           f" {'won':>6} {'ratio':>6} {'bound':>6}  gain")
     for m in metrics:
@@ -92,11 +108,15 @@ def summarize(workload: str, runs: list[dict], metrics: list[dict]) -> None:
         won = sum((p["change"] < p["base"]) if lower else (p["change"] > p["base"])
                   for p in pairs)
         ratio = cq[1] / bq[1] if bq[1] else float("nan")
-        gain = won >= 0.9 * len(pairs) and abs(cq[1] - bq[1]) > bq[2] - bq[0]
+        gain = (change_sound and won >= 0.9 * len(pairs)
+                and abs(cq[1] - bq[1]) > bq[2] - bq[0])
+        bound = m.get("bound")
+        worse = bound is not None and (ratio > 1 + bound if lower else ratio < 1 - bound)
         fmt = lambda q: "/".join(f"{v:.6g}" for v in q)
         print(f"  {name:38} {fmt(bq):>28} {fmt(cq):>28} {won:>3}/{len(pairs):<2}"
-              f" {ratio:6.3f} {m.get('bound', float('nan')):6.2f}"
-              f"  {'yes' if gain else 'no'}")
+              f" {ratio:6.3f} {bound if bound is not None else float('nan'):6.2f}"
+              f"  {'yes' if gain else 'no'}"
+              f"{'  WORSE THAN BOUND' if worse else ''}")
 
 
 def main() -> None:
